@@ -6,15 +6,16 @@ Usage (from the repository root):
     python3 perfbench/run.py --workload migrate_chat --seed 1 --seconds 10 --trace 0
 
 The first run in a checkout compiles the engine sources together with the
-benchmark (sbt, offline; about a minute) and records a JVM class-data
-archive from a short priming run, which cuts JVM and Spark start-up in every
-later run; later runs reuse both as long as no source file changed. Work files, logs, traces and per-run records
-go to `.bench_build/` at the repository root. The last stdout line is the
-result JSON; the exit code is non-zero when the run failed or its outputs
-did not check out.
+benchmark (sbt, offline; about a minute); later runs reuse the jar as long
+as no source file changed. Work files, logs, traces and per-run records go
+to `.bench_build/` at the repository root; a rebuild clears the per-run
+records, so a traced run only compares with untraced runs of the same
+build. The last stdout line is the result JSON; the exit code is non-zero
+when the run failed or its outputs did not check out.
 """
 import hashlib
 import os
+import shutil
 import signal
 import subprocess
 import sys
@@ -23,10 +24,9 @@ HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 BUILD = os.path.join(ROOT, ".bench_build")
 JAR = os.path.join(HERE, "target", "scala-2.13", "perfbench_2.13-0.jar")
-ARCHIVE = os.path.join(BUILD, "perfbench.jsa")
+RESULTS = os.path.join(BUILD, "perfbench", "results")
 ENGINE_SRC = os.path.join(ROOT, "src", "main", "scala")
 BUILD_TIMEOUT_S = 560
-PRIME_TIMEOUT_S = 150
 RUN_TIMEOUT_S = 170
 HEAP = "2g"
 
@@ -85,30 +85,22 @@ def java_cmd(spark_home, tmp):
         "-cp", os.pathsep.join([JAR, os.path.join(spark_home, "jars", "*")])]
 
 
-def build(log_dir, spark_home, tmp):
+def build(log_dir):
     stamp_file = os.path.join(BUILD, "perfbench.stamp")
     stamp = sources_stamp()
     if os.path.exists(JAR) and os.path.exists(stamp_file):
         with open(stamp_file) as fh:
             if fh.read() == stamp:
                 return
-    for f in (stamp_file, ARCHIVE):
-        if os.path.exists(f):
-            os.remove(f)
+    if os.path.exists(stamp_file):
+        os.remove(stamp_file)
+    shutil.rmtree(RESULTS, ignore_errors=True)
     with open(os.path.join(log_dir, "build.log"), "wb") as log:
         code, _ = run(["sbt", "--batch", "-Dsbt.server.autostart=false", "package"],
                       BUILD_TIMEOUT_S, cwd=HERE, stdout=log, stderr=subprocess.STDOUT,
                       stdin=subprocess.DEVNULL)
-        if code != 0:
-            fail(f"build failed (exit {code}); see {log.name}")
-        # without the archive the runs are only slower, so a failed priming
-        # run is not an error
-        code, _ = run(java_cmd(spark_home, tmp) + [f"-XX:ArchiveClassesAtExit={ARCHIVE}",
-                      "perfbench.Main", "--prime", "--work", os.path.join(BUILD, "perfbench")],
-                      PRIME_TIMEOUT_S, cwd=ROOT, stdout=log, stderr=subprocess.STDOUT,
-                      stdin=subprocess.DEVNULL)
-    if code != 0 and os.path.exists(ARCHIVE):
-        os.remove(ARCHIVE)
+    if code != 0:
+        fail(f"build failed (exit {code}); see {log.name}")
     with open(stamp_file, "w") as fh:
         fh.write(stamp)
 
@@ -123,13 +115,11 @@ def main(argv):
     tmp = os.path.join(BUILD, "tmp")
     for d in (log_dir, tmp):
         os.makedirs(d, exist_ok=True)
-    build(log_dir, spark_home, tmp)
+    build(log_dir)
 
-    cmd = java_cmd(spark_home, tmp)
-    if os.path.exists(ARCHIVE):
-        cmd.append(f"-XX:SharedArchiveFile={ARCHIVE}")
-    cmd += ["perfbench.Main", "--work", os.path.join(BUILD, "perfbench"),
-            "--expected", os.path.join(HERE, "expected.tsv")] + argv
+    cmd = java_cmd(spark_home, tmp) + [
+        "perfbench.Main", "--work", os.path.join(BUILD, "perfbench"),
+        "--expected", os.path.join(HERE, "expected.tsv")] + argv
     name = "-".join(a.lstrip("-") for a in argv if a)[:120]
     with open(os.path.join(log_dir, f"{name}.log"), "wb") as log:
         code, out = run(cmd, RUN_TIMEOUT_S, cwd=ROOT, stdout=subprocess.PIPE, stderr=log,

@@ -52,13 +52,14 @@ object Gen {
       "rooms" -> rooms, "messages" -> messages, "roommembers" -> members)
   }
 
-  /** Chat-shaped mix: users ≈ messages/200, two members per room, ~2 % of
-    * rooms hot. Rooms ≈ messages/200 rather than the reference's /40: each
-    * room is one partition directory in three CQL-laid-out tables, and at
-    * /40 the directory writes alone outgrow the run's time budget.
+  /** Chat-shaped mix: a fixed 250 users in 100 rooms of two members, ~2 %
+    * of rooms hot, and `messages` messages. Users and rooms stay fixed so
+    * that raising `messages` adds per-message work (parsing, re-encryption,
+    * ids, the per-room layouts, the top-1 per room) and not per-room
+    * partition directories.
     */
   def chat(messages: Long): Mix = Mix(
-    users = math.max(messages / 200, 50), rooms = math.max(messages / 200, 50),
+    users = 250, rooms = 100,
     messages = messages, provinces = 24, municipalities = 120, parroquias = 480,
     professions = 40, entities = 20, channels = 20, livesPerChannel = 3,
     folders = 40, files = 200, hotRoomShare = 50, maxLinks = 3)

@@ -36,7 +36,8 @@ object Layers {
   val names: Seq[(String, String)] =
     Seq("sources.s" -> "s", "sources.jobs" -> "count", "sources.rows" -> "rows",
       "transform.plan_s" -> "s", "transform.eager_jobs" -> "count",
-      "run.compute_s" -> "s", "run.jobs" -> "count", "run.tasks" -> "count",
+      "run.compute_s" -> "s", "run.jobs" -> "count", "run.queries" -> "count",
+      "run.tasks" -> "count",
       "run.driver_gap_s" -> "s", "run.metrics_missing" -> "count",
       "run.largest_cached_mb" -> "MB", "run.storage_mem_mb" -> "MB") ++
       Entities.ordered.map(e => s"entity.${e.name}_s" -> "s") ++
@@ -53,15 +54,24 @@ object Layers {
       ResourceLayers.flatMap(l => Seq(s"$l.cpu_s" -> "s", s"$l.shuffle_write_mb" -> "MB",
         s"$l.spill_mb" -> "MB")) ++
       SpanLayers.map(l => s"$l.self_s" -> "s") ++
-      Seq("trace.wall_s" -> "s", "trace.overhead_s" -> "s")
+      Seq("trace.wall_s" -> "s")
 
-  /** Jobs and job seconds per call-site source file, for the run record. */
-  def callSites(t: Traced): Seq[String] =
-    t.jobs.groupBy(j => j.frames.take(4).mkString("<")).toSeq.sortBy(-_._2.size).map {
-      case (f, js) => f"callsite\t${if (f.isEmpty) "?" else f}\t${js.size}\t${
-        js.map(j => math.max(0L, j.end - j.start)).sum / 1e3}%.3f" }
+  /** Jobs and job seconds per call-site source file, then one line per job
+    * (span, call site, query, stage shape, outcome), for the run record: two
+    * records of the same code diff to the job one of them ran and the other
+    * did not.
+    */
+  def callSites(t: Traced): Seq[String] = {
+    val spanOf = t.spans.map(s => Tracer.group(s.id) -> s"${s.layer}:${s.name}").toMap
+    def site(j: JobLedger.Job) = if (j.frames.isEmpty) "?" else j.frames.take(4).mkString("<")
+    t.jobs.groupBy(site).toSeq.sortBy(-_._2.size).map { case (f, js) =>
+      f"callsite\t$f\t${js.size}\t${js.map(j => math.max(0L, j.end - j.start)).sum / 1e3}%.3f"
+    } ++ t.jobs.map(j =>
+      s"job\t${spanOf.getOrElse(j.group, "(no span)")}\t${site(j)}\t${j.query}\t${j.detail}" +
+        s"\t${if (j.succeeded) "ok" else "failed"}")
+  }
 
-  def metrics(t: Traced, untracedRunS: Double, out: String, seed: Long)
+  def metrics(t: Traced, out: String, seed: Long)
       : Seq[(String, Double, String)] = {
     val root = t.spans.find(_.parent == 0).get
     val layerOf: Map[String, String] = t.spans.map(s => Tracer.group(s.id) -> s.layer).toMap
@@ -72,7 +82,8 @@ object Layers {
     }.foldLeft(Usage(0, 0, 0, 0))((a, b) => Usage(a.tasks + b.tasks,
       a.cpuNs + b.cpuNs, a.shuffleWrite + b.shuffleWrite, a.spill + b.spill))
     def jobSeconds(js: Seq[JobLedger.Job]) = js.map(j => math.max(0L, j.end - j.start)).sum / 1e3
-    val cutover = t.jobs.filterNot(j => layerOf.get(j.group).contains("validate"))
+    // jobs are counted only when they ran under one of this run's spans
+    val cutover = t.jobs.filter(j => layerOf.get(j.group).exists(_ != "validate"))
     val intervals = t.jobs.filter(_.end >= 0).map(j => (j.start, j.end)).sortBy(_._1)
     val busyMs = intervals.foldLeft((0L, Long.MinValue)) { case ((sum, reach), (s, e)) =>
       if (e <= reach) (sum, reach) else (sum + e - math.max(s, reach), e)
@@ -91,7 +102,8 @@ object Layers {
       "transform.plan_s" -> spansOf("transform").map(_.seconds).sum,
       "transform.eager_jobs" -> jobsIn("transform").size.toDouble,
       "run.jobs" -> cutover.size.toDouble,
-      "run.tasks" -> t.usage.collect { case (g, u) if !layerOf.get(g).contains("validate") =>
+      "run.queries" -> cutover.map(_.query).distinct.size.toDouble,
+      "run.tasks" -> t.usage.collect { case (g, u) if layerOf.get(g).exists(_ != "validate") =>
         u.tasks }.sum.toDouble,
       "run.driver_gap_s" -> (root.seconds - busyMs / 1e3),
       "functions.reencrypt_us" -> reencryptUs,
@@ -102,8 +114,7 @@ object Layers {
       "sink.files" -> Files.dataFiles(out).size.toDouble,
       "validate.jobs" -> jobsIn("validate").size.toDouble,
       "operators.jobs" -> jobsIn("operators").size.toDouble,
-      "trace.wall_s" -> root.seconds,
-      "trace.overhead_s" -> (t.it.runS - untracedRunS)) ++
+      "trace.wall_s" -> root.seconds) ++
       OperatorFiles.map { case (m, f) =>
         s"operators.${m}_s" -> jobSeconds(t.jobs.filter(j => operatorOf(j).contains(f))) } ++
       ResourceLayers.flatMap { l =>

@@ -16,7 +16,6 @@ import graft.validate.Checks
   * {{{
   * perfbench.Main --workload <name> [--seed 1] [--seconds 10] [--trace 0|1]
   *   [--work <dir>] [--expected <file>] [--record]
-  * perfbench.Main --prime [--work <dir>]
   * }}}
   *
   * Set-up (session start and input generation) is timed on its own; then
@@ -25,16 +24,14 @@ import graft.validate.Checks
   * `--trace 1` one traced iteration gives the per-layer metrics. The last
   * stdout line is the result JSON; the exit code is 1 when the output gate
   * failed. `--record` stores this run's output digests as the expected
-  * ones for its seed. `--prime` only starts a session and generates every
-  * workload's inputs: the launcher runs it once per build to record the
-  * JVM's class-data archive.
+  * ones for its seed.
   */
 object Main {
 
   final case class Args(
       workload: String = "", seed: Long = 1L, seconds: Int = 10, trace: Boolean = false,
       work: String = ".bench_build/perfbench", expected: String = "perfbench/expected.tsv",
-      record: Boolean = false, prime: Boolean = false)
+      record: Boolean = false)
 
   def parse(args: Seq[String]): Args = {
     def loop(rest: List[String], a: Args): Args = rest match {
@@ -48,11 +45,10 @@ object Main {
       case "--work" :: v :: t => loop(t, a.copy(work = v))
       case "--expected" :: v :: t => loop(t, a.copy(expected = v))
       case "--record" :: t => loop(t, a.copy(record = true))
-      case "--prime" :: t => loop(t, a.copy(prime = true))
       case other :: _ => throw new IllegalArgumentException(s"unknown argument: $other")
     }
     val a = loop(args.toList, Args())
-    require(a.workload.nonEmpty || a.prime, "--workload is required")
+    require(a.workload.nonEmpty, "--workload is required")
     require(a.seconds > 0, s"--seconds must be positive; got ${a.seconds}")
     a
   }
@@ -77,18 +73,12 @@ object Main {
     val a = parse(argv.toSeq)
     val (spark, sessionS) = Workloads.timed(
       Engine.session(master = "local[4]", shufflePartitions = 4, appName = "perfbench"))
-    val result = try {
-      if (a.prime) {
-        Workloads.all.foreach(w => w.generate(spark, a.seed, s"${a.work}/prime/${w.name}"))
-        None
-      } else Some(measure(spark, sessionS, Workloads.byName(a.workload), a))
-    } finally spark.stop()
-    for (r <- result) {
-      println(r.info)
-      r.problems.take(40).foreach(p => println(s"[perfbench] FAIL $p"))
-      println(r.json)
-      if (!r.correct) sys.exit(1)
-    }
+    val r = try measure(spark, sessionS, Workloads.byName(a.workload), a)
+      finally spark.stop()
+    println(r.info)
+    r.problems.take(40).foreach(p => println(s"[perfbench] FAIL $p"))
+    println(r.json)
+    if (!r.correct) sys.exit(1)
   }
 
   /** Set-up, measurement and output gate of one run of `w`. */
@@ -132,24 +122,20 @@ object Main {
       } else {
         org.apache.spark.GraftListenerBridge.waitListenerBusEmpty(spark.sparkContext)
         ledger.foreach(_.reset())
-        val it = tracer.span("bench", "iteration")(
+        val run = tracer.span("bench", "iteration")(
           w.iterate(new Ctx(spark, tracer), inputs, out))
-        org.apache.spark.GraftListenerBridge.waitListenerBusEmpty(spark.sparkContext)
+        // the ledger is read next: an undrained bus would undercount jobs
+        val it = if (org.apache.spark.GraftListenerBridge.waitListenerBusEmpty(spark.sparkContext))
+          run else run.copy(failures = run.failures :+ "listener bus did not drain after the run")
         spark.catalog.clearCache()
         report(it)
         Some(Traced(it, tracer.spans, ledger.map(_.allJobs).getOrElse(Nil),
           ledger.map(_.usageByGroup).getOrElse(Map.empty)))
       }
-      // the tracing overhead compares with this seed's untraced run in the
-      // same work directory; without one, with an untraced cutover here (a
-      // warm one, so the overhead then reads high)
-      val untracedRunS = if (!a.trace) median(plain.map(_.runS).toSeq)
-        else Record.runS(a.work, tag).getOrElse {
-          progress("no untraced record for this seed; timing a warm untraced cutover")
-          val it = w.iterate(quiet, inputs, out, validate = false)
-          spark.catalog.clearCache()
-          it.runS
-        }
+      // the tracing overhead: this traced cutover minus the untraced one of
+      // the same seed in this work directory, whose records the launcher
+      // clears on every rebuild; missing when no untraced run was made
+      val overheadS = traced.map(t => Record.runS(a.work, tag).map(t.it.runS - _))
       val heapPeakMb = heap.stop() / 1e6
 
       // output gate
@@ -166,19 +152,21 @@ object Main {
       val metrics: Seq[(String, Double, String)] =
         if (!a.trace) Seq(
           ("setup_s", setupS, "s"),
-          ("run_s", untracedRunS, "s"),
+          ("run_s", median(plain.map(_.runS).toSeq), "s"),
           ("rows_per_s", median(plain.map(i => sourceRows / i.runS).toSeq), "rows/s"),
           ("validate_s", median(plain.map(_.validateS).toSeq), "s"),
           ("ok_share", 1.0 - failed.toDouble / attempted, "ratio"),
           ("bytes_out_per_byte_in", all.head.outBytes.toDouble / inputs.bytes, "ratio"),
           ("heap_peak_mb", heapPeakMb, "MB"))
-        else Layers.metrics(traced.get, untracedRunS, out, a.seed)
+        else Layers.metrics(traced.get, out, a.seed)
 
       val info = s"[perfbench] workload=${w.name} seed=${a.seed} " +
         s"input_digest=${inputs.digest} input_mb=${inputs.bytes / 1e6} " +
         s"setup: session=$sessionS gen=$genS " +
         s"iterations=${all.size} traced=${traced.size} run_s=${all.map(_.runS).mkString(",")} " +
-        s"validate_s=${all.map(_.validateS).mkString(",")}"
+        s"validate_s=${all.map(_.validateS).mkString(",")}" + overheadS.fold("")(o =>
+          " trace.overhead_s=" +
+            o.fold("missing (no untraced run of this seed and build)")(_.toString))
       writeRecord(a, tag, info +: (problems.map("FAIL " + _) ++
         traced.toSeq.flatMap(Layers.callSites)), metrics, all.head.digests, tracer.spans)
       Result(problems.isEmpty, attempted, failed, metrics, info, problems)
@@ -212,27 +200,37 @@ object Main {
   }
 }
 
-/** The driver's peak live heap: every 10 ms, the heap in use right after
-  * the last collection (summed over the heap pools), keeping the maximum.
-  * Unlike raw heap use, it does not track when the collector happens to run.
+/** The driver's peak heap after collection: after every garbage collection
+  * in the measured window, young ones included, the heap in use right after
+  * it (summed over the heap pools), keeping the maximum. Unlike raw heap use,
+  * it does not track when the collector happens to run; unlike per-pool
+  * collection usage, it is not left stale by collections that skip a pool.
   */
 final class HeapMonitor {
   import scala.jdk.CollectionConverters._
-  private val pools = ManagementFactory.getMemoryPoolMXBeans.asScala
-    .filter(p => p.getType == java.lang.management.MemoryType.HEAP && p.getCollectionUsage != null)
-  @volatile private var peak = 0L
-  @volatile private var running = true
-  private val thread = new Thread(() => {
-    while (running) {
-      peak = math.max(peak, pools.map(p => Option(p.getCollectionUsage).map(_.getUsed)
-        .getOrElse(0L)).sum)
-      Thread.sleep(10)
-    }
-  }, "perfbench-heap")
-  thread.setDaemon(true)
-  thread.start()
+  import com.sun.management.GarbageCollectionNotificationInfo
+  import javax.management.{Notification, NotificationEmitter, NotificationListener}
+  import javax.management.openmbean.CompositeData
 
-  def stop(): Long = { running = false; thread.join(); peak }
+  private val heapPools = ManagementFactory.getMemoryPoolMXBeans.asScala
+    .filter(_.getType == java.lang.management.MemoryType.HEAP).map(_.getName).toSet
+  private val peak = new java.util.concurrent.atomic.AtomicLong(0L)
+  private val listener: NotificationListener = (n: Notification, _: AnyRef) =>
+    if (n.getType == GarbageCollectionNotificationInfo.GARBAGE_COLLECTION_NOTIFICATION) {
+      val info = GarbageCollectionNotificationInfo.from(n.getUserData.asInstanceOf[CompositeData])
+      val after = info.getGcInfo.getMemoryUsageAfterGc.asScala.collect {
+        case (pool, use) if heapPools(pool) => use.getUsed }.sum
+      peak.accumulateAndGet(after, math.max(_, _))
+    }
+  private val emitters = ManagementFactory.getGarbageCollectorMXBeans.asScala
+    .collect { case e: NotificationEmitter => e }
+  emitters.foreach(_.addNotificationListener(listener, null, null))
+
+  /** The peak; with no collection in the window, the heap in use at its end. */
+  def stop(): Long = {
+    emitters.foreach(_.removeNotificationListener(listener))
+    if (peak.get > 0) peak.get else ManagementFactory.getMemoryMXBean.getHeapMemoryUsage.getUsed
+  }
 }
 
 /** The output gate: every iteration's checks must pass under the

@@ -105,12 +105,19 @@ final class JobLedger extends SparkListener {
     val exec = Option(e.properties).flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
     val frames = exec.flatMap(id => Option(execFrames.get(id.toLong))).getOrElse(
       site match { case CallFile(f) => Seq(f); case _ => Nil })
-    jobs.put(e.jobId, Job(e.jobId, group, frames, e.time, -1L))
+    val last = e.stageInfos.sortBy(_.stageId).lastOption
+    val detail = s"stages=${e.stageInfos.size} tasks=${last.map(_.numTasks).getOrElse(0)} " +
+      s"stage=${last.map(_.name.takeWhile(_ != ' ')).getOrElse("-")}"
+    jobs.put(e.jobId, Job(e.jobId, group, frames, exec.fold(s"job-${e.jobId}")("sql-" + _),
+      detail, e.time, -1L))
     e.stageIds.foreach(s => stageGroup.put(s, group))
   }
 
   override def onJobEnd(e: SparkListenerJobEnd): Unit =
-    Option(jobs.get(e.jobId)).foreach(_.end = e.time)
+    Option(jobs.get(e.jobId)).foreach { j =>
+      j.end = e.time
+      j.succeeded = e.jobResult == JobSucceeded
+    }
 
   override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
     val u = of(Option(stageGroup.get(e.stageId)).getOrElse(""))
@@ -135,5 +142,9 @@ final class JobLedger extends SparkListener {
 }
 
 object JobLedger {
-  final case class Job(id: Int, group: String, frames: Seq[String], start: Long, var end: Long)
+  /** One Spark job. `query` is its SQL execution (`sql-<id>`; adaptive
+    * query stages share it) or, outside SQL, the job itself (`job-<id>`).
+    */
+  final case class Job(id: Int, group: String, frames: Seq[String], query: String,
+      detail: String, start: Long, var end: Long, var succeeded: Boolean = false)
 }

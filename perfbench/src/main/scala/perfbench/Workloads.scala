@@ -31,15 +31,13 @@ trait Workload {
   def name: String
   /** Generates this workload's inputs for `seed` under `dir`. */
   def generate(spark: SparkSession, seed: Long, dir: String): Gen.Inputs
-  /** One measured pass: the cutover (`runS`), then read-back and checks
-    * (skipped when `validate` is false: no digests, no checks).
-    */
-  def iterate(ctx: Ctx, in: Gen.Inputs, out: String, validate: Boolean = true): Iteration
+  /** One measured pass: the cutover (`runS`), then read-back and checks. */
+  def iterate(ctx: Ctx, in: Gen.Inputs, out: String): Iteration
 }
 
 object Workloads {
   val all: Seq[Workload] = Seq(
-    new Migrate("migrate_chat", Gen.chat(10000)),
+    new Migrate("migrate_chat", Gen.chat(100000)),
     new Curate(docs = 1500))
 
   def byName(n: String): Workload = all.find(_.name == n).getOrElse(
@@ -114,7 +112,7 @@ final class Migrate(val name: String, mix: Gen.Mix) extends Workload {
 
   private var iterations = 0
 
-  def iterate(ctx: Ctx, in: Gen.Inputs, out: String, validate: Boolean): Iteration = {
+  def iterate(ctx: Ctx, in: Gen.Inputs, out: String): Iteration = {
     val spark = ctx.spark
     val t = ctx.tracer
     iterations += 1
@@ -213,8 +211,6 @@ final class Migrate(val name: String, mix: Gen.Mix) extends Workload {
       detail("sources.rows") = rows.flatten.map(_.asInstanceOf[Long]).sum.toDouble
     }
     mc.close()
-    if (!validate)
-      return Iteration(runS, 0.0, Files.size(out), Map.empty, Nil, failures.toSeq, detail.toMap)
 
     val ((digests, checks), validateS) =
       Workloads.timed(t.span("validate", "read-back")(readBack(spark, t, in, out, failures)))
@@ -307,7 +303,7 @@ final class Curate(docs: Long) extends Workload {
   def generate(spark: SparkSession, seed: Long, dir: String): Gen.Inputs =
     Gen.writeCorpus(spark, docs, seed, dir)
 
-  def iterate(ctx: Ctx, in: Gen.Inputs, out: String, validate: Boolean): Iteration = {
+  def iterate(ctx: Ctx, in: Gen.Inputs, out: String): Iteration = {
     val spark = ctx.spark
     Files.delete(out)
     val cfg = RunTrainPrep.parse(Seq("--in", s"${in.dir}/documents.parquet", "--out", out,
@@ -317,8 +313,6 @@ final class Curate(docs: Long) extends Workload {
     val failures = mutable.ArrayBuffer.empty[String]
     if (!org.apache.spark.GraftListenerBridge.waitListenerBusEmpty(spark.sparkContext))
       failures += "listener bus did not drain"
-    if (!validate) return Iteration(runS, 0.0, Files.size(out), Map.empty, Nil, failures.toSeq,
-      Map.empty)
     val ((digests, checks), validateS) = Workloads.timed(ctx.tracer.span("validate",
       "read-back") {
       val clean = spark.read.parquet(s"$out/clean_corpus")
