@@ -49,6 +49,9 @@ object Engine {
         sys.env.getOrElse("SPARK_GRAFT_MAX_PARTITION_BYTES", "16m"))
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      // file:// without a chmod child process per created file and
+      // directory when libhadoop is absent (same bits, same checksums)
+      .config("spark.hadoop.fs.file.impl", classOf[graft.sink.NioLocalFileSystem].getName)
       .config("spark.ui.enabled", "false")
       // Long-lived-driver hygiene: even with the UI off, AppStatusListener
       // retains up to 100k task wrappers / 1000 jobs / 1000 SQL executions

@@ -18,6 +18,13 @@ import org.apache.spark.sql.functions.col
   * scale) would instead hash-distribute (`repartition` on the key +
   * `sortWithinPartitions`, i.e. the bucketed layout of [[Layout]]) — the
   * Cassandra connector gets the same effect from token-range writes.
+  *
+  * Write cost: each partition directory costs a directory create, a file
+  * create and a commit rename whatever its byte size, so a table's write
+  * time follows its key count. [[writeTo]] spreads the keys over
+  * `spark.sql.shuffle.partitions` tasks so those per-directory costs run
+  * on every core (the session's file system, [[NioLocalFileSystem]], keeps
+  * each of them free of child processes).
   */
 object CqlLayouts {
 
@@ -123,9 +130,16 @@ object CqlLayouts {
     // partition directory receives ONE file holding its complete row set in
     // clustering order — without the repartition, a directory collects one
     // sorted file per task that saw the key, i.e. sorted runs, not the
-    // within-partition total order the CQL schema declares
+    // within-partition total order the CQL schema declares.
+    // The partition count is explicit (spark.sql.shuffle.partitions, one
+    // task per core in Engine.session): AQE would merge a byte-small
+    // frame's key shuffle into ONE task, which then creates every partition
+    // directory in turn — a cost that follows the key count, not the bytes.
+    // An explicit count is never coalesced, so the directories are written
+    // on every core.
     val keyCols = layout.partitionKeys.map(col)
-    df.repartition(keyCols: _*)
+    val tasks = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+    df.repartition(tasks, keyCols: _*)
       .sortWithinPartitions(keyCols ++ clusterCols(layout): _*)
       .write
       .mode("overwrite")

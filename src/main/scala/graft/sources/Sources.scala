@@ -28,12 +28,21 @@ final class ParquetSource(spark: SparkSession, dir: String,
 /** JSON-lines collections — the closest file shape to Mongo documents;
   * explicit schemas (all-nullable) give the reference's total-accessor
   * semantics (SURVEY.md §1.3).
+  *
+  * A collection without an explicit schema is inferred on its first read
+  * (one Spark job over the file); later reads through this instance reuse
+  * that schema (the `users` collection feeds three entities). Nothing is
+  * kept across instances, so a new run re-infers.
   */
 final class JsonSource(spark: SparkSession, dir: String,
     schemas: Map[String, StructType] = Map.empty) extends DocumentSource {
+  private val inferred = scala.collection.concurrent.TrieMap.empty[String, StructType]
+
   def collection(name: String): DataFrame = {
-    val reader = schemas.get(name).fold(spark.read)(s => spark.read.schema(s))
-    reader.json(s"$dir/$name.jsonl")
+    val schema = schemas.get(name).orElse(inferred.get(name))
+    val df = schema.fold(spark.read)(spark.read.schema(_)).json(s"$dir/$name.jsonl")
+    inferred.putIfAbsent(name, df.schema)
+    df
   }
 }
 

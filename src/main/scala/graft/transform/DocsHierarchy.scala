@@ -1,9 +1,8 @@
 package graft.transform
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-
-import graft.operators.{Hierarchy, Relational}
 
 /** The reference's two-phase hierarchical docs migration
   * (`etl/orchestrator.py:743-1000`): Mongo stores folder membership as
@@ -24,61 +23,51 @@ object DocsHierarchy {
 
   final case class Result(docs: DataFrame, docsRoles: DataFrame)
 
-  /** @param docsRuled output of [[Rules.docsRules]] (keeps `_tmp_on_folder`,
+  /** One plan reads `docsRuled` once: folder ids come from a window over
+    * the folder/file split, and folders (phase 1) and files (phase 2)
+    * resolve their parent path in the same broadcast join against the
+    * path→id map. The map is built from that window's output, so its input
+    * shuffle is reused rather than recomputed. Equivalent to the
+    * level-by-level walk for any tree whose folder paths are unique (the
+    * [[graft.operators.Hierarchy.resolveParentsDirect]] argument: ids are
+    * assigned before parents are resolved).
+    *
+    * @param docsRuled output of [[Rules.docsRules]] (keeps `_tmp_on_folder`,
     *                  and `special_role_id` when a role dim was supplied)
     */
   def resolve(docsRuled: DataFrame): Result = {
     val hasRole = docsRuled.columns.contains("special_role_id")
-    val withParent = docsRuled.withColumn("fparent",
-      coalesce(Shape.nullIfEmpty(col("_tmp_on_folder")), lit("/")))
+    // F6 — folder/file partition (type already collapses fileType||type);
+    // a row whose type is null is neither and is dropped
+    val isFolder = col("type") === "FOLDER"
+    // folder ids: row number by full path among folders, from 1
+    // (full_path = parent + '/' + name, `:839-845`)
+    val nodes = docsRuled.filter(col("type").isNotNull)
+      .withColumn("fparent", coalesce(Shape.nullIfEmpty(col("_tmp_on_folder")), lit("/")))
+      .withColumn("fpath", graft.functions.Scalars.pathConcat(col("fparent"), col("name")))
+      .withColumn("__folder_id", when(isFolder,
+        row_number().over(Window.partitionBy(isFolder).orderBy(col("fpath"))).cast("long")))
 
-    // F6 — folder/file partition (type already collapses fileType||type)
-    val folders = withParent.filter(col("type") === "FOLDER")
-    val files = withParent.filter(col("type") =!= "FOLDER")
+    // path -> id: the root ('/' -> 0) and every folder. Folders resolve
+    // their parent against both (depth-1 folders hang under the root);
+    // files against the folders only, miss -> root (0) (`:914-923`)
+    val root = docsRuled.sparkSession.range(1)
+      .select(lit("/").as("__p_path"), lit(0L).as("__p_id"))
+    val pathToId = root.unionByName(nodes.filter(isFolder)
+      .select(col("fpath").as("__p_path"), col("__folder_id").as("__p_id")))
+    val resolved = nodes
+      .join(broadcast(pathToId),
+        col("fparent") === col("__p_path") && (isFolder || col("__p_id") =!= 0L), "left")
+      .withColumn("onFolder", coalesce(col("__p_id"), lit(0L)))
+      .withColumn("id", col("__folder_id")) // files keep sink-assigned ids
+      .drop("fparent", "fpath", "__folder_id", "__p_path", "__p_id")
 
-    // reference depth = slash count of the parent path ('/' -> 0)
-    val parentDepth = when(col("fparent") === "/", 0)
-      .otherwise(size(split(col("fparent"), "/")) - 1)
-    val folderNodes = Relational.sequentialIds(
-        folders
-          .withColumn("fdepth", parentDepth + 1)
-          .withColumn("fpath", graft.functions.Scalars.pathConcat(col("fparent"), col("name"))),
-        "fpath", "__folder_id", 0L)
-      .withColumn("__folder_id", col("__folder_id").cast("long"))
+    val docs = resolved.drop(docsRuled.columns.filter(_.startsWith("_tmp_")): _*)
 
-    val spark = docsRuled.sparkSession
-    val root = spark.range(1).select(
-      lit("/").as("fpath"), lit(0L).as("__folder_id"), lit(0).as("fdepth"),
-      lit(null).cast("string").as("fparent"))
-
-    val resolved = Hierarchy.resolveParentsDirect(
-      root.unionByName(
-        folderNodes.select(col("fpath"), col("__folder_id"), col("fdepth"), col("fparent")),
-        allowMissingColumns = false),
-      "__folder_id", "fpath", "fparent", "fdepth", rootId = 0L)
-
-    val folderOut = folderNodes
-      .join(broadcast(resolved.select(col("__folder_id"), col("parent_id"))), Seq("__folder_id"))
-      .withColumn("onFolder", col("parent_id"))
-      .withColumn("id", col("__folder_id"))
-      .drop("parent_id", "fpath", "fdepth", "__folder_id", "fparent")
-
-    // phase 2: files resolve the final path -> id map, miss -> root (0)
-    val pathToId = resolved.filter(col("__folder_id") =!= 0)
-      .select(col("fpath"), col("__folder_id"))
-    val fileOut = files
-      .join(broadcast(pathToId), files("fparent") === pathToId("fpath"), "left")
-      .withColumn("onFolder", coalesce(col("__folder_id"), lit(0L)))
-      .withColumn("id", lit(null).cast("long")) // files keep sink-assigned ids
-      .drop("fpath", "__folder_id", "fparent")
-
-    val docs = folderOut.unionByName(fileOut)
-      .drop(docsRuled.columns.filter(_.startsWith("_tmp_")): _*)
-
-    val rolesSource = if (hasRole) folderOut.unionByName(fileOut) else folderOut.limit(0)
+    // docs_roles from both phases (U1, `:961-987`)
     val docsRoles =
       if (hasRole)
-        rolesSource.filter(col("special_role_id").isNotNull)
+        resolved.filter(col("special_role_id").isNotNull)
           .select(col("mongo_id"), col("special_role_id").as("role_id"))
       else
         docsRuled.sparkSession.emptyDataFrame

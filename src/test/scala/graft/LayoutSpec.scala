@@ -60,6 +60,35 @@ class LayoutSpec extends SparkSpecBase {
     assert(!unsorted.passed, "an unsorted layout must not pass the clustering check")
   }
 
+  test("CQL layout write spreads a byte-small frame's keys over several tasks") {
+    import graft.sink.CqlLayouts
+    import graft.validate.Checks
+    import scala.jdk.CollectionConverters._
+    val dir = java.nio.file.Files.createTempDirectory("graft-cql-keys").toString
+    // 250 keys × 4 rows, a few KB: AQE alone would merge the key shuffle
+    // into one task that creates all 250 directories in turn
+    val msgs = (1 to 250).flatMap(r => (1 to 4).map(m =>
+        (f"room$r%03d", (m * 7919L) % 13 + m * 100, s"msg-$r-$m")))
+      .toDF("room_id", "message_id", "content")
+      .orderBy(rand(11))
+    CqlLayouts.write(msgs, dir, "messages_by_room")
+    val table = java.nio.file.Paths.get(dir, "messages_by_room")
+    val partDirs = java.nio.file.Files.list(table).iterator().asScala
+      .filter(_.getFileName.toString.startsWith("room_id=")).toSeq
+    assert(partDirs.size === 250)
+    val filesPerDir = partDirs.map(d => java.nio.file.Files.list(d).iterator().asScala
+      .map(_.getFileName.toString).filter(_.endsWith(".parquet")).toSeq)
+    assert(filesPerDir.forall(_.size == 1), "every directory holds exactly one file")
+    // part-<task>-…: the writing task's partition id
+    val tasks = filesPerDir.flatten.map(_.split('-')(1)).distinct
+    assert(tasks.size > 1, s"all 250 directories were written by task ${tasks.mkString}")
+    val back = spark.read.parquet(table.toString)
+    assert(back.count() === 1000)
+    val ordered = Checks.clusteringOrder("layout-keys", back,
+      CqlLayouts.all("messages_by_room").clustering)
+    assert(ordered.passed, ordered.detail)
+  }
+
   test("partitioned parquet prunes directories via PartitionFilters") {
     val dir = java.nio.file.Files.createTempDirectory("graft-part").toString + "/events"
     val events = Seq((1L, "click"), (2L, "view"), (3L, "click"), (4L, "error"))
