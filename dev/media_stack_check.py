@@ -2,9 +2,9 @@
 """Independent survivor oracle for the full production media stack
 (`RunMediaAudit --pairs --max-bucket N --dedup`) at big scale rungs.
 
-The DevMediaGen fixtures factor through id mod 256 (every `(g(id)+k) mod
-256` synthesis does), so each modality's corpus is a set of CONTENT
-CLASSES: all members of a class share one fingerprint, and
+The media fixtures (`sbt "runMain graft.Tools gen media <sfDir> <mediaOut>"`)
+factor through id mod 256 (every `(g(id)+k) mod 256` synthesis does), so
+each modality's corpus is a set of CONTENT CLASSES: all members of a class share one fingerprint, and
 guardedBandPairs' star-collapse only ever connects docs within a class
 (stars) or class representatives (rep cliques). The doc-level guarded
 pair graph therefore collapses EXACTLY to a class-level graph:

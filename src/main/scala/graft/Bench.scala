@@ -2,62 +2,12 @@ package graft
 import org.apache.spark.sql.SparkSession
 object Bench {
 
-  /** The bench session, shared with `DevStageMetrics` so the stages that
-    * tool audits are the stages this bench measures — the config block
-    * must live in exactly one place (a conf added to only one of the two
-    * silently breaks the mirror contract).
+  /** The bench session: [[Engine]]'s `Bench` conf table (no Catalyst
+    * extensions, no local-filesystem override) at `SPARK_GRAFT_CPUS` cores.
     */
   def benchSession(): SparkSession = {
-    // the harness machine is 32-way; size parallelism to it unless told otherwise
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      // Same spill-aware sizing as Engine.session: shuffles START at 8x
-      // cores so a 100x scale factor can't put one aggregation's whole
-      // state in a single task (q45/q38 died exactly that way at /tmp/sf10
-      // with a flat 32); AQE's parallelismFirst coalesces small stages
-      // back to core count, so sf0.1 numbers are unaffected.
-      .config(
-        "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        sys.env.getOrElse("SPARK_GRAFT_INIT_PARTITIONS", (cpus.toInt * 8).toString))
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      // Same scan-split sizing as Engine.session (byte-small row-heavy
-      // harness files; 128 MB default = single-task map stages).
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_PARTITION_BYTES", "16m"))
-      // At big scale factors coalescing back to core count re-creates the
-      // oversized tasks initialPartitionNum exists to avoid — a 100x run
-      // sets this to false so AQE targets advisoryPartitionSizeInBytes
-      // (the multi-executor-cluster behavior) instead of local core count.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_PARALLELISM_FIRST", "true"))
-      // Inert under the suite default (parallelismFirst=true ignores the
-      // advisory size for coalescing); takes effect only with
-      // SPARK_GRAFT_PARALLELISM_FIRST=false. The full 100× suite A/B
-      // (SCALE_r10 §4) decided the default: sized coalescing (false+16m)
-      // wins wide sort stages (q34 0.52×, zero spill) but loses
-      // compute-dense byte-small shuffles 1.3-2.3× (banded LSH, bucket
-      // joins) — +9.6% suite-wide, so parallelism-first stays. 64m here is
-      // a conservative middle for ad-hoc sized runs; the q34-family
-      // measurement used 16m (set both knobs for that configuration).
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_ADVISORY_PARTITION_BYTES", "64m"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // Same long-lived-driver status-store bounds as Engine.session: a
-      // 62-query x 3-pass suite otherwise retains every execution's plan
-      // graph and up to 100k task wrappers in driver heap for the whole run.
-      .config("spark.ui.retainedJobs", "100")
-      .config("spark.ui.retainedStages", "200")
-      .config("spark.ui.retainedTasks", "10000")
-      .config("spark.sql.ui.retainedExecutions", "10")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
+    val cpus = Engine.cpus()
+    Engine.build(Engine.Kind.Bench, Engine.local(cpus), cpus)
   }
 
   def main(args: Array[String]): Unit = {

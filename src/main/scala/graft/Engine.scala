@@ -2,7 +2,8 @@ package graft
 
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 
-/** Session factory for the graft engine.
+/** Session factory for the graft engine: ONE conf table shared by every
+  * session the repo builds ([[Engine.session]], `Bench`, `Verify`, `Tools`).
   *
   * Tuned for the driver's harness (local[32], 128 GiB single JVM) but the
   * settings are the ones we would ship on a real cluster:
@@ -12,31 +13,38 @@ import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
   */
 object Engine {
 
-  def session(
-      master: String = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]",
-      shufflePartitions: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt,
-      appName: String = "graft"): SparkSession = {
-    val spark = SparkSession
-      .builder()
-      .master(master)
-      .appName(appName)
-      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      // Spill-aware shuffle sizing: AQE coalescing can only merge partitions
-      // DOWN from the initial count — it can never split an oversized
-      // aggregation state. Start shuffles at max(8x cores, cores) partitions
-      // and let AQE coalesce small stages back to core count
-      // (parallelismFirst keeps the floor at default parallelism), so the
-      // same session survives a 100x data step without per-task aggregation
-      // state outgrowing executor memory. On a real cluster this is the
-      // "thousands of initial partitions, AQE right-sizes" pattern.
-      .config(
-        "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        sys.env.getOrElse(
-          "SPARK_GRAFT_INIT_PARTITIONS",
-          math.max(shufflePartitions * 8, shufflePartitions).toString))
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
+  /** The session flavors, each a superset of the previous one's confs:
+    * `Gen` (fixture generators) ⊂ `Verify` (the oracle correctness
+    * dump: no AQE entries) ⊂ `Bench` (+ AQE sizing) ⊂ `Full` (+ the
+    * chmod-free local filesystem, the Catalyst extensions and the SQL
+    * function registry — what [[session]] builds).
+    */
+  sealed abstract class Kind
+  object Kind {
+    case object Gen extends Kind
+    case object Verify extends Kind
+    case object Bench extends Kind
+    case object Full extends Kind
+  }
+
+  /** Core count for `local[n]` masters: `SPARK_GRAFT_CPUS`, else `default`
+    * (the harness machine is 32-way).
+    */
+  def cpus(default: Int = 32): Int =
+    sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt).getOrElse(default)
+
+  def local(n: Int): String = s"local[$n]"
+
+  /** The conf table for a session of `kind` with `partitions` shuffle
+    * partitions (ordered; later entries never override earlier ones).
+    */
+  def confs(kind: Kind, partitions: Int): Seq[(String, String)] = {
+    val gen = Seq(
+      "spark.sql.shuffle.partitions" -> partitions.toString,
+      "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+      "spark.ui.enabled" -> "false")
+    val verify = gen ++ Seq(
+      "spark.sql.session.timeZone" -> "UTC",
       // Scan-split sizing for the harness corpus: its parquet files are
       // byte-small (0.6-60 MB) but row-heavy, so the 128 MB default puts
       // an entire file — and therefore an entire map-heavy text/embedding
@@ -44,15 +52,8 @@ object Engine {
       // regex throughput on a 32-core box). 16 MB splits recover scan
       // parallelism wherever row groups allow. A real deployment sizes
       // this to its file/row-group layout (the 128 MB default is right
-      // for 128 MB+ row groups); env-overridable for A/B.
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_PARTITION_BYTES", "16m"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // file:// without a chmod child process per created file and
-      // directory when libhadoop is absent (same bits, same checksums)
-      .config("spark.hadoop.fs.file.impl", classOf[graft.sink.NioLocalFileSystem].getName)
-      .config("spark.ui.enabled", "false")
+      // for 128 MB+ row groups).
+      "spark.sql.files.maxPartitionBytes" -> "16m",
       // Long-lived-driver hygiene: even with the UI off, AppStatusListener
       // retains up to 100k task wrappers / 1000 jobs / 1000 SQL executions
       // (per-execution plan graphs — an iterative operator's round plans
@@ -60,16 +61,58 @@ object Engine {
       // back-to-back accumulates tens-of-MB-to-GB of dead bookkeeping; on
       // a real cluster these are exactly the confs ops teams bound on
       // shared drivers. Results are unaffected.
-      .config("spark.ui.retainedJobs", "100")
-      .config("spark.ui.retainedStages", "200")
-      .config("spark.ui.retainedTasks", "10000")
-      .config("spark.sql.ui.retainedExecutions", "10")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
+      "spark.ui.retainedJobs" -> "100",
+      "spark.ui.retainedStages" -> "200",
+      "spark.ui.retainedTasks" -> "10000",
+      "spark.sql.ui.retainedExecutions" -> "10")
+    val bench = verify ++ Seq(
+      "spark.sql.adaptive.enabled" -> "true",
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
+      // Spill-aware shuffle sizing: AQE coalescing can only merge
+      // partitions DOWN from the initial count — it can never split an
+      // oversized aggregation state. Start shuffles at 8x cores and let
+      // AQE coalesce small stages back to core count (Spark's default
+      // parallelismFirst keeps the floor at default parallelism), so the
+      // same session survives a 100x data step without per-task
+      // aggregation state outgrowing executor memory (q45/q38 died
+      // exactly that way at sf10 with a flat 32). Sized coalescing
+      // (parallelismFirst=false) lost the full 100× suite A/B by 9.6 %
+      // (SCALE_r10 §4). On a real cluster this is the "thousands of
+      // initial partitions, AQE right-sizes" pattern.
+      "spark.sql.adaptive.coalescePartitions.initialPartitionNum" ->
+        math.max(partitions * 8, partitions).toString,
+      "spark.sql.adaptive.skewJoin.enabled" -> "true")
+    kind match {
+      case Kind.Gen => gen
+      case Kind.Verify => verify
+      case Kind.Bench => bench
+      // file:// without a chmod child process per created file and
+      // directory when libhadoop is absent (same bits, same checksums)
+      case Kind.Full => bench :+
+        ("spark.hadoop.fs.file.impl" -> classOf[graft.sink.NioLocalFileSystem].getName)
+    }
+  }
+
+  /** Builds (or returns the running) session of `kind` from [[confs]].
+    * `appName` = None keeps Spark's generated name.
+    */
+  def build(kind: Kind, master: String, partitions: Int,
+      appName: Option[String] = None): SparkSession = {
+    val b = SparkSession.builder().master(master)
+    appName.foreach(b.appName)
+    confs(kind, partitions).foreach { case (k, v) => b.config(k, v) }
+    if (kind == Kind.Full) b.withExtensions(new GraftExtensions)
+    val spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    GraftFunctions.register(spark)
+    if (kind == Kind.Full) GraftFunctions.register(spark)
     spark
   }
+
+  def session(
+      master: String = local(cpus()),
+      shufflePartitions: Int = cpus(),
+      appName: String = "graft"): SparkSession =
+    build(Kind.Full, master, shufflePartitions, Some(appName))
 
   /** Idempotent per-session setup for sessions we did not build (e.g. the
     * driver's own Verify/Bench session): registers SQL functions.

@@ -37,7 +37,7 @@ object GraftFunctions {
   /** timeuuid(epoch_micros, seed) — deterministic v1 UUID (K2). Native
     * expression since round 5: the boxed-UDF form cost ~4× on cold runs
     * (encoder round-trip + `f"..."`'s locale-aware String.format; A/B in
-    * [[DevProfileTimeUuid]]), with bit-identical output (TimeUuidSpec).
+    * NOTES.md round 5), with bit-identical output (TimeUuidSpec).
     */
   def timeuuid(epochMicros: Column, seed: Column): Column = {
     import org.apache.spark.sql.GraftColumnBridge

@@ -176,10 +176,8 @@ object RunEtl {
 
   def main(args: Array[String]): Unit = {
     val cfg = parse(args.toSeq)
-    val spark = Engine.session(
-      master = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]",
-      shufflePartitions = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt,
-      appName = "graft-etl")
+    val cpus = Engine.cpus(default = 4)
+    val spark = Engine.session(Engine.local(cpus), cpus, appName = "graft-etl")
     try {
       val (ok, report) = execute(spark, cfg)
       if (report.nonEmpty) println(s"[run-etl] rows: $report")

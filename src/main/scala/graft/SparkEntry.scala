@@ -1433,7 +1433,7 @@ object SparkEntry {
   // bit-for-bit): a unit spike at (vec_id mod 8) over ±5/64 pseudo-noise
   // gives 8 tight directions — one per super-cell at G = 8, so the groups
   // are narrow and the bound really cuts (16 directions over 8 groups
-  // left 2 per group and pruned almost nothing — DevQ110Probe measured
+  // left 2 per group and pruned almost nothing — dev/r16/q110_probe.log
   // the difference before this constant was chosen); K = 64 Forgy
   // centroids (8 per direction)
   // engage the two-level scan (K ≥ SemPruneMinCentroids), the gate probe

@@ -22,10 +22,8 @@ object Validate {
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else
       sys.error("usage: Validate <migratedDir>")
-    val spark = Engine.session(
-      master = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]",
-      shufflePartitions = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt,
-      appName = "graft-validate")
+    val cpus = Engine.cpus(default = 4)
+    val spark = Engine.session(Engine.local(cpus), cpus, appName = "graft-validate")
     spark.sparkContext.setLogLevel("WARN")
 
     def table(dest: String, name: String): Option[DataFrame] =

@@ -1,31 +1,13 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // Same scan-split sizing as Engine.session (byte-small row-heavy
-      // harness files; 128 MB default = single-task map stages).
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_PARTITION_BYTES", "16m"))
-      // Same long-lived-driver status-store bounds as Engine.session: a
-      // 63-query dump at a big scale factor otherwise retains every
-      // execution's plan graph for the whole run.
-      .config("spark.ui.retainedJobs", "100")
-      .config("spark.ui.retainedStages", "200")
-      .config("spark.ui.retainedTasks", "10000")
-      .config("spark.sql.ui.retainedExecutions", "10")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // Engine's Verify conf table: no AQE entries, no extensions
+    val cpus = Engine.cpus()
+    val spark = Engine.build(Engine.Kind.Verify, Engine.local(cpus), cpus)
     new java.io.File(outDir).mkdirs()
     // Subset knob for big-SF spot checks, mirroring Bench's: the driver
     // contract (no env set) still dumps every query.

@@ -81,7 +81,7 @@ case class LangIdExpr(child: Expression, markers: Seq[(String, Seq[String])])
     if (scores(best) > 0) langs(best) else und
   }
 
-  // Real codegen (round-5 A/B, DevProfileLangId): the CodegenFallback path
+  // Real codegen (round-5 A/B, NOTES.md round 5): the CodegenFallback path
   // re-materialized the input row per call; this emits one virtual call on
   // the already-evaluated word array and keeps the projection inside
   // whole-stage codegen. Null child folds to "und" inline.

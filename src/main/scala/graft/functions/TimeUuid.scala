@@ -28,7 +28,7 @@ object TimeUuid {
     * without materializing a java.lang.String). Hex assembly is a manual
     * StringBuilder — the original `f"...%08x"` interpolator compiled to a
     * locale-aware `String.format`, which DOMINATED the per-row cost
-    * (measured in DevProfileTimeUuid; NOTES.md round 5).
+    * (measured by the round-5 A/B; NOTES.md round 5).
     */
   def compute(epochMicros: Long, seed: Array[Byte]): String = {
     val t = epochMicros * 10L + GregorianOffset100Ns // 100-ns units
@@ -84,7 +84,7 @@ object TimeUuid {
   * inside whole-stage codegen and skips the Scala-UDF encoder round-trip
   * (boxing both arguments and re-encoding the result row per call). The
   * [[TimeUuid.compute]] output is bit-identical to the UDF it replaces
-  * (TimeUuidSpec pins the vectors; DevProfileTimeUuid carries the A/B).
+  * (TimeUuidSpec pins the vectors; NOTES.md round 5 records the A/B).
   */
 case class TimeUuidExpr(
     left: org.apache.spark.sql.catalyst.expressions.Expression,

@@ -112,12 +112,10 @@ object Curation {
     // bands·rows+2 hashes per shingle — measured 0.6 s + 1.4 s single-task
     // warm inside q73, r17 stage table). The repair is one thin exchange
     // of the winner rows; at production scale the aggregate output is
-    // already wide and [[Spread.forCpu]] no-ops. Site-gated
-    // (`spark.graft.spread.curation`) for A/B; win pinned in
-    // dev/r17/cur_spread_ab.log.
+    // already wide and [[Spread.forCpu]] no-ops. Win measured by
+    // interleaved A/B (OPTIMIZATION_r17.md; dev/r17/cur_spread_ab.log).
     val gatedPlan = Spread
-      .forCpu(Dedup.exactSurvivors(docs, TextAnalysis.fingerprint(text), idCol),
-        id, "curation")
+      .forCpu(Dedup.exactSurvivors(docs, TextAnalysis.fingerprint(text), idCol), id)
       .filter(TextAnalysis.qualityScore(text) >= minQuality &&
         TextAnalysis.languageId(text).isin(languages.map(x => x: Any): _*))
 

@@ -321,6 +321,11 @@ object Dedup {
     * before); within one band the sources are disjoint by construction
     * (normal/star/rep emit from disjoint bucket classes, and the sub-split
     * join only runs where the direct rep join did not).
+    *
+    * BUILDING the returned frame runs a Spark job: the oversized-bucket
+    * emptiness probe (below) counts over `banded` before any plan is
+    * returned, so plan-only callers (explain, plan dumps, speculatively
+    * built branches) pay that pass, and the route is fixed at build time.
     */
   private[graft] def guardedBandPairs(banded: DataFrame, maxBucketSize: Int): DataFrame = {
     import Ckpt.CkptOps
@@ -332,16 +337,20 @@ object Dedup {
     // branch precedent): when NO bucket exceeds the cap, the anti-join
     // keeps every row and the whole star/rep/sub-split subtree is provably
     // empty, yet AQE still schedules each of its stages as a real job —
-    // pure between-job driver latency on every LSH caller. Every call site
-    // lazily checkpoints `banded` (thin rows) immediately before calling,
-    // so the probe materializes exactly the checkpoint the consuming
-    // action was about to materialize — no extra pass over the upstream
-    // (signatures, decodes). Oversized buckets keep today's guard exactly;
-    // its observed disclosure metrics then register as before (Verify
-    // treats absent guard observes as clean — the all-zero disclosure of
-    // an empty subtree reads identically to an absent one). Checkpointing
-    // `over` also lets the kept path's anti- and semi-joins share ONE
-    // aggregation pass instead of relying on AQE exchange reuse.
+    // pure between-job driver latency on every LSH caller. The Dedup call
+    // sites lazily checkpoint `banded` (thin rows) immediately before
+    // calling, so the probe materializes exactly the checkpoint the
+    // consuming action was about to materialize. The Multimodal sites
+    // (audioNearDupPairs, imageNearDupPairs) checkpoint banded's PARENT —
+    // the fingerprint frame — instead, so there the probe re-runs the
+    // cheap band explode over that checkpoint. Either way there is no
+    // extra pass over the upstream (signatures, decodes). Oversized
+    // buckets keep today's guard exactly; its observed disclosure metrics
+    // then register as before (Verify treats absent guard observes as
+    // clean — the all-zero disclosure of an empty subtree reads
+    // identically to an absent one). Checkpointing `over` also lets the
+    // kept path's anti- and semi-joins share ONE aggregation pass instead
+    // of relying on AQE exchange reuse.
     val pruneEmpty = banded.sparkSession.conf
       .get("spark.graft.lsh.pruneGuardPath", "true").toBoolean
     val over = if (pruneEmpty) overRaw.lazySerCkpt else overRaw
@@ -765,11 +774,8 @@ object Dedup {
     // bench session), and REPARTITION_BY_NUM pins that count un-coalesced —
     // the anchor window ran as 256 near-empty sort tasks whose per-task
     // overhead outweighed the balance benefit (same trap as Spread.forCpu's
-    // first cut; A/B dev/r16b/contain_npart_ab.log). Conf-overridable for
-    // clusters where the window input is big enough to want more waves.
-    val nPart = docs.sparkSession.conf
-      .get("spark.graft.containment.windowPartitions",
-        docs.sparkSession.sparkContext.defaultParallelism.toString).toInt
+    // first cut; A/B dev/r16b/contain_npart_ab.log).
+    val nPart = docs.sparkSession.sparkContext.defaultParallelism
     // the guard count job (below) is the first action of this operator and
     // materializes shingled + dfreq; the observed doc count arrives with it
     val postCap = math.max(maxCandidatesPerDoc / math.max(anchorsPerDoc, 1), 1)
@@ -1250,8 +1256,8 @@ object Dedup {
     * over (measured 4.0× at 40 M sym edges,
     * `dev/r16/sem_stage_profile.log`). The count is measured per call
     * (observed metric on the edge checkpoint), so the route adapts to the
-    * data, not to the deployment; `spark.graft.cc.localClosureMaxEdges`
-    * overrides for A/Bs and unusual clusters.
+    * data, not to the deployment; [[connectedComponents]]' explicit
+    * `localClosureMaxEdges` argument overrides it (specs force a route).
     */
   private[graft] val LocalClosureMaxSymEdges: Long = 1L << 22
 
@@ -1337,14 +1343,10 @@ object Dedup {
       pairs: DataFrame, maxIter: Int = 25, preContract: Boolean = true,
       localClosureMaxEdges: Long = -1L): DataFrame = {
     import Ckpt.ckptRdd
-    // threshold resolution: explicit arg > session conf > constant — the
-    // conf knob (`spark.graft.cc.localClosureMaxEdges`) exists so A/B
-    // harnesses and unusual clusters can steer the route without a rebuild
+    // threshold: the explicit arg when given (specs force a route), else
+    // the constant
     val ccLocalMax =
-      if (localClosureMaxEdges >= 0L) localClosureMaxEdges
-      else pairs.sparkSession.conf
-        .get("spark.graft.cc.localClosureMaxEdges", LocalClosureMaxSymEdges.toString)
-        .toLong
+      if (localClosureMaxEdges >= 0L) localClosureMaxEdges else LocalClosureMaxSymEdges
     val sym = pairs.select(col("id1").as("a"), col("id2").as("b"))
       .unionByName(pairs.select(col("id2").as("a"), col("id1").as("b")))
     // SCALE-ADAPTIVE ROUTE (r16 opt round): the symmetrized edge count
@@ -1378,11 +1380,6 @@ object Dedup {
     // pins local ≡ contracted ≡ direct components on randomized graphs.
     val contractible = preContract &&
       sym.schema("a").dataType == org.apache.spark.sql.types.LongType
-    val ccLog = pairs.sparkSession.conf
-      .get("spark.graft.cc.logEdges", "false").toBoolean
-    def logStep(label: String, t0: Long): Unit =
-      if (ccLog) System.err.println(
-        f"[cc] step=$label sec=${(System.nanoTime() - t0) / 1e9}%.1f")
     val mc = new graft.run.MetricsCollector(pairs.sparkSession)
     // ONE finally owns the listener from here on (ADVICE r16): any throw
     // mid-materialization — contraction checkpoint, local closure, loop
@@ -1402,10 +1399,8 @@ object Dedup {
         // dev/r16b/sem_stage_profile_r16d.log. Counting on the fused job
         // costs one accumulator.)
         val obs = s"cc_sym_${guardObsId.incrementAndGet()}"
-        val tC = System.nanoTime()
         val c2 = localUnionFindPass(localUnionFindPass(
           sym.observe(obs, count(lit(1)).as("n")))).eagerSerCkpt
-        logStep("contract", tC)
         val symN = mc.await(obs) match {
           // a malformed metric resolves like a listener miss: assume big —
           // the distributed route is the scale-safe default (its cost is
@@ -1413,22 +1408,15 @@ object Dedup {
           case Some(m) => m("n") match { case l: Long => l; case _ => Long.MaxValue }
           case None => Long.MaxValue
         }
-        if (ccLog)
-          System.err.println(s"[cc] symEdges=$symN " +
-            s"route=${if (symN <= ccLocalMax) "local" else "contract"}")
         if (symN <= ccLocalMax) {
           // small graph: finish the (component-preserving) contracted star
           // forest in one single-task union-find job — no propagation loop
-          val tLoc = System.nanoTime()
           val labels = localClosureLabels(c2).eagerSerCkpt
-          logStep("localClosure", tLoc)
           ckptRdd(c2).foreach(_.unpersist(blocking = false))
           return labels // the finally below closes mc
         }
-        val tE = System.nanoTime()
         val e = c2.unionByName(c2.select(col("b").as("a"), col("a").as("b")))
           .eagerSerCkpt
-        logStep("symmetrizeStars", tE)
         ckptRdd(c2).foreach(_.unpersist(blocking = false))
         e
       } else sym.distinct().eagerSerCkpt
@@ -1653,8 +1641,8 @@ object Dedup {
   /** [[semAssign]] with the O(n·K) argmax pruned by a two-level triangle-
     * inequality bound (VERDICT r14 next #2) — EXACT, not approximate:
     * identical output to the exhaustive scan including 6-dp rounding ties
-    * (spec-pinned on randomized fixtures; DevSemLadder pins survivors at
-    * scale).
+    * (spec-pinned on randomized fixtures; `Tools ladder sem` checks row
+    * identity at scale).
     *
     * The K centroids are grouped into G ≈ √K super-cells (KMeans over the
     * K-row centroid table — grouping quality affects only SPEED; the bound
@@ -1704,8 +1692,8 @@ object Dedup {
       .localCheckpoint(false)
     // ADAPTIVE GATE (VERDICT r15 next #5): on corpora where the bound
     // cannot prune (isotropic embeddings: every r_g spans the sphere, so
-    // DevSemProbe measures candidates-kept = K), the two-level scan pays
-    // its measured ~4-8% bound overhead for nothing. Probe a bounded
+    // candidates-kept = K, dev/r15/sem_probe_iso.log), the two-level scan
+    // pays its measured ~4-8% bound overhead for nothing. Probe a bounded
     // sample's kept-candidate fraction and fall back to the exhaustive
     // argmax when pruning would keep nearly everything. Path choice can
     // NEVER affect output — both scans are EXACT (spec-pinned identical) —
@@ -1893,8 +1881,8 @@ object Dedup {
     */
   private[graft] val SemLocalPairMaxCell: Int = 2048
 
-  /** [[semPairsFromAssign]] for the stage profiler and the path-identity
-    * spec (`localPairMaxCell = 0` forces the join path).
+  /** [[semPairsFromAssign]] for `Tools ladder sem-stages` and the
+    * path-identity spec (`localPairMaxCell = 0` forces the join path).
     */
   private[graft] def semPairsFromAssignHook(
       asg: DataFrame, threshold: Double,
@@ -1902,6 +1890,15 @@ object Dedup {
       localPairMaxCell: Int = SemLocalPairMaxCell): DataFrame =
     semPairsFromAssign(asg, threshold, maxCellSize, localPairMaxCell)
 
+  /** Intra-cell pairs of an assignment `(id, centroid_id, vec, ...)`:
+    * cells up to the local cap pair through the native collected-cell
+    * emission, larger cells through [[semPairsJoinPath]].
+    *
+    * BUILDING the returned frame runs a Spark job: the max-cell-size probe
+    * (one K-row scalar job, materializing the assignment checkpoint)
+    * decides the route before any plan is returned, so plan-only callers
+    * pay it and the route is fixed at build time.
+    */
   private def semPairsFromAssign(
       asg: DataFrame, threshold: Double, maxCellSize: Int,
       localPairMaxCell: Int = SemLocalPairMaxCell): DataFrame = {

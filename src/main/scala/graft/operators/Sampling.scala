@@ -502,12 +502,8 @@ object Sampling {
     // partitioning is slightly FASTER here (dev/r16b/rank_npart_ab.log:
     // 256 vs 32 → q100 1.74 vs 1.88, q107 0.94 vs 1.15 s min-over-4) —
     // smaller sorted runs beat the extra task overhead. Any partition
-    // count yields the same ranks (range partitions are order-aligned),
-    // so the conf override steers cost only.
-    val parts = selected.sparkSession.conf
-      .get("spark.graft.rank.partitions",
-        selected.sparkSession.sessionState.conf.numShufflePartitions.toString)
-      .toInt
+    // count yields the same ranks (range partitions are order-aligned).
+    val parts = selected.sparkSession.sessionState.conf.numShufflePartitions
     val sorted = selected
       .repartitionByRange(parts, col("__score").desc, col("__did").asc)
       .sortWithinPartitions(col("__score").desc, col("__did").asc)

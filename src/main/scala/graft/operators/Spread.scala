@@ -38,17 +38,7 @@ import org.apache.spark.sql.{Column, DataFrame}
   */
 private[graft] object Spread {
 
-  def forCpu(df: DataFrame, key: Column, site: String = ""): DataFrame = {
-    // kill switch for interleaved A/B measurement (DevConfAb) — defaults on.
-    // A named site gets its own override (spark.graft.spread.<site>) so one
-    // site can be A/B'd without toggling the sites whose win is already
-    // pinned; it falls back to the global switch.
-    val conf = df.sparkSession.conf
-    val globalOn = conf.get("spark.graft.spread.enabled", "true")
-    val enabled =
-      if (site.isEmpty) globalOn
-      else conf.get(s"spark.graft.spread.$site", globalOn)
-    if (!enabled.toBoolean) return df
+  def forCpu(df: DataFrame, key: Column): DataFrame = {
     // CORE parallelism, NOT SQLConf.numShufflePartitions: with AQE
     // coalescing on, the latter reports initialPartitionNum (8× cores
     // here), and REPARTITION_BY_NUM pins that count un-coalesced — 256

@@ -443,16 +443,19 @@ object TextAnalysis {
     * Absent/unknown stats (checkpointed inputs report the conservative
     * default) and a disabled broadcast threshold both resolve to FUSE —
     * the scale-safe polarity. `true`/`false` force an arm for A/Bs and
-    * plan dumps.
+    * plan dumps; any other value throws IllegalArgumentException (a
+    * misspelled forced arm must not silently measure `auto`).
     */
   private def lmWindowFuse(docs: org.apache.spark.sql.DataFrame): Boolean =
     docs.sparkSession.conf.get("spark.graft.lm.windowFuse", "auto") match {
       case "true" => true
       case "false" => false
-      case _ =>
+      case "auto" =>
         val in = docs.queryExecution.optimizedPlan.stats.sizeInBytes
         val thr = docs.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
         thr <= 0 || in > thr
+      case other => throw new IllegalArgumentException(
+        s"spark.graft.lm.windowFuse must be auto, true or false; got '$other'")
     }
 
   def bigramLmScore(

@@ -1,9 +1,10 @@
 package org.apache.spark
 
-/** `SparkContext.listenerBus` is `private[spark]`; the dev instrumentation
-  * (graft.DevStageMetrics) needs a synchronous drain so per-rep stage reads
-  * neither miss a straggler `SparkListenerStageCompleted` nor leak it into
-  * the next rep's buffer — a fixed sleep is a race, not a barrier.
+/** `SparkContext.listenerBus` is `private[spark]`; listener readers
+  * (`graft.Tools stages`, Verify's guard check) need a synchronous drain so
+  * per-rep reads neither miss a straggler `SparkListenerStageCompleted` nor
+  * leak it into the next rep's buffer — a fixed sleep is a race, not a
+  * barrier.
   */
 object GraftListenerBridge {
   /** Returns true when the bus fully drained; false when the 10 s internal

@@ -504,7 +504,13 @@ class TextAnalysisSpec extends SparkSpecBase {
       // default `auto` resolves from input plan stats (r17) — whichever
       // arm it picks, the scored output must equal both forced arms
       spark.conf.unset(key)
-      (f, u, runAll())
+      val a = runAll()
+      // a misspelled arm throws instead of silently measuring `auto`
+      spark.conf.set(key, "True")
+      intercept[IllegalArgumentException] {
+        TextAnalysis.ngramLmScoreKn(corpus, "doc_id", "text", order = 4)
+      }
+      (f, u, a)
     } finally prev match {
       case Some(v) => spark.conf.set(key, v)
       case None => spark.conf.unset(key)
