@@ -1,204 +1,95 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
+import java.nio.file.{Files, Paths}
 
 import graft.functions.ReEncrypt
-import graft.model.Destination
-import graft.operators.Relational
-import graft.post.Denormalize
-import graft.run.Pipeline
-import graft.transform.{DocsHierarchy, Projections, Rules}
-import graft.validate.Checks
+import graft.transform.Rules
 
 /** End-to-end migration drive over mongo-shaped fixtures covering ALL 15
-  * entities of the catalog: topo pipeline → dual-destination outputs →
-  * hierarchical docs → many-to-many derivation → post-migration
-  * denormalization → the validation-check suite.
+  * entities of the catalog: the fixtures are written as
+  * `<outDir>/sources/<collection>.jsonl`, migrated by [[RunEtl.execute]]
+  * (entities, post-migration tables, docs_roles) into `<outDir>`, and
+  * checked by [[Validate.run]].
   * `runMain graft.MigrationDemo [outDir]`; exit code 1 if any check fails.
   */
 object MigrationDemo {
+
+  private val enc = ReEncrypt.encryptSalsa20("mensaje secreto", Rules.LegacyKey)
+
+  /** Mongo-shaped documents per source collection. */
+  val fixtures: Map[String, Seq[String]] = Map(
+    "roles" -> Seq(
+      """{"_id":"ro1","name":"USER","type":"app"}""",
+      """{"_id":"ro2","name":"ADMIN","type":"app","default":true}""",
+      """{"_id":"ro9","name":"SPECIAL","type":"app"}"""),
+    "provinces" -> Seq("""{"_id":"p1","name":"Zulia","key":"ZU","isActive":true}"""),
+    "municipalities" -> Seq(
+      """{"_id":"mu1","name":"Maracaibo","province":"p1","isActive":true}"""),
+    "parroquias" -> Seq(
+      """{"_id":"pa1","name":"Olegario","province":"p1","municipality":"mu1","isActive":true}"""),
+    "professions" -> Seq(
+      """{"_id":"pr1","name":"Teacher","name_es":"Docente"}""",
+      """{"_id":"pr2","name_es":"Médico"}"""),
+    "entities" -> Seq("""{"_id":"en1","name":"Ministry","organization":"gov"}"""),
+    "users" -> Seq(
+      """{"_id":"u1","displayName":"Ana","phoneNumber":"(58)412-5551","email":"Ana@X.com",
+         "province":"p1","municipality":"mu1","parroquia":"pa1","userType":"USER_ROLE",
+         "isActive":true,"profession":["pr1","pr2"],"entities":["en1"],
+         "photoURL":"gs://sibci-devel.appspot.com/a.png","createdAt":"2024-01-01T00:00:00Z"}""",
+      """{"_id":"u2","name":"Bea","phone":"555","userType":"ADMIN","isActive":true,
+         "profession":["pr1"],"createdAt":"2024-01-01T00:00:00Z"}""",
+      """{"_id":"u3","name":"Cerrada","phone":"777","email":"c@x.com","userType":"USER",
+         "isActive":false,"createdAt":"2024-01-01T00:00:00Z"}"""),
+    "channels" -> Seq(
+      """{"_id":"c1","name":"Noticias","isActive":true,"createdBy":"u1",
+         "picture":{"url":"gs://sibci-2f7fc.appspot.com/c1.png"},"lives":["l1","l2"]}"""),
+    "docs" -> Seq(
+      """{"_id":"f1","name":"docs","type":"FOLDER","onFolder":"/","isActive":true}""",
+      """{"_id":"f2","name":"legal","type":"FOLDER","onFolder":"/docs","isActive":true}""",
+      """{"_id":"a1","title":"contrato","fileType":"PDF","onFolder":"/docs/legal",
+         "isActive":true,"specialRole":"ro9","uploadedBy":"u1"}""",
+      """{"_id":"a2","title":"huerfano","fileType":"PDF","onFolder":"/nada","isActive":true}"""),
+    "lives" -> Seq(
+      """{"_id":"l1","title":"En vivo","channel":"c1","createdBy":"u1","isFinished":false,
+         "photoURL":{"url":"gs://sibci-devel.appspot.com/l1.png"},"liveUrl":"https://yt/1"}"""),
+    "rooms" -> Seq(
+      """{"_id":"r1","name":"Duo","createdAt":"2024-02-01T00:00:00Z"}""",
+      """{"_id":"r2","name":"Equipo","isGroup":true,"isAdmin":true,
+         "createdAt":"2024-02-01T00:00:00Z"}"""),
+    "messages" -> Seq(
+      s"""{"_id":"m1","room":"r1","sender":"u1","message":"$enc","isActive":true,
+          "createdAt":"2024-03-01T10:00:00Z"}""",
+      """{"_id":"m2","room":"r1","sender":"u2","message":"hola","isActive":true,
+         "createdAt":"2024-03-01T11:00:00Z"}""",
+      """{"_id":"m3","room":"r2","sender":"u1","message":"geo","msgType":"GEO_LOCATION",
+         "isActive":true,"createdAt":"2024-03-01T12:00:00Z"}"""),
+    "roommembers" -> Seq(
+      """{"_id":"b1","room":"r1","user":"u1","role":"member"}""",
+      """{"_id":"b2","room":"r1","user":"u2","role":"admin"}""",
+      """{"_id":"b3","room":"r2","user":"u1","role":"member"}"""))
+
+  /** Writes [[fixtures]] as one `<collection>.jsonl` per collection, one
+    * document per line.
+    */
+  def writeFixtures(dir: String): Unit = {
+    Files.createDirectories(Paths.get(dir))
+    for ((name, docs) <- fixtures)
+      Files.writeString(Paths.get(dir, s"$name.jsonl"),
+        docs.map(_.replaceAll("\\s*\n\\s*", " ")).mkString("", "\n", "\n"))
+  }
+
   def main(args: Array[String]): Unit = {
     val out = if (args.nonEmpty) args(0) else
-      java.nio.file.Files.createTempDirectory("graft-migration").toString
+      Files.createTempDirectory("graft-migration").toString
     val spark = Engine.session(master = "local[4]", shufflePartitions = 4, appName = "demo")
-    import spark.implicits._
-
-    def docs(json: String*): DataFrame =
-      graft.run.EntityStages.normalizeTimestamps(spark.read.json(json.toDS))
-
-    val enc = ReEncrypt.encryptSalsa20("mensaje secreto", Rules.LegacyKey)
-    val sources: Map[String, DataFrame] = Map(
-      "roles" -> docs(
-        """{"_id":"ro1","name":"USER","type":"app"}""",
-        """{"_id":"ro2","name":"ADMIN","type":"app","default":true}""",
-        """{"_id":"ro9","name":"SPECIAL","type":"app"}"""),
-      "provinces" -> docs("""{"_id":"p1","name":"Zulia","key":"ZU","isActive":true}"""),
-      "municipalities" -> docs(
-        """{"_id":"mu1","name":"Maracaibo","province":"p1","isActive":true}"""),
-      "parroquias" -> docs(
-        """{"_id":"pa1","name":"Olegario","province":"p1","municipality":"mu1","isActive":true}"""),
-      "professions" -> docs(
-        """{"_id":"pr1","name":"Teacher","name_es":"Docente"}""",
-        """{"_id":"pr2","name_es":"Médico"}"""),
-      "entities" -> docs("""{"_id":"en1","name":"Ministry","organization":"gov"}"""),
-      "users" -> docs(
-        """{"_id":"u1","displayName":"Ana","phoneNumber":"(58)412-5551","email":"Ana@X.com",
-           "province":"p1","municipality":"mu1","parroquia":"pa1","userType":"USER_ROLE",
-           "isActive":true,"profession":["pr1","pr2"],"entities":["en1"],
-           "photoURL":"gs://sibci-devel.appspot.com/a.png","createdAt":"2024-01-01T00:00:00Z"}""",
-        """{"_id":"u2","name":"Bea","phone":"555","userType":"ADMIN","isActive":true,
-           "profession":["pr1"],"createdAt":"2024-01-01T00:00:00Z"}""",
-        """{"_id":"u3","name":"Cerrada","phone":"777","email":"c@x.com","userType":"USER",
-           "isActive":false,"createdAt":"2024-01-01T00:00:00Z"}"""),
-      "channels" -> docs(
-        """{"_id":"c1","name":"Noticias","isActive":true,"createdBy":"u1",
-           "picture":{"url":"gs://sibci-2f7fc.appspot.com/c1.png"},"lives":["l1","l2"]}"""),
-      "docs" -> docs(
-        """{"_id":"f1","name":"docs","type":"FOLDER","onFolder":"/","isActive":true}""",
-        """{"_id":"f2","name":"legal","type":"FOLDER","onFolder":"/docs","isActive":true}""",
-        """{"_id":"a1","title":"contrato","fileType":"PDF","onFolder":"/docs/legal",
-           "isActive":true,"specialRole":"ro9","uploadedBy":"u1"}""",
-        """{"_id":"a2","title":"huerfano","fileType":"PDF","onFolder":"/nada","isActive":true}"""),
-      "lives" -> docs(
-        """{"_id":"l1","title":"En vivo","channel":"c1","createdBy":"u1","isFinished":false,
-           "photoURL":{"url":"gs://sibci-devel.appspot.com/l1.png"},"liveUrl":"https://yt/1"}"""),
-      "rooms" -> docs(
-        """{"_id":"r1","name":"Duo","createdAt":"2024-02-01T00:00:00Z"}""",
-        """{"_id":"r2","name":"Equipo","isGroup":true,"isAdmin":true,
-           "createdAt":"2024-02-01T00:00:00Z"}"""),
-      "messages" -> docs(
-        s"""{"_id":"m1","room":"r1","sender":"u1","message":"$enc","isActive":true,
-            "createdAt":"2024-03-01T10:00:00Z"}""",
-        """{"_id":"m2","room":"r1","sender":"u2","message":"hola","isActive":true,
-           "createdAt":"2024-03-01T11:00:00Z"}""",
-        """{"_id":"m3","room":"r2","sender":"u1","message":"geo","msgType":"GEO_LOCATION",
-           "isActive":true,"createdAt":"2024-03-01T12:00:00Z"}"""),
-      "roommembers" -> docs(
-        """{"_id":"b1","room":"r1","user":"u1","role":"member"}""",
-        """{"_id":"b2","room":"r1","user":"u2","role":"admin"}""",
-        """{"_id":"b3","room":"r2","user":"u1","role":"member"}"""))
-
-    // the source collections ride along as jsonl so the standalone
-    // `graft.Validate` can recompute source-vs-target parity later
-    for ((name, df) <- sources)
-      df.toJSON.coalesce(1).write.mode("overwrite").text(s"$out/sources/$name")
-
-    val pipe = new Pipeline(spark, sources(_), Pipeline.parquetSink(out))
-    val results = pipe.run(graft.run.EntityStages.all)
-
-    // post-migration denormalization (J8-J10 + S12 lookups)
-    val rooms = results(("room", Destination.Cassandra))
-    val participants = results(("room_member", Destination.Cassandra))
-    val messages = results(("message", Destination.Cassandra))
-    val cassUsers = results(("user", Destination.Cassandra))
-    val rbu = Denormalize.roomsByUser(participants, rooms, messages, cassUsers)
-    val p2p = Denormalize.p2pLookup(rooms, participants)
-    val lookup = Denormalize.refreshMembershipLookup(
-      Denormalize.membershipLookup(participants), rbu)
-    rbu.write.mode("overwrite").parquet(s"$out/cassandra/rooms_by_user")
-    p2p.write.mode("overwrite").parquet(s"$out/cassandra/p2p_room_by_users")
-    lookup.write.mode("overwrite").parquet(s"$out/cassandra/room_membership_lookup")
-    // S12 reverse-lookup tables + F7 organizations branch + docs_roles —
-    // completing the reference's full target-table surface
-    Denormalize.roomsByMongo(rooms).write.mode("overwrite")
-      .parquet(s"$out/cassandra/rooms_by_mongo")
-    Denormalize.roomByMessage(messages).write.mode("overwrite")
-      .parquet(s"$out/cassandra/room_by_message")
-    Rules.organizations(rooms).write.mode("overwrite")
-      .parquet(s"$out/cassandra/organizations")
-    val docsRoles = DocsHierarchy.resolve(
-      Rules.docsRules(Projections.docsPostgres(sources("docs")),
-        userDim = Some(results(("user", Destination.Postgres)).select(col("mongo_id"), col("id"))),
-        roleDim = Some(results(("roles", Destination.Postgres)).select(col("mongo_id"), col("id")))))
-      .docsRoles
-    docsRoles.write.mode("overwrite").parquet(s"$out/postgres/docs_roles")
-
-    // CQL physical layouts (`create_scylla_database.cql`): every Cassandra
-    // target table the demo produces is ALSO written partition-key +
-    // clustering-order laid out, and the clustering order is validated on
-    // read-back below (the storage property the reference gets from Scylla)
-    val layoutDir = s"$out/cassandra_layout"
-    val layoutTables: Seq[(String, DataFrame)] = Seq(
-      "messages_by_room" -> messages,
-      "room_details" -> rooms,
-      "participants_by_room" -> participants,
-      "rooms_by_user" -> rbu,
-      "p2p_room_by_users" -> p2p.select(col("user_id").as("user1_id"),
-        col("other_user_id").as("user2_id"), col("room_id")),
-      "room_membership_lookup" -> lookup,
-      "rooms_by_mongo" -> Denormalize.roomsByMongo(rooms),
-      "room_by_message" -> Denormalize.roomByMessage(messages),
-      "organizations" -> Rules.organizations(rooms),
-      "users" -> cassUsers,
-      "role" -> results(("roles", Destination.Cassandra)))
-    layoutTables.foreach { case (t, df) => graft.sink.CqlLayouts.write(df, layoutDir, t) }
-    def layoutClustering(t: String) = graft.sink.CqlLayouts.all(t).clustering
-
-    // validation suite (§3.3), incl. hierarchy + m2m + FK invariants
-    val pgUsers = results(("user", Destination.Postgres))
-    val pgDocs = results(("docs", Destination.Postgres))
-    val folders = pgDocs.filter(col("type") === "FOLDER")
-    val checks = Seq(
-      Checks.countParity("users-pg", sources("users").count(), pgUsers.count(), 0.95),
-      Checks.countParity("messages", sources("messages").count(), messages.count(), 0.60),
-      Checks.uuid5Oracle("room-uuid5", rooms, "mongo_id", "room_id"),
-      Checks.setContainment("msg-rooms⊆rooms", messages, rooms, "room_id"),
-      Checks.fkIntegrity("user-province", pgUsers,
-        results(("province", Destination.Postgres)), "province_id", "id"),
-      Checks.fkIntegrity("live-channel", results(("live", Destination.Postgres)),
-        results(("channel", Destination.Postgres)), "channel_id", "id"),
-      Checks.fkIntegrity("m2m-user", results(("profession_user", Destination.Postgres)),
-        pgUsers, "user_id", "id"),
-      Checks.fkIntegrity("docs-folders", pgDocs.filter(col("onFolder") =!= 0),
-        folders, "onFolder", "id"),
-      Checks.implication("specialRole⇒isPrivate", pgDocs,
-        col("special_role_id").isNotNull, col("isPrivate")),
-      Checks.urlRewriteSweep("avatar-urls", pgUsers, Seq("avatar")),
-      Checks.urlRewriteSweep("channel-urls", results(("channel", Destination.Postgres)),
-        Seq("picture", "cover")),
-      Checks.absence("no-geo-msgs", messages, col("type") === "GEO_LOCATION"),
-      Checks.ratioAtLeast("cass-phone-plus",
-        cassUsers.filter(col("phone") =!= ""), col("phone").startsWith("+"), 1.0),
-      Checks.cardinalityEquals("rbu=participants", rbu.count(), participants.count()),
-      Checks.cardinalityEquals("m2m-profession", 3L,
-        results(("profession_user", Destination.Postgres)).count()),
-      Checks.schemaPresence("messages-schema", messages,
-        Seq("room_id", "message_id", "content", "content_decrypted", "sender_id",
-          "file_url", "mime_type", "is_deleted", "mongo_id", "created_at")),
-      Checks.flagDerivedCount("organizations-flag",
-        sources("rooms"), coalesce(col("isAdmin"), lit(false)),
-        rooms, col("is_organization")),
-      Checks.sampleSpotCheck("room-type-domain", rooms,
-        col("type").isin("p2p", "group", "broadcast")),
-      Checks.sampleSpotCheck("participant-role-upper", participants,
-        col("role") === upper(col("role"))),
-      Checks.softDeleteConsistency("deleted-user-anonymized", pgUsers,
-        col("name") === "Deleted User",
-        mustBeSet = Seq("deleted_at", "deleted_name"),
-        mustBeBlank = Seq("email", "phone")),
-      Checks.cardinalityEquals("rooms_by_mongo=rooms",
-        spark.read.parquet(s"$out/cassandra/rooms_by_mongo").count(), rooms.count()),
-      Checks.cardinalityEquals("room_by_message=messages",
-        spark.read.parquet(s"$out/cassandra/room_by_message").count(), messages.count()),
-      Checks.cardinalityEquals("docs_roles=special-role-docs",
-        docsRoles.count(), pgDocs.filter(col("special_role_id").isNotNull).count()),
-      Checks.clusteringOrder("messages-clustering-desc",
-        spark.read.parquet(s"$layoutDir/messages_by_room"),
-        layoutClustering("messages_by_room")),
-      Checks.clusteringOrder("rbu-clustering",
-        spark.read.parquet(s"$layoutDir/rooms_by_user"),
-        layoutClustering("rooms_by_user")),
-      Checks.clusteringOrder("participants-clustering",
-        spark.read.parquet(s"$layoutDir/participants_by_room"),
-        layoutClustering("participants_by_room")),
-      Checks.cardinalityEquals("layout-messages=messages",
-        spark.read.parquet(s"$layoutDir/messages_by_room").count(), messages.count()))
-    val (ok, summary) = Checks.verdict(checks,
-      critical = Set("room-uuid5", "msg-rooms⊆rooms", "docs-folders"))
-    println(summary)
-    println(s"MIGRATION ${if (ok) "VALID" else "INVALID"}; metrics=${pipe.report}")
-    spark.stop()
+    val (ok, checks) = try {
+      writeFixtures(s"$out/sources")
+      val (_, rows) = RunEtl.execute(spark,
+        RunEtl.parse(Seq("--source", s"$out/sources", "--out", out)))
+      println(s"[demo] rows: $rows")
+      Validate.run(spark, out)
+    } finally spark.stop()
+    Validate.report(ok, checks)
     if (!ok) sys.exit(1)
   }
 }

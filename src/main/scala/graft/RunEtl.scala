@@ -1,8 +1,11 @@
 package graft
 
+import scala.collection.mutable
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.model.{Destination, Entities}
+import graft.post.Denormalize
 import graft.run.{EntityStages, Pipeline}
 import graft.sources.{DocumentSource, JsonSource, ParquetSource}
 
@@ -26,6 +29,11 @@ import graft.sources.{DocumentSource, JsonSource, ParquetSource}
   * reference's load batching. `--truncate` deletes the selected entities'
   * target directories first. `--validate` only checks that every selected
   * entity's source collection is readable.
+  *
+  * After the entities, the run writes the post-migration tables of
+  * [[Denormalize.tables]] from the cached entity results, as plain parquet
+  * under `<out>/<destination>/<table>`: those whose destination `--target`
+  * selects and whose inputs ran. `--dry-run` builds none of them.
   */
 object RunEtl {
 
@@ -71,6 +79,15 @@ object RunEtl {
     case _ => false
   }
 
+  /** `<collection>.jsonl` per collection when `dir` holds any, else
+    * `<collection>.parquet`.
+    */
+  def documentSource(spark: SparkSession, dir: String): DocumentSource = {
+    val listing = Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
+    if (listing.exists(_.getName.endsWith(".jsonl"))) new JsonSource(spark, dir)
+    else new ParquetSource(spark, dir)
+  }
+
   /** Runs the selected migration; returns (ok, per-entity row counts).
     * Factored out of `main` so specs can drive the CLI path on a shared
     * session.
@@ -85,10 +102,7 @@ object RunEtl {
     }
     require(cfg.sourceDir.nonEmpty, "--source is required")
 
-    val listing = Option(new java.io.File(cfg.sourceDir).listFiles()).getOrElse(Array.empty)
-    val src: DocumentSource =
-      if (listing.exists(_.getName.endsWith(".jsonl"))) new JsonSource(spark, cfg.sourceDir)
-      else new ParquetSource(spark, cfg.sourceDir)
+    val src = documentSource(spark, cfg.sourceDir)
     def collection(name: String): DataFrame =
       EntityStages.normalizeTimestamps(src.collection(name))
 
@@ -168,7 +182,20 @@ object RunEtl {
     try {
       val stages = EntityStages.all.filter { case (name, _) => selected(name) }
       val pipe = new Pipeline(spark, collection, sink, dryRun = cfg.dryRun)
-      pipe.run(stages)
+      val results = pipe.run(stages)
+      if (!cfg.dryRun) {
+        // each post table is read back once written: the membership lookup
+        // refreshes from rooms_by_user without computing it a second time
+        val built = mutable.Map[String, DataFrame]() ++ results.map { case ((e, d), df) =>
+          s"$e:${d.toString.toLowerCase}" -> df
+        }
+        for (t <- Denormalize.tables
+          if destMatches(cfg.target, t.destination) && t.inputs.forall(built.contains)) {
+          base(t.name, t.destination, t.build(built.toMap))
+          built(t.name) = spark.read.parquet(
+            s"${cfg.outDir}/${t.destination.toString.toLowerCase}/${t.name}")
+        }
+      }
       (true, pipe.report)
     } finally prevBatch.foreach(v =>
       spark.conf.set("spark.sql.files.maxRecordsPerFile", v))

@@ -27,9 +27,9 @@ object Strategy {
 /** One source collection and its migration contract — mirrors the entries of
   * the reference's COLLECTION_MAPPINGS (`etl/config/settings.py:138-258`):
   * topological `order` (parents before children), per-destination target
-  * table names, and the structural flags that route an entity through the
-  * special pipelines (hierarchical docs, many-to-many explode, lookup-table
-  * emission).
+  * table names, and whether the entity is a many-to-many link table. The
+  * post-migration tables derived from entities are listed in
+  * [[graft.post.Denormalize.tables]].
   */
 final case class EntityConfig(
     name: String,
@@ -38,13 +38,7 @@ final case class EntityConfig(
     strategy: Strategy,
     postgresTable: Option[String] = None,
     cassandraTable: Option[String] = None,
-    isHierarchical: Boolean = false,
-    isManyToMany: Boolean = false,
-    hasOrganizations: Boolean = false,
-    hasMongoLookup: Boolean = false,
-    hasP2pLookup: Boolean = false,
-    hasRoomLookup: Boolean = false,
-    hasMembershipLookup: Boolean = false)
+    isManyToMany: Boolean = false)
 
 object Entities {
   import Strategy._
@@ -65,15 +59,13 @@ object Entities {
     EntityConfig("user", "users", 7, Dual,
       postgresTable = Some("user"), cassandraTable = Some("users")),
     EntityConfig("channel", "channels", 8, PostgresOnly, postgresTable = Some("channel")),
-    EntityConfig("docs", "docs", 9, PostgresOnly, postgresTable = Some("docs"),
-      isHierarchical = true),
+    EntityConfig("docs", "docs", 9, PostgresOnly, postgresTable = Some("docs")),
     EntityConfig("live", "lives", 10, PostgresOnly, postgresTable = Some("live")),
-    EntityConfig("room", "rooms", 11, CassandraOnly, cassandraTable = Some("room_details"),
-      hasOrganizations = true, hasMongoLookup = true, hasP2pLookup = true),
+    EntityConfig("room", "rooms", 11, CassandraOnly, cassandraTable = Some("room_details")),
     EntityConfig("message", "messages", 12, CassandraOnly,
-      cassandraTable = Some("messages_by_room"), hasRoomLookup = true),
+      cassandraTable = Some("messages_by_room")),
     EntityConfig("room_member", "roommembers", 13, CassandraOnly,
-      cassandraTable = Some("participants_by_room"), hasMembershipLookup = true),
+      cassandraTable = Some("participants_by_room")),
     EntityConfig("profession_user", "users", 14, PostgresOnly,
       postgresTable = Some("profession_user"), isManyToMany = true),
     EntityConfig("entities_user", "users", 15, PostgresOnly,

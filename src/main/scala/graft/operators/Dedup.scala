@@ -919,8 +919,7 @@ object Dedup {
       textCol: String,
       k: Int = 8,
       // hash-prefilter the window-string aggregation — pass true when the
-      // input corpus is already deduplicated (see markedSpans); the
-      // spark.graft.substr.hashPrefilter conf overrides for A/B
+      // input corpus is already deduplicated (see markedSpans)
       hashPrefilter: Boolean = false): DataFrame =
     markedSpans(docs, idCol, textCol, k, hashPrefilter)
       .groupBy(col("__did"))
@@ -945,9 +944,6 @@ object Dedup {
     // spread BEFORE the window build: the k-token window expression +
     // posexplode + dup-gram partial-agg stage is compute-dense per byte
     // over a byte-small corpus ([[Spread.forCpu]] — no-op at scan widths)
-    val pre = docs.sparkSession.conf
-      .getOption("spark.graft.substr.hashPrefilter")
-      .map(_.toBoolean).getOrElse(hashPrefilter)
     val exploded = Spread
       .forCpu(docs.select(col(idCol).as("__did"), col(textCol).as("__wtx")),
         col("__did"))
@@ -955,7 +951,7 @@ object Dedup {
       .select(col("__did"), posexplode(col("__ws")).as(Seq("__pos", "__g")))
     // the hash column rides the checkpoint only on the prefilter route —
     // the plain route's checkpoint stays byte-identical to the pre-r17 one
-    val wins = (if (pre) exploded.withColumn("__h", xxhash64(col("__g")))
+    val wins = (if (hashPrefilter) exploded.withColumn("__h", xxhash64(col("__g")))
       else exploded).lazySerCkpt
     // Hash pre-filter before the window-string aggregation (r17, guide §3
     // "pre-filter the big side when selective"): the duplicate-detection
@@ -981,10 +977,9 @@ object Dedup {
     // RAW replicated corpus every replica duplicates ALL its windows, the
     // prefilter keeps most rows and its extra aggregation+semi-join stages
     // are pure overhead (q70 1.48 vs 1.18, q71 1.62 vs 1.18 — the
-    // standalone operators default false). The session conf overrides both
-    // arms for interleaved measurement.
+    // standalone operators default false).
     val cands =
-      if (pre)
+      if (hashPrefilter)
         wins.join(
           wins.groupBy("__h").agg(count(lit(1)).as("__hc"))
             .filter(col("__hc") > 1).select("__h"),
@@ -1043,8 +1038,7 @@ object Dedup {
       textCol: String,
       k: Int = 8,
       // hash-prefilter the window-string aggregation — pass true when the
-      // input corpus is already deduplicated (see markedSpans); the
-      // spark.graft.substr.hashPrefilter conf overrides for A/B
+      // input corpus is already deduplicated (see markedSpans)
       hashPrefilter: Boolean = false): DataFrame = {
     val spans = markedSpans(docs, idCol, textCol, k, hashPrefilter)
       .groupBy("__did")

@@ -1,9 +1,11 @@
 package graft.post
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.model.Destination
 import graft.operators.Relational
+import graft.transform.Rules
 
 /** Post-migration denormalization (SURVEY.md §2.4 J8–J10,
   * `etl/orchestrator.py:1106-1471`): the reference's per-row cached loops
@@ -11,8 +13,48 @@ import graft.operators.Relational
   * ("10-100x faster" — `orchestrator.py:1240`) are plain equi-joins here;
   * AQE upgrades them to broadcast at runtime exactly when the side is small
   * enough to be a cache, instead of assuming it always is.
+  *
+  * [[tables]] is the one list of post-migration tables a migration writes
+  * after its 15 entities, with the inputs each is built from.
   */
 object Denormalize {
+
+  /** A post-migration table written to `<destination>/<name>`. `inputs`
+    * name entity results as `"<entity>:<destination>"` (the [[graft.run.Pipeline]]
+    * dim naming) and earlier post tables by their `name`; `build` looks
+    * them up by those names.
+    */
+  final case class PostTable(
+      name: String,
+      destination: Destination,
+      inputs: Seq[String],
+      build: Map[String, DataFrame] => DataFrame)
+
+  private val roomKey = "room:cassandra"
+  private val memberKey = "room_member:cassandra"
+  private val messageKey = "message:cassandra"
+
+  /** The post-migration tables in build order: J8-J10, the S12 lookups, the
+    * F7 organizations branch and docs_roles (U1). The membership lookup is
+    * refreshed from the rooms_by_user table written before it.
+    */
+  val tables: Seq[PostTable] = Seq(
+    PostTable("rooms_by_user", Destination.Cassandra,
+      Seq(memberKey, roomKey, messageKey, "user:cassandra"),
+      in => roomsByUser(in(memberKey), in(roomKey), in(messageKey), in("user:cassandra"))),
+    PostTable("p2p_room_by_users", Destination.Cassandra, Seq(roomKey, memberKey),
+      in => p2pLookup(in(roomKey), in(memberKey))),
+    PostTable("room_membership_lookup", Destination.Cassandra,
+      Seq(memberKey, "rooms_by_user"),
+      in => refreshMembershipLookup(membershipLookup(in(memberKey)), in("rooms_by_user"))),
+    PostTable("rooms_by_mongo", Destination.Cassandra, Seq(roomKey),
+      in => roomsByMongo(in(roomKey))),
+    PostTable("room_by_message", Destination.Cassandra, Seq(messageKey),
+      in => roomByMessage(in(messageKey))),
+    PostTable("organizations", Destination.Cassandra, Seq(roomKey),
+      in => Rules.organizations(in(roomKey))),
+    PostTable("docs_roles", Destination.Postgres, Seq("docs:postgres"),
+      in => docsRoles(in("docs:postgres"))))
 
   /** J8 — p2p_room_by_users: p2p rooms with exactly two participants emit
     * both (user_a, user_b, room) orderings (`orchestrator.py:1130-1233`).
@@ -84,4 +126,11 @@ object Denormalize {
     participants.select(col("user_id"), col("room_id"), col("joined_at"))
       .withColumn("last_message_at", lit(null).cast("timestamp"))
       .withColumn("is_pinned", lit(false))
+
+  /** U1 — docs_roles (`orchestrator.py:961-987`): one row per folder or file
+    * carrying a special role, read off the migrated docs table.
+    */
+  def docsRoles(docs: DataFrame): DataFrame =
+    docs.filter(col("special_role_id").isNotNull)
+      .select(col("mongo_id"), col("special_role_id").as("role_id"))
 }

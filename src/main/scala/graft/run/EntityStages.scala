@@ -8,10 +8,9 @@ import graft.operators.Relational
 import graft.transform.{DocsHierarchy, Projections, Rules}
 
 /** The catalog's 15 entity transforms as reusable [[Pipeline]] stages —
-  * the single description both the CLI (`graft.RunEtl`) and the demo drive
-  * (`graft.MigrationDemo`) run. Mirrors the reference's per-entity transform
-  * dispatch (`etl/etl_worker.py` via COLLECTION_MAPPINGS,
-  * `settings.py:138-258`).
+  * the single description the CLI (`graft.RunEtl`) runs. Mirrors the
+  * reference's per-entity transform dispatch (`etl/etl_worker.py` via
+  * COLLECTION_MAPPINGS, `settings.py:138-258`).
   */
 object EntityStages {
 
@@ -96,7 +95,7 @@ object EntityStages {
       DocsHierarchy.resolve(
         Rules.docsRules(Projections.docsPostgres(src),
           userDim = Some(dims("user").select(col("mongo_id"), col("id"))),
-          roleDim = Some(dims("roles").select(col("mongo_id"), col("id"))))).docs)),
+          roleDim = Some(dims("roles").select(col("mongo_id"), col("id"))))))),
     "live" -> ((src, dims) => Map(Destination.Postgres ->
       Relational.sequentialIds(
         Rules.liveRules(Projections.livePostgres(src),

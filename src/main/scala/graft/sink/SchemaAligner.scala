@@ -21,18 +21,4 @@ object SchemaAligner {
     }
     df.select(cols.toSeq: _*)
   }
-
-  /** Writer used by the hermetic build: parquet partitioned/sorted like the
-    * CQL primary key (SURVEY.md §2.1 S9/W4) — partition column ≙ partition
-    * key, `sortWithinPartitions` ≙ clustering order.
-    */
-  def writePartitioned(
-      df: DataFrame,
-      path: String,
-      partitionKey: Option[String] = None,
-      clusterBy: Seq[org.apache.spark.sql.Column] = Nil): Unit = {
-    val sorted = if (clusterBy.nonEmpty) df.sortWithinPartitions(clusterBy: _*) else df
-    val writer = sorted.write.mode("overwrite")
-    partitionKey.fold(writer)(k => writer.partitionBy(k)).parquet(path)
-  }
 }

@@ -12,16 +12,15 @@ import org.apache.spark.sql.functions._
   * path (`:778-786`), full_path = parent + '/' + name (`:839-845`), ids
   * assigned per level, each level's parent resolved against the accumulated
   * path→id map with miss→root (`:834-835`). Phase 2 — files left-join the
-  * final map, miss→0 (`:914-923`). Role relations from both phases union
-  * into docs_roles (`:961-987`, U1).
+  * final map, miss→0 (`:914-923`). The resolved docs keep
+  * `special_role_id`, from which [[graft.post.Denormalize.docsRoles]] reads
+  * docs_roles for both phases (`:961-987`, U1).
   *
   * Folder ids are minted with a global sequence — folders are dim-sized by
   * nature (path components, not corpus size), the one place W2 sequences
   * are allowed (SURVEY.md §7.4 risk 8).
   */
 object DocsHierarchy {
-
-  final case class Result(docs: DataFrame, docsRoles: DataFrame)
 
   /** One plan reads `docsRuled` once: folder ids come from a window over
     * the folder/file split, and folders (phase 1) and files (phase 2)
@@ -35,8 +34,7 @@ object DocsHierarchy {
     * @param docsRuled output of [[Rules.docsRules]] (keeps `_tmp_on_folder`,
     *                  and `special_role_id` when a role dim was supplied)
     */
-  def resolve(docsRuled: DataFrame): Result = {
-    val hasRole = docsRuled.columns.contains("special_role_id")
+  def resolve(docsRuled: DataFrame): DataFrame = {
     // F6 — folder/file partition (type already collapses fileType||type);
     // a row whose type is null is neither and is dropped
     val isFolder = col("type") === "FOLDER"
@@ -62,16 +60,6 @@ object DocsHierarchy {
       .withColumn("id", col("__folder_id")) // files keep sink-assigned ids
       .drop("fparent", "fpath", "__folder_id", "__p_path", "__p_id")
 
-    val docs = resolved.drop(docsRuled.columns.filter(_.startsWith("_tmp_")): _*)
-
-    // docs_roles from both phases (U1, `:961-987`)
-    val docsRoles =
-      if (hasRole)
-        resolved.filter(col("special_role_id").isNotNull)
-          .select(col("mongo_id"), col("special_role_id").as("role_id"))
-      else
-        docsRuled.sparkSession.emptyDataFrame
-
-    Result(docs, docsRoles)
+    resolved.drop(docsRuled.columns.filter(_.startsWith("_tmp_")): _*)
   }
 }

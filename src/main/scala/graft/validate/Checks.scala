@@ -8,7 +8,7 @@ import graft.operators.Relational
 
 /** The reference's 14-check validation suite
   * (`scripts/validate_migration.py`, SURVEY.md §3.3) as reusable DataFrame
-  * checks. Each returns a [[CheckResult]]; `runAll` is the
+  * checks. Each returns a [[CheckResult]]; `graft.Validate.run` is the
   * `MigrationValidator.run` equivalent.
   */
 final case class CheckResult(name: String, passed: Boolean, detail: String)
@@ -210,6 +210,4 @@ object Checks {
     val ok = criticalFailed.isEmpty && rate >= minPassRate
     (ok, summary + f"\nverdict: pass_rate=${rate * 100}%.1f%% critical_failures=${criticalFailed.size}")
   }
-
-  def runAll(checks: Seq[CheckResult]): (Boolean, String) = verdict(checks)
 }

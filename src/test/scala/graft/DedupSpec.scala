@@ -213,24 +213,12 @@ class DedupSpec extends SparkSpecBase {
       val txt = if (i % 3 == 0) s"${base.mkString(" ")} $sent" else base.mkString(" ")
       (i, txt)
     } :+ (31L, s"$sent $sent")).toDF("doc_id", "text")
-    val key = "spark.graft.substr.hashPrefilter"
-    val prev = spark.conf.getOption(key)
-    val (on, off) = try {
-      spark.conf.set(key, "true")
-      val a = Dedup.duplicatedSpans(docs, "doc_id", "text", k = 8)
-        .orderBy("doc_id").collect().toSeq
-      val ac = Dedup.removeDuplicatedSpans(docs, "doc_id", "text", k = 8)
-        .orderBy("doc_id").collect().toSeq
-      spark.conf.set(key, "false")
-      val b = Dedup.duplicatedSpans(docs, "doc_id", "text", k = 8)
-        .orderBy("doc_id").collect().toSeq
-      val bc = Dedup.removeDuplicatedSpans(docs, "doc_id", "text", k = 8)
-        .orderBy("doc_id").collect().toSeq
-      ((a, ac), (b, bc))
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
+    def arm(pre: Boolean) = (
+      Dedup.duplicatedSpans(docs, "doc_id", "text", k = 8, hashPrefilter = pre)
+        .orderBy("doc_id").collect().toSeq,
+      Dedup.removeDuplicatedSpans(docs, "doc_id", "text", k = 8, hashPrefilter = pre)
+        .orderBy("doc_id").collect().toSeq)
+    val (on, off) = (arm(pre = true), arm(pre = false))
     assert(on._1 === off._1)
     assert(on._2 === off._2)
     assert(on._1.nonEmpty) // the fixture really has duplicated spans

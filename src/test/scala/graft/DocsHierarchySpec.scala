@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.post.Denormalize
 import graft.transform.{DocsHierarchy, Projections, Rules}
 
 /** Two-phase hierarchical docs parity: level-ordered folder ids, parent
@@ -24,8 +25,8 @@ class DocsHierarchySpec extends SparkSpecBase {
   test("folders get level-ordered ids, parents resolve, files map with miss→root") {
     val roleDim = Seq(("ro9", 99L)).toDF("mongo_id", "id")
     val ruled = Rules.docsRules(Projections.docsPostgres(docsFixture()), roleDim = Some(roleDim))
-    val result = DocsHierarchy.resolve(ruled)
-    val docs = result.docs.orderBy("mongo_id").collect()
+    val resolved = DocsHierarchy.resolve(ruled)
+    val docs = resolved.orderBy("mongo_id").collect()
       .map(r => r.getAs[String]("mongo_id") ->
         (Option(r.getAs[java.lang.Long]("id")), r.getAs[Long]("onFolder"))).toMap
 
@@ -40,7 +41,7 @@ class DocsHierarchySpec extends SparkSpecBase {
     assert(docs("a1")._1.isEmpty) // files keep sink-assigned ids
 
     // docs_roles from a folder (phase 1) and a file (phase 2)
-    val roles = result.docsRoles.orderBy("mongo_id").collect()
+    val roles = Denormalize.docsRoles(resolved).orderBy("mongo_id").collect()
       .map(r => (r.getString(0), r.getLong(1))).toSeq
     assert(roles === Seq(("a3", 99L), ("f1", 99L)))
   }
