@@ -113,14 +113,6 @@ object Engine {
       shufflePartitions: Int = cpus(),
       appName: String = "graft"): SparkSession =
     build(Kind.Full, master, shufflePartitions, Some(appName))
-
-  /** Idempotent per-session setup for sessions we did not build (e.g. the
-    * driver's own Verify/Bench session): registers SQL functions.
-    */
-  def prepare(spark: SparkSession): SparkSession = {
-    GraftFunctions.register(spark)
-    spark
-  }
 }
 
 /** Catalyst extension point: injected when the session is built through

@@ -20,11 +20,12 @@ import graft.sources.{DocumentSource, JsonSource, ParquetSource}
   *
   * `--source` reads `<collection>.jsonl` (mongo-document shape) or
   * `<collection>.parquet` per collection. `--entities` runs a partial
-  * migration; FK parents are auto-included ([[EntityStages.closure]] — the
-  * hermetic stand-in for the reference's warm id-mapping cache). `--target`
+  * migration and must name at least one entity; FK parents are
+  * auto-included ([[EntityStages.closure]] — the hermetic stand-in for the
+  * reference's warm id-mapping cache). `--target`
   * restricts which destinations are LOADED (transforms still run, so dual
   * entities keep consistent ids — the reference's dry-run-per-destination
-  * behavior). `--batch-size` bounds rows per output file
+  * behavior). `--batch-size N` (N > 0) bounds rows per output file
   * (`spark.sql.files.maxRecordsPerFile`), the file-sink analog of the
   * reference's load batching. `--truncate` deletes the selected entities'
   * target directories first. `--validate` only checks that every selected
@@ -54,14 +55,20 @@ object RunEtl {
       case "--source" :: v :: t => loop(t, cfg.copy(sourceDir = v))
       case "--out" :: v :: t => loop(t, cfg.copy(outDir = v))
       case "--entities" :: v :: t =>
-        loop(t, cfg.copy(entities = cfg.entities ++ v.split(",").map(_.trim).filter(_.nonEmpty)))
+        val names = v.split(",").map(_.trim).filter(_.nonEmpty)
+        require(names.nonEmpty, s"--entities names no entity: '$v'")
+        loop(t, cfg.copy(entities = cfg.entities ++ names))
       case "--entity" :: v :: t => loop(t, cfg.copy(entities = cfg.entities :+ v))
       case "--target" :: v :: t =>
         require(Set("postgres", "cassandra", "both")(v), s"bad --target $v")
         loop(t, cfg.copy(target = v))
       case "--dry-run" :: t => loop(t, cfg.copy(dryRun = true))
       case "--truncate" :: t => loop(t, cfg.copy(truncate = true))
-      case "--batch-size" :: v :: t => loop(t, cfg.copy(batchSize = Some(v.toInt)))
+      case "--batch-size" :: v :: t =>
+        // Spark reads maxRecordsPerFile <= 0 as "no limit"
+        val n = v.toInt
+        require(n > 0, s"--batch-size must be > 0; got $v")
+        loop(t, cfg.copy(batchSize = Some(n)))
       case "--list-entities" :: t => loop(t, cfg.copy(listEntities = true))
       case "--validate" :: t => loop(t, cfg.copy(validateOnly = true))
       case other :: _ => throw new IllegalArgumentException(s"unknown argument: $other")

@@ -79,8 +79,8 @@ object RunTrainPrep {
       lmRefBroadcast: Boolean = false,
       // --lm-kn switches the SELF-TRAINED gate's smoothing from add-1 to
       // interpolated Kneser-Ney (the KenLM/CCNet family; --lm-kn-order
-      // picks bigram (2, default) or trigram (3) — KenLM deploys higher
-      // orders). Mutually exclusive with --lm-ref: the model-as-data
+      // picks the order, 2 (default) to 5). Mutually exclusive with
+      // --lm-ref: the model-as-data
       // shape carries no continuation counts
       lmKn: Boolean = false,
       lmKnOrder: Int = 2,

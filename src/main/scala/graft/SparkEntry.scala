@@ -1402,17 +1402,19 @@ object SparkEntry {
   // #4 — KenLM deploys order 4-5): q104's family climbed one order, with
   // KenLM's adjusted-count derivation (every lower-order statistic a TYPE
   // count over the trigram table). One fixed-operation-order IEEE
-  // probability expression mirrored literally in the oracle -------------
+  // probability expression mirrored literally in the oracle; the count
+  // column keeps its q106 name -------------------------------------------
   private def q106LmKn3(s: SparkSession, d: String): DataFrame =
     graft.operators.TextAnalysis
-      .trigramLmScoreKn(T(s, d, "documents"), "doc_id", "text")
+      .ngramLmScoreKn(T(s, d, "documents"), "doc_id", "text", order = 3)
+      .withColumnRenamed("n_ngrams", "n_trigrams")
       .orderBy("doc_id")
 
   // ---- interpolated Kneser-Ney at orders 4 and 5 (VERDICT r15 next #2 —
-  // the orders KenLM actually deploys): the generic adjusted-count chain
-  // (ngramLmScoreKn — one TYPE level per order, spec-pinned IEEE-identical
-  // to the q106 trigram form at order 3), each order's probability one
-  // fixed-operation-order expression mirrored literally in the oracle ---
+  // the orders KenLM actually deploys): the same adjusted-count chain as
+  // q106 (ngramLmScoreKn — one TYPE level per order), each order's
+  // probability one fixed-operation-order expression mirrored literally
+  // in the oracle ------------------------------------------------------
   private def q108LmKn4(s: SparkSession, d: String): DataFrame =
     graft.operators.TextAnalysis
       .ngramLmScoreKn(T(s, d, "documents"), "doc_id", "text", order = 4)

@@ -37,8 +37,9 @@ import graft.run.MetricsCollector
   * `SPARK_GRAFT_CPUS` cores: `stages` and `ab` on the Bench table (the
   * stages `graft.Bench` measures), `gen media` on the generator table,
   * everything else on the full engine session. `GRAFT_CONF="k=v;k=v"` sets
-  * extra session confs before the command runs (both arms of a conf-gated
-  * route from one build). Timed consumption is `queryExecution.toRdd
+  * extra session confs before the command runs (e.g. a lower
+  * `spark.sql.autoBroadcastJoinThreshold`, which moves the statistic the
+  * KN window-fuse route reads). Timed consumption is `queryExecution.toRdd
   * .count()` as in `Bench.run`: a stacked count aggregate would let the
   * optimizer prune unevaluated projections.
   */

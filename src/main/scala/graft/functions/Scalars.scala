@@ -88,10 +88,4 @@ object Scalars {
       when(deleted, current_timestamp()).as("deleted_at")
     )
   }
-
-  /** Null-tolerant boolean: Mongo's missing-field semantics — absent means
-    * "not false" (SURVEY.md §2.3 F1 note).
-    */
-  def notFalse(c: Column): Column = c.isNull || c =!= false
-  def isTrueOrMissing(c: Column): Column = coalesce(c, lit(true))
 }

@@ -26,8 +26,9 @@ object Strategy {
 
 /** One source collection and its migration contract — mirrors the entries of
   * the reference's COLLECTION_MAPPINGS (`etl/config/settings.py:138-258`):
-  * topological `order` (parents before children), per-destination target
-  * table names, and whether the entity is a many-to-many link table. The
+  * topological `order` (parents before children), the Cassandra table
+  * whose CQL layout the entity is written in, and whether the entity is
+  * a many-to-many link table. The
   * post-migration tables derived from entities are listed in
   * [[graft.post.Denormalize.tables]].
   */
@@ -36,7 +37,6 @@ final case class EntityConfig(
     mongo: String,
     order: Int,
     strategy: Strategy,
-    postgresTable: Option[String] = None,
     cassandraTable: Option[String] = None,
     isManyToMany: Boolean = false)
 
@@ -47,29 +47,23 @@ object Entities {
     * matters! Parent entities must be migrated before children").
     */
   val all: Seq[EntityConfig] = Seq(
-    EntityConfig("roles", "roles", 1, Dual,
-      postgresTable = Some("role"), cassandraTable = Some("role")),
-    EntityConfig("province", "provinces", 2, PostgresOnly, postgresTable = Some("province")),
-    EntityConfig("municipality", "municipalities", 3, PostgresOnly,
-      postgresTable = Some("municipality")),
-    EntityConfig("parroquia", "parroquias", 4, PostgresOnly, postgresTable = Some("parroquia")),
-    EntityConfig("profession", "professions", 5, PostgresOnly,
-      postgresTable = Some("profession")),
-    EntityConfig("entity", "entities", 6, PostgresOnly, postgresTable = Some("entities")),
-    EntityConfig("user", "users", 7, Dual,
-      postgresTable = Some("user"), cassandraTable = Some("users")),
-    EntityConfig("channel", "channels", 8, PostgresOnly, postgresTable = Some("channel")),
-    EntityConfig("docs", "docs", 9, PostgresOnly, postgresTable = Some("docs")),
-    EntityConfig("live", "lives", 10, PostgresOnly, postgresTable = Some("live")),
+    EntityConfig("roles", "roles", 1, Dual, cassandraTable = Some("role")),
+    EntityConfig("province", "provinces", 2, PostgresOnly),
+    EntityConfig("municipality", "municipalities", 3, PostgresOnly),
+    EntityConfig("parroquia", "parroquias", 4, PostgresOnly),
+    EntityConfig("profession", "professions", 5, PostgresOnly),
+    EntityConfig("entity", "entities", 6, PostgresOnly),
+    EntityConfig("user", "users", 7, Dual, cassandraTable = Some("users")),
+    EntityConfig("channel", "channels", 8, PostgresOnly),
+    EntityConfig("docs", "docs", 9, PostgresOnly),
+    EntityConfig("live", "lives", 10, PostgresOnly),
     EntityConfig("room", "rooms", 11, CassandraOnly, cassandraTable = Some("room_details")),
     EntityConfig("message", "messages", 12, CassandraOnly,
       cassandraTable = Some("messages_by_room")),
     EntityConfig("room_member", "roommembers", 13, CassandraOnly,
       cassandraTable = Some("participants_by_room")),
-    EntityConfig("profession_user", "users", 14, PostgresOnly,
-      postgresTable = Some("profession_user"), isManyToMany = true),
-    EntityConfig("entities_user", "users", 15, PostgresOnly,
-      postgresTable = Some("entities_user"), isManyToMany = true)
+    EntityConfig("profession_user", "users", 14, PostgresOnly, isManyToMany = true),
+    EntityConfig("entities_user", "users", 15, PostgresOnly, isManyToMany = true)
   )
 
   val byName: Map[String, EntityConfig] = all.map(e => e.name -> e).toMap

@@ -329,10 +329,6 @@ object Dedup {
     */
   private[graft] def guardedBandPairs(banded: DataFrame, maxBucketSize: Int): DataFrame = {
     import Ckpt.CkptOps
-    val overRaw = banded.groupBy("band", "bucket")
-      .agg(count(lit(1)).as("__n"))
-      .filter(col("__n") > maxBucketSize)
-      .select("band", "bucket")
     // Build-time emptiness probe (r17 — the sem pair-stage / q67 inert-
     // branch precedent): when NO bucket exceeds the cap, the anti-join
     // keeps every row and the whole star/rep/sub-split subtree is provably
@@ -351,26 +347,21 @@ object Dedup {
     // identically to an absent one). Checkpointing `over` also lets the
     // kept path's anti- and semi-joins share ONE aggregation pass instead
     // of relying on AQE exchange reuse.
-    val pruneEmpty = banded.sparkSession.conf
-      .get("spark.graft.lsh.pruneGuardPath", "true").toBoolean
-    val over = if (pruneEmpty) overRaw.lazySerCkpt else overRaw
-    if (pruneEmpty && over.isEmpty) {
-      val allThin = banded.select("id", "band", "bucket")
-      val pa = allThin.toDF("id1", "band", "bucket")
-      val pb = allThin.toDF("id2", "band", "bucket")
-      return pa.join(pb, Seq("band", "bucket"))
+    val over = banded.groupBy("band", "bucket")
+      .agg(count(lit(1)).as("__n"))
+      .filter(col("__n") > maxBucketSize)
+      .select("band", "bucket")
+      .lazySerCkpt
+    val thin = banded.select("id", "band", "bucket")
+    // (id, key...) rows → every id1 < id2 pair sharing the key
+    def selfPairs(rows: DataFrame, keys: Seq[String] = Seq("band", "bucket")): DataFrame =
+      rows.toDF("id1" +: keys: _*).join(rows.toDF("id2" +: keys: _*), keys)
         .filter(col("id1") < col("id2"))
         .select("id1", "id2")
-    }
-    val thin = banded.select("id", "band", "bucket")
+    if (over.isEmpty) return selfPairs(thin)
     // select by NAME after the USING join — it reorders keys to the front
-    val small = thin.join(over, Seq("band", "bucket"), "left_anti")
-      .select("id", "band", "bucket")
-    val a = small.toDF("id1", "band", "bucket")
-    val b = small.toDF("id2", "band", "bucket")
-    val normal = a.join(b, Seq("band", "bucket"))
-      .filter(col("id1") < col("id2"))
-      .select("id1", "id2")
+    val normal = selfPairs(thin.join(over, Seq("band", "bucket"), "left_anti")
+      .select("id", "band", "bucket"))
 
     // Oversized buckets: thin rows only, linear joins throughout. The fp
     // groupBy has map-side partials (min/count), so even a 10^8-copy group
@@ -388,13 +379,8 @@ object Dedup {
       .observe(s"lsh_bucket_guard_${obsId}_star", count(lit(1)).as("star_pairs"))
     val repCounts = groups.groupBy("band", "bucket").agg(count(lit(1)).as("__r"))
     val repsFlagged = groups.join(repCounts, Seq("band", "bucket"))
-    val repSmall = repsFlagged.filter(col("__r") <= maxBucketSize)
-      .select(col("rep"), col("band"), col("bucket"))
-    val ra = repSmall.toDF("id1", "band", "bucket")
-    val rb = repSmall.toDF("id2", "band", "bucket")
-    val repPairs = ra.join(rb, Seq("band", "bucket"))
-      .filter(col("id1") < col("id2"))
-      .select("id1", "id2")
+    val repPairs = selfPairs(repsFlagged.filter(col("__r") <= maxBucketSize)
+      .select(col("rep"), col("band"), col("bucket")))
       .observe(s"lsh_bucket_guard_${obsId}_rep", count(lit(1)).as("rep_pairs"))
 
     // Sub-split: reps of still-oversized buckets re-band on the extra
@@ -414,13 +400,9 @@ object Dedup {
         // aggregates are not allowed in observed metrics)
         sum(when(col("__s") > maxBucketSize, lit(1.0) / col("__s")).otherwise(0.0))
           .as("dropped_sub_buckets"))
-    val subSmall = subFlagged.filter(col("__s") <= maxBucketSize)
-      .select(col("rep"), col("band"), col("bucket"), col("sub"))
-    val sa = subSmall.toDF("id1", "band", "bucket", "sub")
-    val sb = subSmall.toDF("id2", "band", "bucket", "sub")
-    val subPairs = sa.join(sb, Seq("band", "bucket", "sub"))
-      .filter(col("id1") < col("id2"))
-      .select("id1", "id2")
+    val subPairs = selfPairs(subFlagged.filter(col("__s") <= maxBucketSize)
+      .select(col("rep"), col("band"), col("bucket"), col("sub")),
+      Seq("band", "bucket", "sub"))
 
     normal.unionByName(stars).unionByName(repPairs).unionByName(subPairs)
   }
@@ -1922,19 +1904,14 @@ object Dedup {
     // stage wall is 0.84 s. One K-row scalar job decides (it materializes
     // the assignment checkpoint that the pair aggregation was about to
     // materialize anyway — no extra corpus pass on either route); cells
-    // over the cap keep today's union exactly. Conf-gated for A/B
-    // (dev/r17/sem_prune_ab.log); the all-zero guard disclosure of an
+    // over the cap keep today's union exactly (A/B:
+    // dev/r17/sem_prune_ab.log); the all-zero guard disclosure of an
     // empty join path reads identically to an absent one (reports are
     // nonzero-only — the q67 rule).
-    val pruneEmpty = asg.sparkSession.conf
-      .get("spark.graft.sem.pruneJoinPath", "true").toBoolean
-    val maxSz =
-      if (pruneEmpty)
-        sizes.agg(max(col("__csz"))).first() match {
-          case r if r.isNullAt(0) => 0L
-          case r => r.getLong(0)
-        }
-      else Long.MaxValue
+    val maxSz = sizes.agg(max(col("__csz"))).first() match {
+      case r if r.isNullAt(0) => 0L
+      case r => r.getLong(0)
+    }
     // the native emission returns two PRIMITIVE long arrays (id1s, id2s);
     // posexplode one and index the other — no per-pair struct rows exist
     // anywhere between the eval and the final thin (id1, id2) projection

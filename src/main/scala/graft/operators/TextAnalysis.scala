@@ -51,14 +51,6 @@ object TextAnalysis {
     length(regexp_replace(text, "\\s+", "")).cast("double") /
       greatest(tokenCount(text), lit(1)).cast("double")
 
-  /** Stopword hit ratio against a fixed marker list. */
-  def stopwordRatio(text: Column, stopwords: Seq[String]): Column = {
-    val words = split(lower(trim(text)), "\\s+")
-    val hits = size(org.apache.spark.sql.functions.filter(
-      words, w => w.isin(stopwords.map(x => x: Any): _*)))
-    hits.cast("double") / greatest(size(words), lit(1)).cast("double")
-  }
-
   /** Composite quality score in [0,1]: weighted blend of signals. Weights
     * are exact binary fractions so the arithmetic is portable.
     *
@@ -422,11 +414,10 @@ object TextAnalysis {
     * scale (100×: q109 47.5 vs 64.8, q108 42.9 vs 50.3 s warm,
     * lmfuse_ab_100x_q108.log): 9 statistic joins of the per-doc frame
     * collapse to 4, which is 5 fewer big-frame shuffles once the type
-    * tables outgrow broadcast. So ONLY [[ngramLmScoreKn]] (orders 4-5)
-    * reads this gate; the order-2/3 scorers keep the join chain
-    * unconditionally.
+    * tables outgrow broadcast. So ONLY [[ngramLmScoreKn]] at orders 4-5
+    * reads this gate; orders 2-3 keep the join chain unconditionally.
     *
-    * Default `auto` (r17): at the bench SFs the replaced joins are
+    * The rule (r17): at the bench SFs the replaced joins are
     * broadcasts, so the fuse has nothing to save — fused vs joined
     * measures as a WASH inside the harness's arm-order bias at both 32
     * and 8 cores (lmfuse_ab.log q108 3.69 vs 3.72;
@@ -442,21 +433,14 @@ object TextAnalysis {
     * 57 MB (100×) → fused (q108 42.9 vs 50.3, q109 47.5 vs 64.8 s).
     * Absent/unknown stats (checkpointed inputs report the conservative
     * default) and a disabled broadcast threshold both resolve to FUSE —
-    * the scale-safe polarity. `true`/`false` force an arm for A/Bs and
-    * plan dumps; any other value throws IllegalArgumentException (a
-    * misspelled forced arm must not silently measure `auto`).
+    * the scale-safe polarity. The threshold is the one input a spec or an
+    * A/B varies to reach either arm.
     */
-  private def lmWindowFuse(docs: org.apache.spark.sql.DataFrame): Boolean =
-    docs.sparkSession.conf.get("spark.graft.lm.windowFuse", "auto") match {
-      case "true" => true
-      case "false" => false
-      case "auto" =>
-        val in = docs.queryExecution.optimizedPlan.stats.sizeInBytes
-        val thr = docs.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
-        thr <= 0 || in > thr
-      case other => throw new IllegalArgumentException(
-        s"spark.graft.lm.windowFuse must be auto, true or false; got '$other'")
-    }
+  private def lmWindowFuse(docs: org.apache.spark.sql.DataFrame): Boolean = {
+    val in = docs.queryExecution.optimizedPlan.stats.sizeInBytes
+    val thr = docs.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    thr <= 0 || in > thr
+  }
 
   def bigramLmScore(
       docs: org.apache.spark.sql.DataFrame,
@@ -692,151 +676,45 @@ object TextAnalysis {
         round(exp(-col("__slp").cast("double") / col("__nb")), 6).as("ppl"))
   }
 
-  /** Per-doc adjacent-TRIGRAM counts over a (__did, __t) tokenized frame —
-    * [[docBigramCounts]] one order up: the token array zipped against its
-    * own two tails (no per-doc window, no positional self-join), positions
-    * with any empty token filtered, collapsed immediately to
-    * (__did, __p1, __p2, __w, __cnt).
-    */
-  private def docTrigramCounts(
-      base: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    base
-      .select(col("__did"), explode(expr(
-        """zip_with(
-          |  zip_with(slice(__t, 1, greatest(size(__t) - 2, 0)),
-          |           slice(__t, 2, greatest(size(__t) - 2, 0)),
-          |           (a, b) -> struct(a AS p1, b AS p2)),
-          |  slice(__t, 3, greatest(size(__t) - 2, 0)),
-          |  (x, c) -> struct(x.p1 AS p1, x.p2 AS p2, c AS w))""".stripMargin)).as("__tg"))
-      .select(col("__did"), col("__tg.p1").as("__p1"), col("__tg.p2").as("__p2"),
-        col("__tg.w").as("__w"))
-      .filter(col("__p1") =!= "" && col("__p2") =!= "" && col("__w") =!= "")
-      .groupBy(col("__did"), col("__p1"), col("__p2"), col("__w"))
-      .agg(count(lit(1)).as("__cnt"))
-
-  /** Interpolated Kneser-Ney TRIGRAM perplexity (VERDICT r14 next #4 —
-    * KenLM deploys order 4-5; this is [[bigramLmScoreKn]] extended one
-    * order with KenLM's adjusted-count derivation, where every lower-order
-    * statistic is a TYPE count over the trigram table rather than a raw
-    * occurrence count):
-    *
-    *   p(w|p1,p2)  = ((c(p1p2w) − D) + D · N1+(p1p2·) · p_mid(w|p2)) / c(p1p2·)
-    *   p_mid(w|p2) = ((N1+(·p2w) − D) + D · Nmid(p2) · p_cont(w)) / N1+(·p2·)
-    *   p_cont(w)   = N1+adj(·w) / N1+adj(··)
-    *
-    * with N1+(·p2w) = |{p1 : c(p1,p2,w) > 0}| (the adjusted bigram count),
-    * N1+(·p2·) its sum over w, Nmid(p2) = |{w : N1+(·p2w) > 0}|,
-    * N1+adj(·w) = |{p2 : N1+(·p2w) > 0}|, and N1+adj(··) the distinct
-    * adjusted-bigram type count. Self-trained on the scored corpus, so
-    * every scored trigram has c ≥ 1, every adjusted count ≥ 1, and
-    * D < 1 keeps every term positive — no OOV branch.
-    *
-    * Same engine-portability discipline as the bigram order: `discount`
-    * must be exactly binary-representable (0.75 is); the probability is
-    * ONE fixed-operation-order IEEE expression mirrored literally in the
-    * q106 SQL; ln → round-6 → decimal(18,6); exact per-doc sums; unrounded
-    * cross-entropy quotient; round-6 ppl.
-    *
-    * Scale shape: one tokenize pass collapsed to per-doc
-    * (p1, p2, w, cnt); the model is four aggregations of the trigram type
-    * table (keyed (p1,p2), (p2,w), (p2), (w) — each a single shuffle of a
-    * types-sized frame); scoring joins shuffle on those same keys, and the
-    * one global scalar N1+adj(··) broadcasts. Exactly two shuffles more
-    * than the bigram order — the per-order cost of climbing the KN
-    * hierarchy.
-    */
-  def trigramLmScoreKn(
-      docs: org.apache.spark.sql.DataFrame,
-      idCol: String,
-      textCol: String,
-      discount: Double = 0.75): org.apache.spark.sql.DataFrame = {
-    require(discount > 0 && discount < 1,
-      s"discount must be in (0, 1); got $discount")
-    val id = col(idCol)
-    val base = tokenizedBase(docs, id, textCol)
-    val tri = docTrigramCounts(base).lazySerCkpt
-    val triCounts = tri.groupBy(col("__p1"), col("__p2"), col("__w"))
-      .agg(sum(col("__cnt")).as("__c"))
-      .lazySerCkpt
-    val ctx12 = triCounts.groupBy(col("__p1"), col("__p2"))
-      .agg(sum(col("__c")).as("__cc"), count(lit(1)).as("__n1p"))
-    // the adjusted (KenLM "counting contexts") bigram level: one (p2, w)
-    // type row per distinct left-context set, then its own context/
-    // continuation statistics
-    val mid = triCounts.groupBy(col("__p2"), col("__w"))
-      .agg(count(lit(1)).as("__n2"))
-      .lazySerCkpt
-    val ctxMid = mid.groupBy(col("__p2"))
-      .agg(sum(col("__n2")).as("__ccmid"), count(lit(1)).as("__nmid"))
-    val contW = mid.groupBy(col("__w")).agg(count(lit(1)).as("__n1w"))
-    val n1all = mid.agg(count(lit(1)).as("__n1all"))
-    val d = lit(discount)
-    // per-doc join chain kept over TYPE-level scoring — measured and
-    // rejected, see bigramLmScore's shape note (dev/r16b/lmtype_ab.log).
-    // r17: window-fusing the statistics into each level's type table also
-    // measured and REJECTED at order 3 — it loses at sf0.1 (3.74 fused vs
-    // 2.48, dev/r17/lmfuse_ab.log) AND at 100× (37.4 vs 30.6,
-    // dev/r17/lmfuse_ab_100x.log): with only two levels the join chain is
-    // shallow enough that broadcast/SMJ probes stay cheaper than full
-    // type-table window sorts. The 4-5-gram chain is where fusing wins —
-    // see ngramLmScoreKn.
-    val scored = tri
-      .join(triCounts, Seq("__p1", "__p2", "__w"))
-      .join(ctx12, Seq("__p1", "__p2"))
-      .join(mid, Seq("__p2", "__w"))
-      .join(ctxMid, Seq("__p2"))
-      .join(contW, Seq("__w"))
-      .crossJoin(broadcast(n1all))
-      // FIXED operation order, mirrored literally in the q106 SQL:
-      // ((c−D) + D·n1p·(((n2−D) + D·nmid·(n1w/n1all))/ccmid))/cc — every
-      // intermediate is the same IEEE double in both engines
-      .withColumn("__lp",
-        round(log(
-          ((col("__c") - d) + d * col("__n1p") *
-            (((col("__n2") - d) + d * col("__nmid") * (col("__n1w") / col("__n1all"))) /
-              col("__ccmid"))) / col("__cc")), 6)
-          .cast("decimal(18,6)"))
-      .groupBy(col("__did"))
-      .agg(sum(col("__cnt")).as("__nb"), sum(col("__cnt") * col("__lp")).as("__slp"))
-    docs
-      .select(id)
-      .join(scored, id === col("__did"), "left")
-      .select(id,
-        coalesce(col("__nb"), lit(0L)).as("n_trigrams"),
-        (-col("__slp").cast("double") / col("__nb")).as("cross_entropy"),
-        round(exp(-col("__slp").cast("double") / col("__nb")), 6).as("ppl"))
-  }
-
-  /** Interpolated Kneser-Ney at ANY order 3-5 (VERDICT r15 next #2 —
-    * KenLM deploys order 4-5): [[trigramLmScoreKn]]'s derivation chain
-    * extended mechanically, one adjusted-count TYPE level per order.
-    * Level `order` holds raw n-gram counts c(g0..g_{n-1}) with context
-    * sums/type-counts over (g0..g_{n-2}); each adjusted level k (n-1 down
-    * to 2) is the TYPE count of the level above grouped on its rightmost
-    * k columns (KenLM "counting contexts"), with its own context
+  /** Interpolated Kneser-Ney at orders 3-5 (VERDICT r14 next #4, r15
+    * next #2 — KenLM deploys order 4-5): [[bigramLmScoreKn]] climbed with
+    * KenLM's adjusted-count derivation, where every lower-order statistic
+    * is a TYPE count over the level above rather than a raw occurrence
+    * count. Level `order` holds raw n-gram counts c(g0..g_{n-1}) with
+    * context sums/type-counts over (g0..g_{n-2}); each adjusted level k
+    * (n-1 down to 2) is the TYPE count of the level above grouped on its
+    * rightmost k columns (KenLM "counting contexts"), with its own context
     * sum/type-count; the unigram level is the type count of level 2 plus
     * one global scalar. The probability recursion, in ONE fixed operation
-    * order mirrored literally in the q108/q109 SQL (identical to the
-    * pinned trigram form at every level — `((a_k − D) + D·nctx_k·p_{k-1})
-    * / cc_k`, innermost `a1/total`):
+    * order mirrored literally in the q106/q108/q109 SQL
+    * (`((a_k − D) + D·nctx_k·p_{k-1}) / cc_k`, innermost `a1/total`):
     *
     *   p_1(w)        = a1(w) / total
     *   p_k(w | ctx)  = ((a_k − D) + D · N1+_k(ctx·) · p_{k-1}) / Σ_w a_k
     *   p_n(w | ctx)  = ((c − D) + D · N1+(ctx·) · p_{n-1}) / c(ctx·)
     *
+    * At order 3: p(w|p1,p2) = ((c(p1p2w) − D) + D · N1+(p1p2·) ·
+    * p_mid(w|p2)) / c(p1p2·), with the adjusted bigram count
+    * N1+(·p2w) = |{p1 : c(p1,p2,w) > 0}| feeding p_mid.
+    *
     * Self-trained on the scored corpus: every scored n-gram has c ≥ 1,
     * every adjusted count ≥ 1, D < 1 keeps all terms positive — no OOV
-    * branch. At order 3 this is IEEE-identical to [[trigramLmScoreKn]]
-    * (spec-pinned, modulo the count column's name), which is itself
-    * hash-pinned by the q106 oracle — the generic chain inherits the
-    * per-order exactness discipline.
+    * branch. `discount` must be exactly binary-representable (0.75 is);
+    * ln → round-6 → decimal(18,6), exact per-doc sums, unrounded
+    * cross-entropy quotient, round-6 ppl — the q92 discipline, hash-pinned
+    * by the q106 (order 3), q108 and q109 oracles. The count column is
+    * `n_ngrams` at every order.
     *
     * Scale shape: one tokenize pass collapsed to per-doc
     * (g0..g_{n-1}, cnt); the model is 2(n−1) aggregations of the n-gram
     * TYPE table, each one shuffle of a types-sized frame on a suffix key;
     * scoring joins shuffle on those same keys; the one global scalar
     * broadcasts. Exactly two shuffles per order climbed — the measured
-    * per-order cost of the KN hierarchy.
+    * per-order cost of the KN hierarchy. Orders 4-5 window-fuse the
+    * context statistics when [[lmWindowFuse]] says so; order 3 always
+    * keeps the join chain, where the fuse measured as a loss at both
+    * sf0.1 and 100× (q106 3.74 vs 2.48 s, 37.4 vs 30.6 s,
+    * dev/r17/lmfuse_ab.log, lmfuse_ab_100x.log).
     */
   def ngramLmScoreKn(
       docs: org.apache.spark.sql.DataFrame,
@@ -870,7 +748,7 @@ object TextAnalysis {
       .lazySerCkpt
     val counts = ng.groupBy(gcols.map(col): _*).agg(sum(col("__cnt")).as("__c"))
       .lazySerCkpt
-    val fuse = lmWindowFuse(docs)
+    val fuse = n >= 4 && lmWindowFuse(docs)
     // adjusted levels, each the type count of the level above
     val adj = scala.collection.mutable.Map.empty[Int, org.apache.spark.sql.DataFrame]
     var above = counts

@@ -153,8 +153,8 @@ object TrainPrep {
       lmModel: Option[TextAnalysis.BigramLm] = None,
       lmBroadcastModel: Boolean = false,
       // Kneser-Ney smoothing for the SELF-TRAINED gate (the KenLM/CCNet
-      // smoothing family — TextAnalysis.bigramLmScoreKn /
-      // .trigramLmScoreKn per lmKnOrder). Self-trained only: the
+      // smoothing family — TextAnalysis.bigramLmScoreKn at order 2,
+      // .ngramLmScoreKn at 3-5). Self-trained only: the
       // model-as-data shape (lmModel) carries no continuation counts, so
       // the two knobs are mutually exclusive by require below.
       lmKn: Boolean = false,
@@ -243,10 +243,8 @@ object TrainPrep {
         val scoredDf = lmModel match {
           case Some(m) => TextAnalysis.bigramLmScoreWith(
             semKept, idCol, textCol, m, broadcastModel = lmBroadcastModel)
-          case None if lmKn && lmKnOrder >= 4 =>
+          case None if lmKn && lmKnOrder >= 3 =>
             TextAnalysis.ngramLmScoreKn(semKept, idCol, textCol, lmKnOrder)
-          case None if lmKn && lmKnOrder == 3 =>
-            TextAnalysis.trigramLmScoreKn(semKept, idCol, textCol)
           case None if lmKn => TextAnalysis.bigramLmScoreKn(semKept, idCol, textCol)
           case None => TextAnalysis.bigramLmScore(semKept, idCol, textCol)
         }

@@ -14,8 +14,6 @@ import graft.transform.{DocsHierarchy, Projections, Rules}
   */
 object EntityStages {
 
-  type Stage = (DataFrame, Map[String, DataFrame]) => Map[Destination, DataFrame]
-
   /** FK dependencies between entities (who needs whose dim to resolve ids).
     * The reference satisfies these from its warm id-mapping cache
     * (`orchestrator.py:86-102`); hermetically the parent entity must be part
@@ -50,7 +48,7 @@ object EntityStages {
     dims("user:cassandra").select(col("mongo_id"), col("user_id"))
 
   /** All 15 stages keyed by catalog entity name. */
-  val all: Map[String, Stage] = Map(
+  val all: Map[String, Pipeline.Stage] = Map(
     "roles" -> ((src, _) => Map(
       Destination.Postgres -> Relational.sequentialIds(
         Projections.rolesPostgres(src), "mongo_id", "id"),

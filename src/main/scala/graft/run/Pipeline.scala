@@ -39,23 +39,15 @@ final class Pipeline(
     dryRun: Boolean = false,
     collector: Option[MetricsCollector] = None) {
 
-  /** One per-entity stage: given (sourceDF, dims-so-far) produce the final
-    * frame per destination.
-    */
-  type Stage = (DataFrame, Map[String, DataFrame]) => Map[Destination, DataFrame]
-
   private val results = mutable.LinkedHashMap[(String, Destination), DataFrame]()
   private val metrics = mutable.LinkedHashMap[String, Long]()
   private val absent = mutable.ArrayBuffer.empty[String]
-
-  def dim(name: String, destination: Destination = Destination.Postgres): Option[DataFrame] =
-    results.get((name, destination))
 
   /** Run entities in topo order with the provided stage implementations.
     * Entities without a stage are skipped (partial runs, like the
     * reference's `--entities` flag).
     */
-  def run(stages: Map[String, Stage]): Map[(String, Destination), DataFrame] = {
+  def run(stages: Map[String, Pipeline.Stage]): Map[(String, Destination), DataFrame] = {
     // S13: per-entity row counts ride the background materialisation as
     // observed metrics — a separate count() per entity would be a second
     // full pass over every frame (×15 entities; prohibitive when a frame is
@@ -170,6 +162,11 @@ final class Pipeline(
 }
 
 object Pipeline {
+  /** One per-entity stage: given (sourceDF, dims-so-far) produce the final
+    * frame per destination.
+    */
+  type Stage = (DataFrame, Map[String, DataFrame]) => Map[Destination, DataFrame]
+
   /** Parquet-backed sink for the hermetic build (S6/S9 stand-in). */
   def parquetSink(baseDir: String): (String, Destination, DataFrame) => Unit =
     (entity, dest, df) =>

@@ -599,7 +599,8 @@ class DedupSpec extends SparkSpecBase {
   test("guardedBandPairs empty-guard pruning: pruned (no oversized bucket) and legacy " +
       "plans emit identical pairs; an oversized bucket keeps the guard (r17 gate)") {
     // regime 1: every bucket under the cap — the probe prunes the guard
-    // subtree and the plain self-join must equal the legacy union shape
+    // subtree; the plain self-join must emit exactly the pairs of the
+    // unpruned plan, which are the within-bucket pairs (no row is oversized)
     val small = ((0L until 5L).map(i => (i, 1000L + i, 0, "a", 0L)) ++
       (10L until 13L).map(i => (i, 1000L + i, 1, "b", 0L)))
       .toDF("id", "fp", "band", "bucket", "sub")
@@ -608,22 +609,17 @@ class DedupSpec extends SparkSpecBase {
     val mixed = ((0L until 5L).map(i => (i, 1000L + i, 0, "a", 0L)) ++
       (100L until 112L).map(i => (i, 555L, 0, "dup", 0L)))
       .toDF("id", "fp", "band", "bucket", "sub")
-    val key = "spark.graft.lsh.pruneGuardPath"
-    val prev = spark.conf.getOption(key)
-    def run(df: org.apache.spark.sql.DataFrame, cap: Int, prune: Boolean) = {
-      spark.conf.set(key, prune.toString)
+    def run(df: org.apache.spark.sql.DataFrame, cap: Int) =
       Dedup.guardedBandPairs(df, cap).collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
-    }
-    try {
-      assert(run(small, 8, prune = true) === run(small, 8, prune = false))
-      assert(run(small, 8, prune = true).size === 10 + 3)
-      assert(run(mixed, 8, prune = true) === run(mixed, 8, prune = false))
-      assert(run(mixed, 8, prune = true).contains((100L, 101L))) // star fired
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
+    def within(ids: Seq[Long]) = (for (a <- ids; b <- ids if a < b) yield (a, b)).toSet
+    val bucketA = within(0L until 5L)
+    assert(run(small, 8) === bucketA ++ within(10L until 13L))
+    assert(run(small, 8).size === 10 + 3)
+    // the 12 one-fp replicas in "dup" star-collapse onto rep 100; one rep
+    // is under the cap, so no rep pair and no sub-split fires
+    assert(run(mixed, 8) === bucketA ++ (101L until 112L).map(i => (100L, i)))
+    assert(run(mixed, 8).contains((100L, 101L))) // star fired
   }
 
   test("honest >4096-distinct-fp bucket at the DEFAULT threshold sub-splits, zero drops") {
@@ -1047,33 +1043,27 @@ class DedupSpec extends SparkSpecBase {
 
   test("semDedup join-path pruning: pruned (all cells under the local cap) " +
       "and legacy-union plans keep identical survivors (r17 gate)") {
-    // mixed geometry: two cells with near-dup clusters, one singleton cell
-    // — every cell under SemLocalPairMaxCell, so the default route prunes
-    // the banded join subtree; the conf forces the legacy union shape and
-    // both must agree row-for-row. A 30-replica run under a tiny
-    // maxCellSize also exercises the probe choosing the UNION route (the
-    // oversized-cell spec above pins that regime's survivors).
+    // mixed geometry: two cells with near-dup clusters — every cell under
+    // SemLocalPairMaxCell, so the default route prunes the banded join
+    // subtree. Its pairs must equal the join path's (localPairMaxCell = 0)
+    // pair-for-pair, and so must the union route's (localPairMaxCell = 2:
+    // both 3-member cells go through the join path inside the union);
+    // identical pairs over one assignment give identical survivors.
     val cents = Seq((0, Seq(1f, 0f)), (1, Seq(0f, 1f))).toDF("centroid_id", "cvec")
     val emb = Seq(
       (1L, Array(1f, 0.1f)), (2L, Array(1f, 0.12f)), (3L, Array(1f, 0.5f)),
       (4L, Array(0.1f, 1f)), (5L, Array(0.12f, 1f)), (6L, Array(0.9f, 0.95f)))
       .toDF("vec_id", "embedding")
-    val key = "spark.graft.sem.pruneJoinPath"
-    val prev = spark.conf.getOption(key)
-    val (pruned, legacy) = try {
-      spark.conf.set(key, "true")
-      val a = Dedup.semDedup(emb, "vec_id", "embedding", cents, threshold = 0.95)
-        .orderBy("vec_id").collect().toSeq
-      spark.conf.set(key, "false")
-      val b = Dedup.semDedup(emb, "vec_id", "embedding", cents, threshold = 0.95)
-        .orderBy("vec_id").collect().toSeq
-      (a, b)
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-    assert(pruned === legacy)
-    assert(pruned.nonEmpty && pruned.size < 6) // the near-dup pairs really fired
+    val asg = Dedup.semAssign(emb, "vec_id", "embedding", cents)
+    def pairsOf(cap: Int) = Dedup
+      .semPairsFromAssignHook(asg, 0.95, localPairMaxCell = cap)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val pruned = pairsOf(Dedup.SemLocalPairMaxCell)
+    assert(pruned === pairsOf(0))
+    assert(pruned === pairsOf(2))
+    val survivors = Dedup.semDedup(emb, "vec_id", "embedding", cents, threshold = 0.95)
+      .collect()
+    assert(survivors.nonEmpty && survivors.length < 6) // the near-dup pairs really fired
   }
 
   test("semDedupPairs shuffles thin (id, fp, cell) rows, never vectors") {

@@ -304,6 +304,21 @@ class EntityPipelineSpec extends SparkSpecBase {
     assert(!okBad, "--validate must fail when a selected source collection is missing")
   }
 
+  test("CLI parse: mistyped values throw instead of running something else") {
+    def parse(args: String*) = RunEtl.parse(Seq("--source", "s", "--out", "o") ++ args)
+    assert(parse("--batch-size", "5").batchSize === Some(5))
+    assert(parse("--entities", "roles, province").entities === Seq("roles", "province"))
+    // Spark reads maxRecordsPerFile <= 0 as "no limit": batching would be off
+    for (n <- Seq("0", "-3", "x"))
+      intercept[IllegalArgumentException](parse("--batch-size", n))
+    // an --entities list naming nothing would otherwise run all 15 entities
+    for (v <- Seq("", ",", " , "))
+      intercept[IllegalArgumentException](parse("--entities", v))
+    intercept[IllegalArgumentException](parse("--entities", "roles,nope"))
+    intercept[IllegalArgumentException](parse("--target", "mysql"))
+    intercept[IllegalArgumentException](parse("--bogus"))
+  }
+
   test("CLI cassandra target writes entities in their CQL layout (clustering-ordered)") {
     val srcDir = java.nio.file.Files.createTempDirectory("graft-cql-src")
     def jsonl(name: String, lines: String*): Unit =

@@ -24,7 +24,7 @@ class PipelineSpec extends SparkSpecBase {
     */
   private val chain = Seq("roles", "province", "municipality", "parroquia", "user", "channel")
 
-  private def stages(onStage: String => Unit = _ => ()): Map[String, Pipeline#Stage] =
+  private def stages(onStage: String => Unit = _ => ()): Map[String, Pipeline.Stage] =
     chain.map { e =>
       e -> ((src: DataFrame, dims: Map[String, DataFrame]) => {
         onStage(e)
@@ -110,11 +110,11 @@ class PipelineSpec extends SparkSpecBase {
     val provinces = docs(
       """{"_id":"p1","name":"Zulia","key":"ZU","isActive":true}""",
       """{"_id":"p2","name":"Lara","key":"LA","isActive":true}""")
-    val province: Pipeline#Stage = (src, _) => Map(Destination.Postgres ->
+    val province: Pipeline.Stage = (src, _) => Map(Destination.Postgres ->
       graft.operators.Relational.sequentialIds(
         Rules.geoRules(Projections.geoPostgres(src, withProvince = false,
           withMunicipality = false)), "mongo_id", "id"))
-    val user: Pipeline#Stage = (src, dims) => Map(Destination.Postgres ->
+    val user: Pipeline.Stage = (src, dims) => Map(Destination.Postgres ->
       Rules.userRules(Projections.userPostgres(src), Destination.Postgres,
         provinceDim = Some(dims("province"))))
     val tmp = java.nio.file.Files.createTempDirectory("graft-pipe-serial").toString

@@ -339,7 +339,7 @@ class RunTrainPrepSpec extends SparkSpecBase {
     // --lm-kn-order 3: the TRIGRAM gate — same identity pin against the
     // operator's own filter at a median cut of the trigram prices
     val ppl3 = graft.operators.TextAnalysis
-      .trigramLmScoreKn(docs, "doc_id", "text")
+      .ngramLmScoreKn(docs, "doc_id", "text", order = 3)
       .collect().map(r => r.getLong(0) -> r.getDouble(3)).toMap
     val sorted3 = ppl3.values.toSeq.sorted
     val cut3 = (sorted3(4) + sorted3(5)) / 2

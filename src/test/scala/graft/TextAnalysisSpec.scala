@@ -401,8 +401,8 @@ class TextAnalysisSpec extends SparkSpecBase {
     assert(a === b)
   }
 
-  /** Trigram-KN per-position price in the engine's fixed operation order
-    * (see [[graft.operators.TextAnalysis.trigramLmScoreKn]]).
+  /** Order-3 KN per-position price in the engine's fixed operation order
+    * (see [[graft.operators.TextAnalysis.ngramLmScoreKn]]).
     */
   private def kn3lp6(
       c: Long, cc: Long, n1p: Long,
@@ -413,8 +413,7 @@ class TextAnalysisSpec extends SparkSpecBase {
         (((n2 - 0.75) + 0.75 * nmid * (n1w.toDouble / n1all)) / ccmid)) / cc))
       .setScale(6, BigDecimal.RoundingMode.HALF_UP)
 
-  test("trigramLmScoreKn: hand-built adjusted counts through all three " +
-      "orders, exact entropy, degenerate docs") {
+  test("ngramLmScoreKn order 3: hand-built adjusted counts, degenerate docs") {
     val docs = Seq(
       (1L, "a b c a b c"), // trigrams (a,b,c)x2 (b,c,a)x1 (c,a,b)x1
       (2L, "a b d"),       // (a,b,d)x1
@@ -425,7 +424,7 @@ class TextAnalysisSpec extends SparkSpecBase {
     // md (adjusted bigrams, type counts): (b,c):1 (b,d):1 (c,a):1 (a,b):1
     // cm: b → (ccmid=2, nmid=2); c → (1,1); a → (1,1)
     // cw: every w (a,b,c,d) → 1; n1all = 4
-    val out = TextAnalysis.trigramLmScoreKn(docs, "doc_id", "text")
+    val out = TextAnalysis.ngramLmScoreKn(docs, "doc_id", "text", order = 3)
       .orderBy("doc_id").collect()
     val d1slp = kn3lp6(2, 3, 2, 1, 2, 2, 1, 4) * 2 +
       kn3lp6(1, 1, 1, 1, 1, 1, 1, 4) + kn3lp6(1, 1, 1, 1, 1, 1, 1, 4)
@@ -443,37 +442,19 @@ class TextAnalysisSpec extends SparkSpecBase {
     }
   }
 
-  test("trigramLmScoreKn is invariant under input partitioning") {
+  test("ngramLmScoreKn order 3 is invariant under input partitioning") {
     val corpus = Seq(
       (1L, "sa nb ko sa nb ko sa nb"),
       (2L, "x1 vr ko x2 vr ko x3 vr"),
       (3L, "sa nb ko"), (4L, "x1 vr ko"), (5L, "sa"), (6L, ""))
       .toDF("doc_id", "text")
-    val a = TextAnalysis.trigramLmScoreKn(corpus, "doc_id", "text")
+    val a = TextAnalysis.ngramLmScoreKn(corpus, "doc_id", "text", order = 3)
       .orderBy("doc_id").collect().toSeq
-    val b = TextAnalysis.trigramLmScoreKn(corpus.repartition(13), "doc_id", "text")
+    val b = TextAnalysis.ngramLmScoreKn(corpus.repartition(13), "doc_id", "text", order = 3)
       .orderBy("doc_id").collect().toSeq
     assert(a === b)
     // and shorter docs that DO have trigrams priced by the shared model
     assert(a(2).getLong(1) === 1L)
-  }
-
-  test("ngramLmScoreKn at order 3 is IEEE-identical to the pinned trigram " +
-      "form (modulo the count column's name)") {
-    // the generic chain must reproduce trigramLmScoreKn EXACTLY — same
-    // extraction, same type levels, same fixed-operation-order doubles —
-    // so the q106 oracle pins it transitively at order 3
-    val rnd = new scala.util.Random(99)
-    val alpha = Vector("sa", "nb", "ko", "x1", "vr", "qq", "zz")
-    val corpus = ((1L to 40L).map { i =>
-      (i, Seq.fill(rnd.nextInt(14) + 1)(alpha(rnd.nextInt(alpha.length))).mkString(" "))
-    } ++ Seq((98L, "one"), (99L, ""))).toDF("doc_id", "text")
-    val pinned = TextAnalysis.trigramLmScoreKn(corpus, "doc_id", "text")
-      .withColumnRenamed("n_trigrams", "n_ngrams")
-      .orderBy("doc_id").collect().toSeq
-    val generic = TextAnalysis.ngramLmScoreKn(corpus, "doc_id", "text", order = 3)
-      .orderBy("doc_id").collect().toSeq
-    assert(generic === pinned)
   }
 
   test("LM scorers: window-fused model statistics are row-identical to the " +
@@ -490,33 +471,45 @@ class TextAnalysisSpec extends SparkSpecBase {
     def runAll() = Seq(
       TextAnalysis.bigramLmScore(corpus, "doc_id", "text"),
       TextAnalysis.bigramLmScoreKn(corpus, "doc_id", "text"),
-      TextAnalysis.trigramLmScoreKn(corpus, "doc_id", "text"),
+      TextAnalysis.ngramLmScoreKn(corpus, "doc_id", "text", order = 3),
       TextAnalysis.ngramLmScoreKn(corpus, "doc_id", "text", order = 4),
       TextAnalysis.ngramLmScoreKn(corpus, "doc_id", "text", order = 5))
       .map(_.orderBy("doc_id").collect().toSeq)
-    val key = "spark.graft.lm.windowFuse"
+    // the gate reads the broadcast threshold: disabled (-1) fuses orders
+    // 4-5, a threshold far above the input's size keeps the join chain
+    val fused = withBroadcastThreshold("-1")(runAll())
+    val unfused = withBroadcastThreshold("1g")(runAll())
+    fused.zip(unfused).foreach { case (f, u) => assert(f === u) }
+  }
+
+  private def withBroadcastThreshold[T](value: String)(body: => T): T = {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
     val prev = spark.conf.getOption(key)
-    val (fused, unfused, auto) = try {
-      spark.conf.set(key, "true")
-      val f = runAll()
-      spark.conf.set(key, "false")
-      val u = runAll()
-      // default `auto` resolves from input plan stats (r17) — whichever
-      // arm it picks, the scored output must equal both forced arms
-      spark.conf.unset(key)
-      val a = runAll()
-      // a misspelled arm throws instead of silently measuring `auto`
-      spark.conf.set(key, "True")
-      intercept[IllegalArgumentException] {
-        TextAnalysis.ngramLmScoreKn(corpus, "doc_id", "text", order = 4)
-      }
-      (f, u, a)
-    } finally prev match {
+    spark.conf.set(key, value)
+    try body
+    finally prev match {
       case Some(v) => spark.conf.set(key, v)
       case None => spark.conf.unset(key)
     }
-    fused.zip(unfused).foreach { case (f, u) => assert(f === u) }
-    auto.zip(fused).foreach { case (a, f) => assert(a === f) }
+  }
+
+  test("KN window fuse is read at orders 4-5 only: a disabled broadcast " +
+      "threshold fuses order 4, never order 3; a large one fuses neither") {
+    val corpus = Seq((1L, "sa nb ko sa nb ko x1"), (2L, "x1 vr ko sa nb"))
+      .toDF("doc_id", "text")
+    def hasWindow(order: Int) = TextAnalysis
+      .ngramLmScoreKn(corpus, "doc_id", "text", order = order)
+      .queryExecution.optimizedPlan
+      .find(_.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Window])
+      .nonEmpty
+    withBroadcastThreshold("-1") {
+      assert(hasWindow(4))
+      assert(!hasWindow(3))
+    }
+    withBroadcastThreshold("1g") {
+      assert(!hasWindow(4))
+      assert(!hasWindow(3))
+    }
   }
 
   test("ngramLmScoreKn orders 4-5: hand-checkable single-path corpus, " +

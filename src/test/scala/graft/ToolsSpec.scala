@@ -37,7 +37,7 @@ class ToolsSpec extends AnyFunSuite {
   test("GRAFT_CONF: key=value entries parse, an entry without '=' throws") {
     assert(Tools.parseConf(" a.b = 1 ;c=x=y;; ") === Seq("a.b" -> "1", "c" -> "x=y"))
     assert(Tools.parseConf("") === Seq.empty)
-    intercept[IllegalArgumentException](Tools.parseConf("a=1;spark.graft.lm.windowFuse"))
+    intercept[IllegalArgumentException](Tools.parseConf("a=1;spark.sql.shuffle.partitions"))
     intercept[IllegalArgumentException](Tools.parseConf("=1"))
   }
 }
