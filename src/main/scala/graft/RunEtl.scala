@@ -7,6 +7,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.model.{Destination, Entities}
 import graft.post.Denormalize
 import graft.run.{EntityStages, Pipeline}
+import graft.sink.CqlLayouts
 import graft.sources.{DocumentSource, JsonSource, ParquetSource}
 
 /** CLI entry with the reference's flag surface (`run_etl.py:47-111`):
@@ -148,7 +149,9 @@ object RunEtl {
     // Cassandra-destination entities are laid out per their CQL table's
     // catalog entry (partition-key directories, clustering-ordered files —
     // the storage property the reference gets from Scylla); the directory
-    // keeps the entity name so Validate/read-back paths are unchanged.
+    // keeps the entity name so Validate/read-back paths are unchanged. Every
+    // Cassandra entity names a catalogued table whose keys its stage output
+    // carries, so a drift fails the write instead of landing unordered rows.
     // NOTE: partitionBy read-back re-infers partition-key column types from
     // directory names (see CqlLayouts.writeTo scaladoc) — fine for these
     // numeric/uuid keys and Validate's count-based checks, but a
@@ -157,28 +160,10 @@ object RunEtl {
     val sink: (String, Destination, DataFrame) => Unit =
       (entity, dest, df) =>
         if (!destMatches(cfg.target, dest)) df.count(): Unit
-        else {
-          val layout =
-            if (dest == Destination.Cassandra)
-              Entities.byName(entity).cassandraTable.flatMap(graft.sink.CqlLayouts.all.get)
-            else None
-          layout match {
-            case Some(l) =>
-              val needed = l.partitionKeys ++ l.clustering.map(_._1)
-              val missing = needed.filterNot(df.columns.contains)
-              if (missing.isEmpty)
-                graft.sink.CqlLayouts.writeTo(
-                  df, s"${cfg.outDir}/${dest.toString.toLowerCase}/$entity", l)
-              else {
-                // never fail the migration over a layout column drift — warn
-                // loudly and keep the rows (unordered beats absent)
-                System.err.println(s"[run-etl] $entity: layout columns " +
-                  s"${missing.mkString(", ")} missing; writing without CQL layout")
-                base(entity, dest, df)
-              }
-            case None => base(entity, dest, df)
-          }
-        }
+        else if (dest == Destination.Cassandra) {
+          val layout = CqlLayouts.all(Entities.byName(entity).cassandraTable.get)
+          CqlLayouts.writeTo(df, s"${cfg.outDir}/cassandra/$entity", layout)
+        } else base(entity, dest, df)
 
     // --batch-size is scoped to this run: execute() may share a session with
     // its caller (specs, embedding applications), which must not inherit a

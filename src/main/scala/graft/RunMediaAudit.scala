@@ -11,7 +11,7 @@ import graft.sink.ParquetSink
   * pattern applied to media corpora: read a media parquet (the
   * [[Multimodal.MediaSchema]] shape: id + opaque binary + modality), run
   * the per-modality decode audits and content fingerprints, write the
-  * results through the [[graft.sink.TableSink]] layer, and report decode
+  * results through [[graft.sink.ParquetSink]], and report decode
   * health per modality — the screen a training pipeline runs before
   * letting a crawled media drop anywhere near a trainer.
   *

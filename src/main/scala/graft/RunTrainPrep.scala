@@ -29,10 +29,9 @@ import graft.sink.ParquetSink
   *
   * Reads the corpus parquet, runs [[TrainPrep.pipeline]] (curation →
   * containment removal → substring-span removal), and writes the clean
-  * corpus through the [[graft.sink.TableSink]] layer (`ParquetSink` here;
-  * a JDBC/Cassandra sink plugs in behind the same trait). Per-stage doc
-  * counts are the pipeline's `observe` metrics — computed during the ONE
-  * write action, never an extra count job — drained synchronously off the
+  * corpus through [[graft.sink.ParquetSink]]. Per-stage doc counts are
+  * the pipeline's `observe` metrics — computed during the ONE write
+  * action, never an extra count job — drained synchronously off the
   * listener bus and printed as the run report:
   *
   * {{{

@@ -70,22 +70,4 @@ object Scalars {
   def pathConcat(parent: Column, name: Column): Column =
     when(parent === "/", concat(lit("/"), name))
       .otherwise(concat(parent, lit("/"), name))
-
-  /** X6 — deleted-user anonymization (`data_transformer.py:255-272`):
-    * when inactive, preserve PII into `deleted_*` shadows and blank the
-    * originals. Returns the projection columns for reuse by entity maps.
-    */
-  def anonymizeDeleted(isActive: Column, name: Column, phone: Column, email: Column)
-      : Seq[Column] = {
-    val deleted = !coalesce(isActive, lit(true))
-    Seq(
-      when(deleted, lit("Deleted User")).otherwise(name).as("name"),
-      when(deleted, lit("")).otherwise(phone).as("phone"),
-      when(deleted, lit("")).otherwise(email).as("email"),
-      when(deleted, name).as("deleted_name"),
-      when(deleted, phone).as("deleted_phone"),
-      when(deleted, email).as("deleted_email"),
-      when(deleted, current_timestamp()).as("deleted_at")
-    )
-  }
 }

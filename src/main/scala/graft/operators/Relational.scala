@@ -46,10 +46,11 @@ object Relational {
       .select(col(parentId), explode(col(arrayCol)).as(itemAs))
       .withColumn("link_key", concat_ws("_", col(parentId), col(itemAs)))
 
-  /** W1/A6 — top-1 per group with a total (deterministic) order: the
+  /** W1/A6/U4 — top-1 per group with a total (deterministic) order: the
     * reference's "last message per room" cache
-    * (`etl/orchestrator.py:1266-1276`). `order` must be a total order —
-    * callers pass tie-breakers.
+    * (`etl/orchestrator.py:1266-1276`), and dedup by key (unlike
+    * `dropDuplicates`, whose survivor is arbitrary). `order` must be a
+    * total order — callers pass tie-breakers.
     */
   def topOnePerGroup(df: DataFrame, partitionBy: Seq[String], order: Seq[Column]): DataFrame = {
     val w = Window.partitionBy(partitionBy.map(col): _*).orderBy(order: _*)
@@ -128,13 +129,6 @@ object Relational {
         d.withColumn(c, coalesce(col(s"__u_$c"), col(c))))
       .drop(updateCols.map(c => s"__u_$c"): _*)
   }
-
-  /** U4 — dedup by key keeping the smallest order value: deterministic
-    * (unlike `dropDuplicates`, whose survivor is arbitrary — fine
-    * single-node, not reproducible cluster-wide).
-    */
-  def dedupByKey(df: DataFrame, keys: Seq[String], orderBy: Column): DataFrame =
-    topOnePerGroup(df, keys, Seq(orderBy))
 
   /** As-of join — the time-series operator Spark lacks natively: each left
     * row gets the LATEST right payload with `rightTime <= leftTime` on the

@@ -67,62 +67,6 @@ object TrainPrep {
 
   private val obsId = new java.util.concurrent.atomic.AtomicInteger()
 
-  /** The STREAM-SAFE prefix of the prep pipeline — exactly the stages whose
-    * semantics need no corpus-global statistic (the round-11 streaming
-    * matrix, NOTES.md): quality + language gates (stateless maps — any
-    * micro-batching gives batch-identical output) and exact-content dedup
-    * (keyed state over the content fingerprint; `dropDuplicates` on a
-    * stream keeps the FIRST-ARRIVED copy per fingerprint, where batch
-    * keeps min id — identical whenever arrival order is id order, e.g.
-    * change-stream ingest of an id-ordered collection, and the same
-    * CONTENT either way). The remaining stages are inherently
-    * corpus-global and stay batch: near-dup df/LSH verify + transitive
-    * closure (graph fixpoint over ALL pairs), containment (document
-    * frequencies + corpus-relative anchor cap), substring removal
-    * (corpus-wide window counts + GLOBAL-first survivor rule).
-    * [[graft.streaming.StreamingLshDedup]] covers incremental near-dup
-    * CANDIDATES where a stream needs them; the authoritative prep remains
-    * [[pipeline]] over the accumulated corpus. Works on both batch and
-    * streaming frames (pure projections/filters + keyed dedup).
-    *
-    * Bounded state (VERDICT r11 next #5): pass `eventTimeCol` and the
-    * dedup becomes `withWatermark(eventTimeCol, watermarkDelay)` +
-    * `dropDuplicatesWithinWatermark` — fingerprint state is EVICTED once
-    * the watermark passes it, so a long-running stream's state store stays
-    * bounded by the event-time delay instead of growing with corpus
-    * lifetime. Semantics inside the watermark are unchanged (a duplicate
-    * arriving within `watermarkDelay` of the first copy's event time is
-    * dropped — StreamingSpec pins stream ≡ batch across micro-batches);
-    * the caller's contract is that true duplicates arrive within the
-    * delay. Without `eventTimeCol` the state is unbounded (`dropDuplicates`
-    * keyed on the fingerprint) — the batch-equivalent default, fine for
-    * bounded backfills, NOT for indefinite streams. The event-time column
-    * rides along in the output when requested. On a BATCH frame the
-    * watermarked form degrades to plain `dropDuplicates` (Spark rejects
-    * `dropDuplicatesWithinWatermark` outside streaming, and a bounded
-    * input has no state-growth problem to bound).
-    */
-  def streamLite(
-      docs: DataFrame,
-      idCol: String,
-      textCol: String,
-      minQuality: Double = 0.3,
-      languages: Seq[String] = Seq("en", "es", "fr", "de", "zh"),
-      eventTimeCol: Option[String] = None,
-      watermarkDelay: String = "1 hour"): DataFrame = {
-    val gated = docs
-      .select(col(idCol) +: col(textCol) +: eventTimeCol.map(col).toSeq: _*)
-      .filter(TextAnalysis.qualityScore(col(textCol)) >= minQuality &&
-        TextAnalysis.languageId(col(textCol)).isin(languages.map(x => x: Any): _*))
-      .withColumn("__fp", TextAnalysis.fingerprint(col(textCol)))
-    val deduped = eventTimeCol match {
-      case Some(et) if docs.isStreaming => gated.withWatermark(et, watermarkDelay)
-        .dropDuplicatesWithinWatermark("__fp")
-      case _ => gated.dropDuplicates("__fp")
-    }
-    deduped.drop("__fp")
-  }
-
   /** Per-stage doc counts ride the pipeline as `observe` metrics
     * (`train_prep_{n}_{input|curated|after_contain|clean}`, field `docs` —
     * each the count of docs REMAINING after that stage — the

@@ -4,9 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Event-time windowing over batch data (the streaming variants live in
-  * [[graft.streaming.EventStreams]] and share these aggregation shapes).
-  */
+/** Event-time windowing over batch data. */
 object Windows {
 
   /** Tumbling event-time window aggregation: one hash shuffle on

@@ -1,221 +1,17 @@
 package graft.sink
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.DataFrame
 
-import graft.operators.Relational
-
-/** Sink abstraction (SURVEY.md §2.1 S6–S12). The hermetic build writes
-  * parquet laid out like the target tables (partition key ≙ CQL partition
-  * key, sortWithinPartitions ≙ clustering order); JDBC / Cassandra-connector
-  * implementations plug in behind the same trait — batching, retry, and
-  * concurrency are connector config there, not engine code (the reference's
-  * adaptive CQL batching, `etl/loaders/cassandra_loader.py:81-268`, is
-  * Spark-side `spark.cassandra.output.*` settings).
+/** Parquet table sink (SURVEY.md §2.1 S6). Each table is a directory under
+  * `baseDir`, replaced whole by every write. A JDBC / Cassandra-connector
+  * sink would take its batching, retry and concurrency from connector
+  * config, not engine code (the reference's adaptive CQL batching,
+  * `etl/loaders/cassandra_loader.py:81-268`, is Spark-side
+  * `spark.cassandra.output.*` settings).
   */
-trait TableSink {
-  def overwrite(table: String, df: DataFrame): Unit
-  def append(table: String, df: DataFrame): Unit
-
-  /** S8 — upsert (`postgres_loader.py:29-65` `ON CONFLICT DO UPDATE`): for
-    * file sinks, read-merge-rewrite keyed on `keys`; a JDBC sink would issue
-    * MERGE per partition instead.
-    */
-  def upsert(table: String, df: DataFrame, keys: Seq[String]): Unit
-
-  /** S7 — insert with row isolation (`postgres_loader.py:67-163`): the
-    * reference retries a failed batch row-by-row and quarantines the bad
-    * rows. Declaratively that IS a validity split — rows failing `isValid`
-    * land in `<table>__quarantine` instead of failing the whole job. A null
-    * verdict (predicate over missing data) counts as invalid: quarantine is
-    * exactly for rows the checks can't vouch for.
-    */
-  def writeWithQuarantine(table: String, df: DataFrame, isValid: Column): Unit = {
-    // one materialization feeds both filtered writes: without it, any
-    // non-deterministic expression upstream (rand/uuid) could re-evaluate
-    // between the two actions and route a row into both tables or neither.
-    // cache + unpersist (not localCheckpoint): Dataset.unpersist only frees
-    // CacheManager entries, so a checkpoint here would pin corpus-sized
-    // blocks until a driver GC; MEMORY_AND_DISK spills rather than evicts,
-    // so both writes observe the same materialized rows
-    val pinned = df.withColumn("__valid", coalesce(isValid, lit(false))).cache()
-    try {
-      overwrite(table, pinned.filter(col("__valid")).drop("__valid"))
-      overwrite(s"${table}__quarantine", pinned.filter(!col("__valid")).drop("__valid"))
-    } finally pinned.unpersist(false)
-  }
-}
-
-final class ParquetSink(baseDir: String) extends TableSink {
+final class ParquetSink(baseDir: String) {
   private def path(table: String) = s"$baseDir/$table"
 
   def overwrite(table: String, df: DataFrame): Unit =
     df.write.mode("overwrite").parquet(path(table))
-
-  def append(table: String, df: DataFrame): Unit =
-    df.write.mode("append").parquet(path(table))
-
-  /** Whole-table read-merge-rewrite — the DIM-sized path. Every upsert
-    * rewrites the full table, so it is only appropriate for tables that fit
-    * a single rewrite comfortably (lookup/dimension tables); fact-sized
-    * tables use [[PartitionedParquetSink]], which rewrites only the
-    * partitions the update batch touches.
-    */
-  def upsert(table: String, df: DataFrame, keys: Seq[String]): Unit = {
-    val spark = df.sparkSession
-    // crash recovery FIRST: a previous upsert that died between its two
-    // swap renames left the table slot empty and the data in __bak — without
-    // this restore, the merge below would silently run against an empty
-    // table and the final cleanup would delete the only surviving copy
-    val fs0 = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    val dst0 = new org.apache.hadoop.fs.Path(path(table))
-    val bak0 = new org.apache.hadoop.fs.Path(path(table) + "__bak")
-    if (!fs0.exists(dst0) && fs0.exists(bak0)) fs0.rename(bak0, dst0)
-    val existing =
-      try Some(spark.read.parquet(path(table)))
-      catch { case _: Exception => None }
-    val merged = existing match {
-      case None => df
-      case Some(old) =>
-        // new rows win: overwrite matched keys' columns, keep unmatched rows
-        val updated = Relational.overwriteByJoin(old, df, keys)
-        val newRows = df.join(old.select(keys.map(col): _*).distinct(), keys, "left_anti")
-        updated.unionByName(newRows, allowMissingColumns = true)
-    }
-    // write through a temp dir: the source parquet is an input of the plan.
-    // Swap via a .bak rename (not delete-then-rename): a crash between the
-    // two steps leaves either the old table or a restorable backup, never an
-    // empty slot.
-    val tmp = path(table) + "__tmp"
-    merged.write.mode("overwrite").parquet(tmp)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    val dst = new org.apache.hadoop.fs.Path(path(table))
-    val bak = new org.apache.hadoop.fs.Path(path(table) + "__bak")
-    fs.delete(bak, true)
-    val hadOld = fs.exists(dst)
-    if (hadOld && !fs.rename(dst, bak)) {
-      throw new java.io.IOException(s"upsert($table): backup rename $dst -> $bak failed")
-    }
-    if (!fs.rename(new org.apache.hadoop.fs.Path(tmp), dst)) {
-      if (hadOld) fs.rename(bak, dst) // restore before failing
-      throw new java.io.IOException(s"upsert($table): swap rename $tmp -> $dst failed")
-    }
-    fs.delete(bak, true)
-  }
-}
-
-/** Directory-partitioned parquet sink whose upsert rewrites ONLY the
-  * partitions the update batch touches. At fact-table scale an upsert of 1k
-  * rows must not rewrite 100 TB: here the merge reads just the affected
-  * `partitionCol=value` directories (partition-pruned scan), merges the
-  * batch in, writes the result to a staging dir, and swaps those directories
-  * in place. Untouched partitions are never read, written, or moved — their
-  * files stay byte-identical.
-  *
-  * The affected-partition value list is collected to the driver: it is
-  * bounded by the batch's distinct partition values (the premise of a
-  * partition-scoped upsert), not by table size.
-  */
-final class PartitionedParquetSink(
-    baseDir: String,
-    partitionCol: String,
-    verifyKeyStability: Boolean = true) extends TableSink {
-  private def path(table: String) = s"$baseDir/$table"
-
-  def overwrite(table: String, df: DataFrame): Unit =
-    df.write.partitionBy(partitionCol).mode("overwrite").parquet(path(table))
-
-  def append(table: String, df: DataFrame): Unit =
-    df.write.partitionBy(partitionCol).mode("append").parquet(path(table))
-
-  def upsert(table: String, df: DataFrame, keys: Seq[String]): Unit = {
-    val spark = df.sparkSession
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    val root = new org.apache.hadoop.fs.Path(path(table))
-    // crash recovery FIRST: partition dirs stranded in __bak by a previous
-    // upsert that died mid-swap are restored where the live dir is missing —
-    // deleting the backup root before consulting it would destroy the only
-    // surviving copy of those partitions
-    val bakRoot0 = new org.apache.hadoop.fs.Path(path(table) + "__bak")
-    if (fs.exists(bakRoot0)) {
-      for (st <- fs.listStatus(bakRoot0) if st.isDirectory) {
-        val live = new org.apache.hadoop.fs.Path(root, st.getPath.getName)
-        if (!fs.exists(live)) fs.rename(st.getPath, live)
-      }
-    }
-    if (!fs.exists(root)) { overwrite(table, df); return }
-
-    // the batch's distinct partition values (null partitions unsupported —
-    // a quarantine-style pre-filter should have caught those), plus their
-    // ESCAPED directory names as the writer produces them (spaces, unicode)
-    val values = df
-      .select(col(partitionCol).cast("string"))
-      .distinct()
-      .collect()
-      .map(_.getString(0))
-    require(!values.contains(null), s"null $partitionCol in upsert batch")
-    val affected = values.map(v =>
-      org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-        .getPartitionPathString(partitionCol, v))
-
-    // A key whose partition value CHANGED between the stored row and the
-    // batch would leave its stale row in the old partition (that directory
-    // is never read here) — duplicate keys across partitions. Unless the
-    // partition column is part of the key (then a "moved" row is by
-    // definition a different key), detect moved keys with a column-pruned
-    // key scan of the untouched partitions and refuse the batch. Opt out
-    // (`verifyKeyStability = false`) only when the caller guarantees the
-    // partition value is immutable per key.
-    if (verifyKeyStability && !keys.contains(partitionCol)) {
-      val moved = spark.read.parquet(path(table))
-        .filter(!col(partitionCol).cast("string").isin(values: _*))
-        .select(keys.map(col): _*)
-        .join(df.select(keys.map(col): _*).distinct(), keys, "left_semi")
-        .limit(1)
-        .count()
-      require(moved == 0L,
-        s"upsert($table): batch re-keys rows into new $partitionCol partitions; " +
-          "stale rows would remain in their old partitions. Rewrite those " +
-          "partitions explicitly or construct the sink with verifyKeyStability = false.")
-    }
-
-    // partition-pruned read: only the touched directories are scanned; the
-    // pruned column comes back from the directory name, so select order is
-    // restored to the batch's schema
-    val old = spark.read.parquet(path(table))
-      .filter(col(partitionCol).cast("string").isin(values: _*))
-      .select(df.columns.map(col): _*)
-    val updated = Relational.overwriteByJoin(old, df, keys)
-    val newRows = df.join(old.select(keys.map(col): _*).distinct(), keys, "left_anti")
-    val merged = updated.unionByName(newRows, allowMissingColumns = true)
-
-    // stage the merged partitions, then swap just those directories. Each
-    // swap goes through a backup OUTSIDE the table root (a .bak inside it
-    // would read back as a phantom partition value): old dir -> bak, staged
-    // dir -> live, drop bak — a crash mid-swap leaves the partition either
-    // live or restorable, never missing.
-    val tmp = new org.apache.hadoop.fs.Path(path(table) + "__tmp")
-    val bakRoot = new org.apache.hadoop.fs.Path(path(table) + "__bak")
-    merged.write.partitionBy(partitionCol).mode("overwrite").parquet(tmp.toString)
-    fs.delete(bakRoot, true)
-    fs.mkdirs(bakRoot)
-    for (dir <- affected) {
-      val dst = new org.apache.hadoop.fs.Path(root, dir)
-      val src = new org.apache.hadoop.fs.Path(tmp, dir)
-      if (fs.exists(src)) {
-        val bak = new org.apache.hadoop.fs.Path(bakRoot, dir)
-        val hadOld = fs.exists(dst)
-        if (hadOld && !fs.rename(dst, bak)) {
-          throw new java.io.IOException(s"upsert($table): backup rename $dst -> $bak failed")
-        }
-        if (!fs.rename(src, dst)) {
-          if (hadOld) fs.rename(bak, dst) // restore before failing
-          throw new java.io.IOException(s"upsert($table): swap rename $src -> $dst failed")
-        }
-      }
-    }
-    fs.delete(bakRoot, true)
-    fs.delete(tmp, true)
-  }
 }

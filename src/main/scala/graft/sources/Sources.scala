@@ -1,7 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
 /** Source abstraction (SURVEY.md §2.1 S1–S5): the engine reads document
@@ -10,7 +9,8 @@ import org.apache.spark.sql.types.StructType
   * the same seam (`spark.read.format("mongodb")` — predicate pushdown and
   * projection reach the server through Catalyst DSv2 exactly as the
   * reference compiles filters into its Mongo queries,
-  * `etl/extractors/mongo_extractor.py:56-72`).
+  * `etl/extractors/mongo_extractor.py:56-72`). Filtered, id-set and
+  * count scans (S1/S3/S4) are plain `filter`/`count` on a collection.
   */
 trait DocumentSource {
   def collection(name: String): DataFrame
@@ -44,38 +44,4 @@ final class JsonSource(spark: SparkSession, dir: String,
     inferred.putIfAbsent(name, df.schema)
     df
   }
-}
-
-/** Scan shapes over any [[DocumentSource]]. */
-object Scans {
-
-  /** S1 — filtered collection scan: the predicate is part of the plan, so
-    * Catalyst pushes it to the source (parquet row groups / Mongo query).
-    */
-  def filtered(src: DocumentSource, name: String, predicate: Column): DataFrame =
-    src.collection(name).filter(predicate)
-
-  /** S3 — scan by id-set (`mongo_extractor.py:239-279`). Small sets inline
-    * into the scan filter (`isin` pushes down); beyond `inlineLimit` the ids
-    * become a broadcast semi-join — an `IN` list with 10^6 entries belongs
-    * in a join, not a filter.
-    */
-  def byIds(
-      src: DocumentSource,
-      name: String,
-      idCol: String,
-      ids: Seq[String],
-      inlineLimit: Int = 1000): DataFrame = {
-    val df = src.collection(name)
-    if (ids.lengthCompare(inlineLimit) <= 0) df.filter(col(idCol).isin(ids: _*))
-    else {
-      val spark = df.sparkSession
-      import spark.implicits._
-      df.join(broadcast(ids.toDF(idCol)), Seq(idCol), "left_semi")
-    }
-  }
-
-  /** S4 — count with filters. */
-  def count(src: DocumentSource, name: String, predicate: Column): Long =
-    src.collection(name).filter(predicate).count()
 }

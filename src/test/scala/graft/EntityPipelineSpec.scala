@@ -55,11 +55,16 @@ class EntityPipelineSpec extends SparkSpecBase {
     assert(ana.getAs[String]("profileStatus") === "COMPLETED")
     assert(ana.getAs[Long]("province_id") === 11L)
     assert(ana.getAs[Long]("roleId") === 1L) // USER_ROLE -> USER
+    assert(ana.isNullAt(ana.fieldIndex("deleted_name")))
+    assert(ana.isNullAt(ana.fieldIndex("deleted_at")))
 
     val deleted = out(1)
     assert(deleted.getAs[String]("name") === "Deleted User")
     assert(deleted.getAs[String]("deleted_name") === "Borrado")
     assert(deleted.getAs[String]("email") === "")
+    assert(deleted.getAs[String]("phone") === "")
+    assert(deleted.getAs[String]("deleted_phone") === "555123")
+    assert(deleted.getAs[String]("deleted_email") === "b@x.com")
     assert(deleted.getAs[java.sql.Timestamp]("deleted_at") !== null)
     assert(deleted.getAs[Long]("province_id") === 12L)
     assert(deleted.getAs[Long]("roleId") === 2L)

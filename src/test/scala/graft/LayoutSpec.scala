@@ -2,37 +2,11 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.sink.Layout
-
-/** Physical-layout proofs at the plan level: bucketed joins shuffle-free,
-  * partitioned scans prune directories.
+/** CQL physical layout: every partition directory is clustering-sorted,
+  * and a byte-small frame's keys still spread over several write tasks.
   */
 class LayoutSpec extends SparkSpecBase {
   import spark.implicits._
-
-  test("same-bucket tables join without any shuffle exchange") {
-    val dbDir = java.nio.file.Files.createTempDirectory("graft-bucketdb").toString
-    spark.sql(s"CREATE DATABASE IF NOT EXISTS bucketdb LOCATION '$dbDir'")
-    val orders = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
-    val lineitem = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
-    Layout.writeBucketed(orders, "bucketdb.orders_b", "o_orderkey", 8, Seq("o_orderkey"))
-    Layout.writeBucketed(lineitem.withColumnRenamed("l_orderkey", "o_orderkey"),
-      "bucketdb.lineitem_b", "o_orderkey", 8, Seq("o_orderkey"))
-
-    // force the shuffle-join path (tiny test tables would broadcast, which
-    // hides what bucketing buys on large-large joins)
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val joined = spark.table("bucketdb.lineitem_b")
-        .join(spark.table("bucketdb.orders_b"), "o_orderkey")
-      val plan = joined.queryExecution.executedPlan.toString
-      assert(!plan.contains("Exchange hashpartitioning"),
-        s"bucketed co-located join must not shuffle:\n$plan")
-      assert(plan.contains("SortMergeJoin") || plan.contains("ShuffledHashJoin"))
-      assert(joined.count() === lineitem.count())
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-  }
 
   test("CQL layout write yields within-partition clustering order; the check has teeth") {
     import graft.sink.CqlLayouts
@@ -87,18 +61,5 @@ class LayoutSpec extends SparkSpecBase {
     val ordered = Checks.clusteringOrder("layout-keys", back,
       CqlLayouts.all("messages_by_room").clustering)
     assert(ordered.passed, ordered.detail)
-  }
-
-  test("partitioned parquet prunes directories via PartitionFilters") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-part").toString + "/events"
-    val events = Seq((1L, "click"), (2L, "view"), (3L, "click"), (4L, "error"))
-      .toDF("event_id", "event_type")
-    Layout.writePartitioned(events, dir, "event_type")
-
-    val scan = spark.read.parquet(dir).filter(col("event_type") === "click")
-    val plan = scan.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters: [isnotnull(event_type"),
-      s"predicate must prune partitions (listing-time, before any IO):\n$plan")
-    assert(scan.count() === 2)
   }
 }

@@ -64,9 +64,9 @@ class RelationalSpec extends SparkSpecBase {
     assert(out.map(_.getString(2)).toSeq === Seq("u1_p1", "u1_p2")) // empty array drops out
   }
 
-  test("dedupByKey keeps the smallest order value deterministically") {
+  test("topOnePerGroup keeps the smallest order value deterministically") {
     val df = Seq(("k", 3, "c"), ("k", 1, "a"), ("k", 2, "b"), ("j", 9, "z")).toDF("k", "o", "tag")
-    val out = Relational.dedupByKey(df, Seq("k"), col("o").asc).orderBy("k").collect()
+    val out = Relational.topOnePerGroup(df, Seq("k"), Seq(col("o").asc)).orderBy("k").collect()
     assert(out.map(_.getString(2)).toSeq === Seq("z", "a"))
   }
 

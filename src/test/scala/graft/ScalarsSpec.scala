@@ -71,18 +71,4 @@ class ScalarsSpec extends SparkSpecBase {
     assert(p(0).getString(0) === "/x")
     assert(p(1).getString(0) === "/a/y")
   }
-
-  test("X6 anonymization blanks PII only for inactive users") {
-    import spark.implicits._
-    val df = Seq((false, "Ana", "555", "a@x.com"), (true, "Bob", "666", "b@x.com"))
-      .toDF("isActive", "n", "p", "e")
-      .select(Scalars.anonymizeDeleted(col("isActive"), col("n"), col("p"), col("e")): _*)
-    val rows = df.collect()
-    assert(rows(0).getString(0) === "Deleted User")
-    assert(rows(0).getString(3) === "Ana")
-    assert(!rows(0).isNullAt(6)) // deleted_at stamped
-    assert(rows(1).getString(0) === "Bob")
-    assert(rows(1).isNullAt(3))
-    assert(rows(1).isNullAt(6))
-  }
 }

@@ -1,223 +1,14 @@
 package graft
 
-import java.sql.Timestamp
-
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
-import graft.streaming.{EventStreams, SessionEvent, SessionizeStream}
-
-/** Structured Streaming extension: watermarked windows and stateful
-  * sessionization driven through MemoryStream micro-batches.
+/** The engine is batch-only, but its per-row operators carry no batch
+  * assumption: the same Column expressions drive MemoryStream micro-batches
+  * unchanged.
   */
 class StreamingSpec extends SparkSpecBase {
   import spark.implicits._
-
-  private def ts(minute: Int): Timestamp = Timestamp.valueOf(f"2024-01-01 00:$minute%02d:00")
-
-  test("watermarked tumbling window emits finalized buckets and drops late data") {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[(Timestamp, String, Double)]
-    val windowed = EventStreams.tumbling(
-      input.toDF.toDF("ts", "event_type", "value"),
-      "ts", "10 minutes", "5 minutes", Seq("event_type"),
-      Seq(count(lit(1)).as("n"), sum(col("value")).as("total")))
-    val q = windowed.writeStream.format("memory").queryName("tumbled")
-      .outputMode("append").start()
-    try {
-      input.addData((ts(1), "a", 1.0), (ts(5), "a", 2.0), (ts(11), "a", 4.0))
-      q.processAllAvailable()
-      // advance watermark past the first window (10:00 + 5m lateness)
-      input.addData((ts(21), "a", 8.0))
-      q.processAllAvailable()
-      // a late event for the already-finalized first window must be dropped
-      input.addData((ts(2), "a", 100.0))
-      q.processAllAvailable()
-      input.addData((ts(40), "a", 0.0))
-      q.processAllAvailable()
-      val rows = spark.table("tumbled").orderBy("window_start").collect()
-      val first = rows.head
-      assert(first.getAs[Long]("n") === 2L)
-      assert(first.getAs[Double]("total") === 3.0) // late 100.0 NOT included
-    } finally q.stop()
-  }
-
-  test("dedupWithinWatermark drops redelivered keys across micro-batches") {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[(String, Timestamp, Double)]
-    val deduped = EventStreams.dedupWithinWatermark(
-      input.toDF.toDF("mongo_id", "ts", "value"), Seq("mongo_id"), "ts", "10 minutes")
-    val q = deduped.writeStream.format("memory").queryName("deduped")
-      .outputMode("append").start()
-    try {
-      input.addData(("m1", ts(1), 1.0), ("m2", ts(2), 2.0))
-      q.processAllAvailable()
-      input.addData(("m1", ts(3), 1.0)) // redelivery in a later batch
-      q.processAllAvailable()
-      assert(spark.table("deduped").count() === 2)
-    } finally q.stop()
-  }
-
-  test("stream-stream join bounds matches to the event-time window") {
-    implicit val sqlCtx = spark.sqlContext
-    val clicks = MemoryStream[(Long, Timestamp)]
-    val buys = MemoryStream[(Long, Timestamp)]
-    val joined = EventStreams.streamStreamJoin(
-      clicks.toDF.toDF("user_id", "click_ts"), buys.toDF.toDF("user_id", "buy_ts"),
-      "user_id", "click_ts", "buy_ts", "1 minute", windowSeconds = 600)
-    val q = joined.writeStream.format("memory").queryName("joined")
-      .outputMode("append").start()
-    try {
-      clicks.addData((1L, ts(0)), (2L, ts(0)))
-      buys.addData((1L, ts(5)), (2L, ts(30))) // user 2 buys outside the 10-min window
-      q.processAllAvailable()
-      val out = spark.table("joined").collect()
-      assert(out.map(_.getLong(0)).toSet === Set(1L))
-    } finally q.stop()
-  }
-
-  test("incremental migration reuses a batch transform inside foreachBatch") {
-    implicit val sqlCtx = spark.sqlContext
-    import graft.streaming.IncrementalMigration
-    val input = MemoryStream[(String, String)]
-    val outDir = java.nio.file.Files.createTempDirectory("graft-incr").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
-    // the batch stage: uuid5 minting + projection, unchanged from batch use
-    val transform: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame =
-      df => df.select(col("_id").as("mongo_id"),
-        GraftFunctions.uuid5(col("_id")).as("room_id"), col("name"))
-    val q = IncrementalMigration.run(
-      input.toDF.toDF("_id", "name"), transform,
-      (batch, _) => batch.write.mode("append").parquet(s"$outDir/rooms"), ckpt)
-    try {
-      input.addData(("r1", "Duo"), ("r1", "Duo-redelivered"), ("r2", "Grupo"))
-      q.processAllAvailable()
-      input.addData(("r3", "Tercero"))
-      q.processAllAvailable()
-      val out = spark.read.parquet(s"$outDir/rooms")
-      assert(out.count() === 3) // within-batch redelivery of r1 deduped
-      val r1 = out.filter(col("mongo_id") === "r1").head()
-      assert(r1.getAs[String]("room_id") ===
-        graft.functions.Uuid5.compute(
-          org.apache.spark.unsafe.types.UTF8String.fromString("r1")).toString)
-    } finally q.stop()
-  }
-
-  test("incremental migration: entity transform + partition-scoped upsert equals the batch run") {
-    // the round-4 sketch made concrete: a mongo-shaped change stream drives
-    // the UNCHANGED batch room projection through foreachBatch into
-    // PartitionedParquetSink.upsert — two micro-batches with a cross-batch
-    // UPDATE must converge to exactly the batch run over the final state
-    implicit val sqlCtx = spark.sqlContext
-    import graft.streaming.IncrementalMigration
-    import graft.transform.Projections
-    val input = MemoryStream[(String, String, Boolean, Timestamp, Timestamp)]
-    val baseDir = java.nio.file.Files.createTempDirectory("graft-upsert-mig").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-upsert-ckpt").toString
-    val sink = new graft.sink.PartitionedParquetSink(baseDir, "type")
-    val q = IncrementalMigration.run(
-      input.toDF.toDF("_id", "name", "isGroup", "createdAt", "updatedAt"),
-      Projections.roomCassandra,
-      (batch, _) => sink.upsert("room_details", batch, Seq("mongo_id")),
-      ckpt)
-    try {
-      input.addData(("r1", "Duo", false, ts(0), ts(0)), ("r2", "Grupo", true, ts(0), ts(0)))
-      q.processAllAvailable()
-      // micro-batch 2: r1 UPDATED in place (same partition), r3 inserted
-      input.addData(
-        ("r1", "Duo renombrado", false, ts(0), ts(10)),
-        ("r3", "Tercero", true, ts(1), ts(1)))
-      q.processAllAvailable()
-    } finally q.stop()
-    val finalDocs = Seq(
-      ("r1", "Duo renombrado", false, ts(0), ts(10)),
-      ("r2", "Grupo", true, ts(0), ts(0)),
-      ("r3", "Tercero", true, ts(1), ts(1)))
-      .toDF("_id", "name", "isGroup", "createdAt", "updatedAt")
-    val batchRun = Projections.roomCassandra(finalDocs)
-    val cols = batchRun.columns.sorted.map(col).toSeq // partitionBy reorders on read
-    val streamed = spark.read.parquet(s"$baseDir/room_details").select(cols: _*).collect()
-    assert(streamed.toSet === batchRun.select(cols: _*).collect().toSet)
-    assert(streamed.length === 3)
-  }
-
-  test("availableNow catchup drains the backlog and stops on its own") {
-    implicit val sqlCtx = spark.sqlContext
-    import graft.streaming.IncrementalMigration
-    val input = MemoryStream[(String, String)]
-    val outDir = java.nio.file.Files.createTempDirectory("graft-catchup").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-catchup-ckpt").toString
-    // backlog accumulated while the migration was down
-    input.addData(("r1", "Duo"), ("r2", "Grupo"))
-    input.addData(("r3", "Tercero"))
-    val q = IncrementalMigration.run(
-      input.toDF.toDF("_id", "name"),
-      df => df.select(col("_id").as("mongo_id"), col("name")),
-      (batch, _) => batch.write.mode("append").parquet(s"$outDir/rooms"),
-      ckpt, catchUp = true)
-    try {
-      // AvailableNow terminates once the pre-existing backlog is drained
-      assert(q.awaitTermination(60000), "catchup query did not stop by itself")
-      assert(!q.isActive)
-      assert(spark.read.parquet(s"$outDir/rooms").count() === 3)
-    } finally q.stop()
-  }
-
-  test("stateful sessionization closes sessions via event-time timeout") {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[SessionEvent]
-    val sessions = SessionizeStream(input.toDS(), gapSeconds = 300L, lateness = "1 minute")
-    val q = sessions.writeStream.format("memory").queryName("sessions")
-      .outputMode("append").start()
-    try {
-      input.addData(SessionEvent(1L, ts(0), 1.0), SessionEvent(1L, ts(2), 2.0))
-      q.processAllAvailable()
-      // gap > 300s closes the first session once the watermark passes
-      input.addData(SessionEvent(1L, ts(20), 4.0))
-      q.processAllAvailable()
-      input.addData(SessionEvent(1L, ts(40), 8.0))
-      q.processAllAvailable()
-      val rows = spark.table("sessions").orderBy("session_start").collect()
-      assert(rows.nonEmpty)
-      val first = rows.head
-      assert(first.getAs[Long]("n_events") === 2L)
-      assert(first.getAs[Double]("sum_value") === 3.0)
-      assert(first.getAs[Timestamp]("session_end") === ts(2))
-    } finally q.stop()
-  }
-
-  test("streaming LSH dedup pairs near-duplicates ACROSS micro-batches") {
-    implicit val sqlCtx = spark.sqlContext
-    val docA = "the quick brown fox jumps over the lazy dog again and again"
-    val docB = "the quick brown fox jumps over the lazy cat again and again"
-    val docC = "completely unrelated content about spark query engines at scale"
-    val input = MemoryStream[(Long, String, Timestamp)]
-    val pairs = graft.streaming.StreamingLshDedup.nearDupCandidates(
-      input.toDF.toDF("doc_id", "text", "ts"), "doc_id", "text", "ts",
-      shingleLen = 2, bands = 8, rowsPerBand = 2, lateness = "1 minute")
-    val q = pairs.writeStream.format("memory").queryName("lsh_pairs")
-      .outputMode("append").start()
-    try {
-      // batch 1: one doc + an unrelated one — nothing can pair yet
-      input.addData((1L, docA, ts(0)), (3L, docC, ts(0)))
-      q.processAllAvailable()
-      assert(spark.table("lsh_pairs").count() === 0)
-      // batch 2: the near-duplicate arrives LATER — state must remember
-      // batch 1's bucket members to emit the cross-batch candidate
-      input.addData((2L, docB, ts(1)))
-      q.processAllAvailable()
-      val got = spark.table("lsh_pairs").select("id1", "id2").distinct()
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(got.contains((1L, 2L)), s"cross-batch near-dup not found: $got")
-      assert(!got.exists(p => p._1 == 3L || p._2 == 3L),
-        "unrelated doc must not pair")
-      // re-delivery of an already-seen id emits nothing new
-      val before = spark.table("lsh_pairs").count()
-      input.addData((2L, docB, ts(2)))
-      q.processAllAvailable()
-      assert(spark.table("lsh_pairs").count() === before)
-    } finally q.stop()
-  }
 
   test("stateless curation ops (gates + PII scrub) run unchanged on a stream") {
     // the batch curation columns are pure projections/filters, so the SAME
@@ -291,99 +82,5 @@ class StreamingSpec extends SparkSpecBase {
       assert(batch.contains((1L, "low", 1))) // "low" fully merged
       assert(batch.contains((2L, "slow", 2))) // s + low
     } finally q.stop()
-  }
-
-  test("TrainPrep.streamLite per micro-batch equals the batch gates + exact dedup") {
-    // The round-11 streaming matrix's spec: the prep pipeline's
-    // STREAM-SAFE prefix (gates + keyed exact dedup) produces the same
-    // rows whether it runs as one batch or across micro-batches — here 3
-    // batches, with an exact duplicate arriving in a LATER batch than its
-    // original (cross-batch state is the point) and arrival in id order
-    // (where streaming's first-arrival survivor = batch's min id). The
-    // corpus-global stages (near-dup closure, containment, substring) are
-    // deliberately absent — they need statistics over the whole corpus
-    // and stay in TrainPrep.pipeline.
-    implicit val sqlCtx = spark.sqlContext
-    val d1 = Seq(
-      (1L, "the quick brown fox jumps over the lazy dog near the river"),
-      (2L, "xx qq")) // language gate drops
-    val d2 = Seq(
-      (3L, "the quick brown fox jumps over the lazy dog near the river"), // dup of 1, later batch
-      (4L, "winter storms gather slowly above the northern mountain villages"))
-    val d3 = Seq(
-      (5L, "winter storms gather slowly above the northern mountain villages"), // dup of 4
-      (6L, "the library kept many ancient maps of forgotten trade roads"))
-    val input = MemoryStream[(Long, String)]
-    val lite = graft.operators.TrainPrep.streamLite(
-      input.toDF.toDF("doc_id", "text"), "doc_id", "text", minQuality = 0.0)
-    val q = lite.writeStream.format("memory").queryName("prep_lite")
-      .outputMode("append").start()
-    try {
-      input.addData(d1: _*); q.processAllAvailable()
-      input.addData(d2: _*); q.processAllAvailable()
-      input.addData(d3: _*); q.processAllAvailable()
-      val streamed = spark.table("prep_lite")
-        .collect().map(r => (r.getLong(0), r.getString(1))).toSet
-      // batch reference: the same stage semantics over the union of inputs
-      val all = (d1 ++ d2 ++ d3).toDF("doc_id", "text")
-      val batch = graft.operators.Dedup
-        .exactSurvivors(all, graft.operators.TextAnalysis.fingerprint(col("text")), "doc_id")
-        .filter(graft.operators.TextAnalysis.languageId(col("text"))
-          .isin("en", "es", "fr", "de", "zh"))
-        .select("doc_id", "text")
-        .collect().map(r => (r.getLong(0), r.getString(1))).toSet
-      assert(streamed === batch)
-      assert(streamed.map(_._1) === Set(1L, 4L, 6L)) // 2 gated, 3/5 deduped cross-batch
-    } finally q.stop()
-  }
-
-  test("streamLite with an event-time column: bounded state via " +
-      "dropDuplicatesWithinWatermark — in-watermark dups drop, evicted state proves bounded") {
-    // VERDICT r11 next #5: the watermarked form is the long-running-stream
-    // API — fingerprint state is EVICTED once the watermark passes
-    // (event time + delay), so state is bounded by the delay, not by
-    // corpus lifetime. Pinned here: (a) a duplicate arriving INSIDE the
-    // watermark is dropped exactly like the unbounded form; (b) after the
-    // watermark advances past a fingerprint's horizon, its state is GONE —
-    // a later duplicate re-emits, which is the observable proof that
-    // eviction (the bounded-state property) actually happened.
-    implicit val sqlCtx = spark.sqlContext
-    def tsh(hm: String) = java.sql.Timestamp.valueOf(s"2026-01-01 $hm:00")
-    val textA = "the quick brown fox jumps over the lazy dog near the river"
-    val textB = "winter storms gather slowly above the northern mountain villages"
-    val textC = "the library kept many ancient maps of forgotten trade roads"
-    val input = MemoryStream[(Long, String, java.sql.Timestamp)]
-    val lite = graft.operators.TrainPrep.streamLite(
-      input.toDF.toDF("doc_id", "text", "ts"), "doc_id", "text",
-      minQuality = 0.0, eventTimeCol = Some("ts"), watermarkDelay = "2 minutes")
-    val q = lite.writeStream.format("memory").queryName("prep_wm")
-      .outputMode("append").start()
-    try {
-      // b1: two distinct docs; watermark after b1 = 10:01 - 2m = 09:59
-      input.addData((1L, textA, tsh("10:00")), (2L, textB, tsh("10:01")))
-      q.processAllAvailable()
-      // b2: dup of textA INSIDE the watermark → dropped (unchanged
-      // semantics); textC at 10:30 advances the watermark to 10:28, past
-      // both fingerprints' horizons (10:02 / 10:03) → state evicted
-      input.addData((3L, textA, tsh("10:01")), (4L, textC, tsh("10:30")))
-      q.processAllAvailable()
-      // b3: textB again, event time above the watermark — its state was
-      // evicted, so it re-emits: bounded state is real, not a no-op flag
-      input.addData((5L, textB, tsh("10:29")))
-      q.processAllAvailable()
-      val ids = spark.table("prep_wm").collect().map(_.getLong(0)).toSet
-      assert(ids === Set(1L, 2L, 4L, 5L))
-      // the event-time column rides along for downstream watermark reuse
-      assert(spark.table("prep_wm").columns.toSeq === Seq("doc_id", "text", "ts"))
-    } finally q.stop()
-    // batch frames take the same signature without crashing (Spark rejects
-    // dropDuplicatesWithinWatermark on batch; the operator degrades to
-    // plain dropDuplicates — a bounded input has no state to bound)
-    val batch = graft.operators.TrainPrep.streamLite(
-      Seq((1L, textA, tsh("10:00")), (2L, textA, tsh("10:05")))
-        .toDF("doc_id", "text", "ts"),
-      "doc_id", "text", minQuality = 0.0,
-      eventTimeCol = Some("ts"), watermarkDelay = "2 minutes")
-    assert(batch.select("text").collect().map(_.getString(0)).toSeq === Seq(textA))
   }
 }
