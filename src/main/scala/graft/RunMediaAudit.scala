@@ -79,7 +79,10 @@ import graft.sink.ParquetSink
   *
   * Decode-health counts ride the write actions as `observe` metrics
   * (the [[RunTrainPrep]] discipline: computed during the ONE write, never
-  * an extra count job over a 100 TB corpus) and print as the run report:
+  * an extra count job over a 100 TB corpus), read through one
+  * [[graft.run.MetricsCollector.during]] scope around the run (each pair
+  * write has its own nested scope, so guard counters attribute to their
+  * modality), and print as the run report:
   *
   * {{{
   * [media-audit] image rows=50000 undecodable=12
@@ -218,11 +221,10 @@ object RunMediaAudit {
       col(cfg.contentCol).as("content"),
       col(cfg.modalityCol).cast("string").as("__mod"))
     val sink = new ParquetSink(cfg.out)
-    val mc = new MetricsCollector(spark)
-    try {
-      val before = mc.snapshot.keySet
-      val id = obsId.incrementAndGet()
-
+    val id = obsId.incrementAndGet()
+    // every health count rides a write action inside this one scope
+    val ((guard, unauditedRows, unauditedModalities, unauditedTop), observed) =
+      MetricsCollector.during(spark, "media-audit") {
       def audited(df: DataFrame, modality: String, undecodable: org.apache.spark.sql.Column) =
         df.observe(s"media_audit_${id}_$modality",
           count(lit(1)).as("rows"),
@@ -259,28 +261,27 @@ object RunMediaAudit {
       if (cfg.pairs) {
         // pair counts ride the pair writes as observes too — never a
         // read-back count job over a potentially cluster-quadratic output
-        def observed(name: String, pairs: DataFrame) =
+        def observedPairs(name: String, pairs: DataFrame) =
           pairs.observe(s"media_audit_${id}_pairs_$name", count(lit(1)).as("rows"))
         def hashesOf(table: String) =
           spark.read.parquet(s"${cfg.out}/${cfg.table}_$table")
-        // bracket each pair write with a listener-bus drain + snapshot
-        // diff so the bucket-guard counters (fresh lsh_bucket_guard_*
-        // names per guardedBandPairs call) attribute to THEIR modality —
-        // a replica-heavy image corpus must not read as an audio guard
-        // hit. A drain that times out makes the attribution unreliable —
-        // WARN, like every other drain site, instead of silently
-        // misreporting "guard never activated"
-        def drainOrWarn(where: String): Unit =
-          if (!org.apache.spark.GraftListenerBridge.waitListenerBusEmpty(spark.sparkContext))
-            System.err.println(s"[media-audit] warning: listener bus did not drain " +
-              s"in 10 s around the $where pair write — guard attribution may lag")
+        // each pair write runs in its own metrics scope so the
+        // bucket-guard counters (fresh lsh_bucket_guard_* names per
+        // guardedBandPairs call) attribute to THEIR modality — a
+        // replica-heavy image corpus must not read as an audio guard hit.
+        // Doubles round to Long (the guard's fractional counter,
+        // dropped_sub_buckets, is integral by construction — Σ 1/s over s
+        // rows each).
         def guardedWrite(name: String, pairs: DataFrame): Unit = {
-          drainOrWarn(name)
-          val seen = mc.snapshot.keySet
-          sink.overwrite(s"${cfg.table}_${name}_pairs", observed(name, pairs))
-          drainOrWarn(name)
-          val hits = mc.newNonZeroByPrefix("lsh_bucket_guard_", seen)
-            .toSeq.flatMap(_._2)
+          val (_, seen) = MetricsCollector.during(spark, s"media-audit $name pairs") {
+            sink.overwrite(s"${cfg.table}_${name}_pairs", observedPairs(name, pairs))
+          }
+          val hits = seen.toSeq
+            .filter { case (k, _) => k.startsWith("lsh_bucket_guard_") }
+            .flatMap(_._2.collect {
+              case (f, v: Long) if v != 0L => f -> v
+              case (f, v: Double) if v != 0.0 => f -> math.round(v)
+            })
             .groupMapReduce(_._1)(_._2)(_ + _)
           if (hits.nonEmpty) guard += name -> hits
         }
@@ -404,26 +405,20 @@ object RunMediaAudit {
         else unmatched.orderBy(col("n").desc, col("__m").asc).limit(5)
           .collect().toSeq.map(r => r.getString(0) -> r.getLong(1))
 
-      if (!org.apache.spark.GraftListenerBridge.waitListenerBusEmpty(spark.sparkContext))
-        System.err.println("[media-audit] warning: listener bus did not drain " +
-          "in 10 s — report may be partial")
-      val snap = mc.snapshot.toSeq
-        .filter { case (name, _) =>
-          name.startsWith(s"media_audit_${id}_") && !before(name) }
-        .map { case (name, fields) => name.substring(s"media_audit_${id}_".length) -> fields }
-        .toMap
-      def field(key: String, f: String): Long =
-        snap.get(key).flatMap(_.get(f).collect { case n: Long => n }).getOrElse(0L)
-      val audits = Seq("image", "audio", "video").map { m =>
-        m -> ModalityReport(field(m, "rows"), field(m, "undecodable"),
-          if (cfg.pairs) field(s"pairs_$m", "rows") else -1L,
-          if (cfg.dedup) field(s"survivors_$m", "rows") else -1L,
-          if (cfg.semDedup.isDefined) field(s"sem_survivors_$m", "rows") else -1L)
-      }.toMap
-      AuditReport(audits, unauditedRows, unauditedModalities, unauditedTop, guard,
-        cleanDocs =
-          if (cfg.textSurvivors.isDefined) field("clean_docs", "rows") else -1L)
-    } finally mc.close()
+      (guard, unauditedRows, unauditedModalities, unauditedTop)
+    }
+    def field(key: String, f: String): Long =
+      observed.get(s"media_audit_${id}_$key").flatMap(_.get(f).collect { case n: Long => n })
+        .getOrElse(0L)
+    val audits = Seq("image", "audio", "video").map { m =>
+      m -> ModalityReport(field(m, "rows"), field(m, "undecodable"),
+        if (cfg.pairs) field(s"pairs_$m", "rows") else -1L,
+        if (cfg.dedup) field(s"survivors_$m", "rows") else -1L,
+        if (cfg.semDedup.isDefined) field(s"sem_survivors_$m", "rows") else -1L)
+    }.toMap
+    AuditReport(audits, unauditedRows, unauditedModalities, unauditedTop, guard,
+      cleanDocs =
+        if (cfg.textSurvivors.isDefined) field("clean_docs", "rows") else -1L)
   }
 
   def main(args: Array[String]): Unit = {

@@ -17,7 +17,7 @@ import graft.sink.ParquetSink
   *   [--min-quality 0.3] [--bands 4] [--rows-per-band 4] [--jaccard 0.6]
   *   [--contain 0.8] [--substring-k 8] [--max-candidates 4096]
   *   [--lm-max-ppl X [--lm-kn [--lm-kn-order 2|3|4|5] |
-  *     --lm-ref <path> [--lm-ref-broadcast]]]
+  *     --lm-ref <path>]]
   *   [--embeddings <parquet> --sem-threshold X [--sem-centroids K]
   *    [--sem-max-cell N] [--embed-id-col vec_id] [--embed-vec-col embedding]]
   *   [--select-target-col C (--select-top-n N |
@@ -31,8 +31,9 @@ import graft.sink.ParquetSink
   * containment removal → substring-span removal), and writes the clean
   * corpus through [[graft.sink.ParquetSink]]. Per-stage doc counts are
   * the pipeline's `observe` metrics — computed during the ONE write
-  * action, never an extra count job — drained synchronously off the
-  * listener bus and printed as the run report:
+  * action, never an extra count job — read through one
+  * [[graft.run.MetricsCollector.during]] scope around the run and
+  * printed as the run report:
   *
   * {{{
   * [train-prep] input=500000 curated=163840 after_contain=163710 clean=163710
@@ -71,11 +72,9 @@ object RunTrainPrep {
       // --lm-ref <path> points the gate at a FIXED reference model: the
       // bigram LM trains once on the trusted corpus at <path> (parquet
       // with the same --text-col) instead of on the corpus being
-      // filtered — the CCNet deployment shape. --lm-ref-broadcast marks
-      // the reference model bounded enough to broadcast into the scoring
-      // joins (right for a trusted slice, wrong for a crawl-sized model)
+      // filtered — the CCNet deployment shape. AQE broadcasts the model
+      // side of the scoring joins when it measures small at runtime
       lmRef: Option[String] = None,
-      lmRefBroadcast: Boolean = false,
       // --lm-kn switches the SELF-TRAINED gate's smoothing from add-1 to
       // interpolated Kneser-Ney (the KenLM/CCNet family; --lm-kn-order
       // picks the order, 2 (default) to 5). Mutually exclusive with
@@ -152,7 +151,6 @@ object RunTrainPrep {
       case "--max-candidates" :: v :: t => loop(t, cfg.copy(maxCandidates = v.toInt))
       case "--lm-max-ppl" :: v :: t => loop(t, cfg.copy(lmMaxPpl = Some(v.toDouble)))
       case "--lm-ref" :: v :: t => loop(t, cfg.copy(lmRef = Some(v)))
-      case "--lm-ref-broadcast" :: t => loop(t, cfg.copy(lmRefBroadcast = true))
       case "--lm-kn" :: t => loop(t, cfg.copy(lmKn = true))
       case "--lm-kn-order" :: v :: t => loop(t, cfg.copy(lmKnOrder = v.toInt))
       case "--embeddings" :: v :: t => loop(t, cfg.copy(semEmbeddings = Some(v)))
@@ -188,12 +186,18 @@ object RunTrainPrep {
       require(c > 0, s"--pack-capacity must be positive; got $c"))
     cfg.lmMaxPpl.foreach(p =>
       require(p > 0, s"--lm-max-ppl must be positive; got $p"))
-    // dependent flags: a reference model without an armed gate (and a
-    // broadcast hint without a reference) would be silent no-ops
+    // thresholds are fractions: a percent typed by mistake (--jaccard 60)
+    // would confirm no pair and silently skip near-dup removal
+    require(cfg.jaccard > 0 && cfg.jaccard <= 1,
+      s"--jaccard must be in (0, 1]; got ${cfg.jaccard}")
+    require(cfg.contain > 0 && cfg.contain <= 1,
+      s"--contain must be in (0, 1]; got ${cfg.contain}")
+    require(cfg.minQuality >= 0 && cfg.minQuality <= 1,
+      s"--min-quality must be in [0, 1]; got ${cfg.minQuality}")
+    // dependent flag: a reference model without an armed gate would be a
+    // silent no-op
     require(cfg.lmRef.isEmpty || cfg.lmMaxPpl.isDefined,
       "--lm-ref requires --lm-max-ppl (the reference model feeds the gate)")
-    require(!cfg.lmRefBroadcast || cfg.lmRef.isDefined,
-      "--lm-ref-broadcast requires --lm-ref")
     require(!cfg.lmKn || cfg.lmMaxPpl.isDefined,
       "--lm-kn picks the gate's smoothing; it requires --lm-max-ppl")
     require(!(cfg.lmKn && cfg.lmRef.isDefined),
@@ -306,9 +310,7 @@ object RunTrainPrep {
         raw.join(ranked.select(cfg.idCol), Seq(cfg.idCol), "left_semi")
       case _ => raw
     }
-    val mc = new MetricsCollector(spark)
-    try {
-      val before = mc.snapshot.keySet
+    val (_, observed) = MetricsCollector.during(spark, "train-prep") {
       // fixed-reference LM: train once on the trusted corpus before the
       // pipeline builds (one read + two aggregations of the slice)
       val lmModel = cfg.lmRef.map { path =>
@@ -333,7 +335,7 @@ object RunTrainPrep {
         rowsPerBand = cfg.rowsPerBand, jaccardThreshold = cfg.jaccard,
         containThreshold = cfg.contain, substringK = cfg.substringK,
         maxCandidatesPerDoc = cfg.maxCandidates, lmMaxPpl = cfg.lmMaxPpl,
-        lmModel = lmModel, lmBroadcastModel = cfg.lmRefBroadcast,
+        lmModel = lmModel,
         lmKn = cfg.lmKn, lmKnOrder = cfg.lmKnOrder,
         embeddings = semEmb, semThreshold = cfg.semThreshold,
         semCentroids = cfg.semCentroids, semMaxCell = cfg.semMaxCell,
@@ -394,28 +396,23 @@ object RunTrainPrep {
               toks, col(cfg.packShard), col(cfg.idCol), col("n_tokens"), cap)
         sink.overwrite(s"${cfg.table}_packed", packed)
       }
-      // synchronous drain: the stage metrics were computed during the write
-      // action above; after the bus empties the snapshot diff is exact
-      if (!org.apache.spark.GraftListenerBridge.waitListenerBusEmpty(spark.sparkContext))
-        System.err.println("[train-prep] warning: listener bus did not drain " +
-          "in 10 s — stage report may be partial")
-      val snap = mc.snapshot.toSeq
-      val stages = snap
-        .filter { case (name, _) => name.startsWith("train_prep_") && !before(name) }
-        .flatMap { case (name, fields) =>
-          fields.get("docs").collect { case n: Long =>
-            name.substring(name.indexOf('_', "train_prep_".length) + 1) -> n
-          }
-        }.toMap
-      // the containment stage's candidate-budget counters, summed across
-      // this run's observe instances (the pipeline emits one per call) —
-      // silent posting drops must surface in the production report
-      val guard = snap
-        .filter { case (name, _) => name.startsWith("containment_guard_") && !before(name) }
-        .flatMap { case (_, fields) => fields.collect { case (f, v: Long) => f -> v } }
-        .groupMapReduce(_._1)(_._2)(_ + _)
-      Report(stages, guard)
-    } finally mc.close()
+    }
+    // the stage metrics were computed during the write action above
+    val stages = observed.toSeq
+      .filter { case (name, _) => name.startsWith("train_prep_") }
+      .flatMap { case (name, fields) =>
+        fields.get("docs").collect { case n: Long =>
+          name.substring(name.indexOf('_', "train_prep_".length) + 1) -> n
+        }
+      }.toMap
+    // the containment stage's candidate-budget counters, summed across
+    // this run's observe instances (the pipeline emits one per call) —
+    // silent posting drops must surface in the production report
+    val guard = observed.toSeq
+      .filter { case (name, _) => name.startsWith("containment_guard_") }
+      .flatMap { case (_, fields) => fields.collect { case (f, v: Long) => f -> v } }
+      .groupMapReduce(_._1)(_._2)(_ + _)
+    Report(stages, guard)
   }
 
   private val StageOrder =

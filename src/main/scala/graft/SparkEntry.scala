@@ -1356,7 +1356,8 @@ object SparkEntry {
   // CCNet deployment shape): the bigram LM trains ONCE on the trusted
   // slice (source = src0) and prices the WHOLE corpus against it;
   // out-of-model bigrams smooth from count 0 (an OOV position costs
-  // −ln V). The model is slice-sized, so the scoring joins broadcast.
+  // −ln V). The model is slice-sized, so AQE broadcasts it into the
+  // scoring joins.
   // The oracle retrains the slice model in SQL and replays the left-join
   // smoothing with the q92 decimal discipline ----------------------------
   private def q101LmRef(s: SparkSession, d: String): DataFrame = {
@@ -1364,7 +1365,7 @@ object SparkEntry {
     val model = graft.operators.TextAnalysis
       .trainBigramLm(docs.filter(col("source") === "src0"), "text")
     graft.operators.TextAnalysis
-      .bigramLmScoreWith(docs, "doc_id", "text", model, broadcastModel = true)
+      .bigramLmScoreWith(docs, "doc_id", "text", model)
       .orderBy("doc_id")
   }
 

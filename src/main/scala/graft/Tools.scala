@@ -147,15 +147,17 @@ object Tools {
     System.gc()
   }
 
-  private def drainBus(spark: SparkSession, what: String): Unit =
-    if (!GraftListenerBridge.waitListenerBusEmpty(spark.sparkContext))
-      System.err.println(s"[tools] warning: listener bus did not drain in 10 s — $what")
-
-  /** Nonzero `lsh_bucket_guard_*` fields delivered since `before`. */
-  private def guardNotes(mc: MetricsCollector, before: Set[String]): String =
-    mc.newNonZeroByPrefix("lsh_bucket_guard_", before).toSeq
+  /** Nonzero `lsh_bucket_guard_*` fields among `observed`; doubles round to
+    * Long (the guard's fractional counter is integral by construction).
+    */
+  private def guardNotes(observed: Map[String, Map[String, Any]]): String =
+    observed.toSeq
+      .filter { case (k, _) => k.startsWith("lsh_bucket_guard_") }
       .flatMap { case (k, fields) =>
-        fields.map { case (f, v) => s"${k.split("_").last}.$f=$v" }
+        fields.collect {
+          case (f, v: Long) if v != 0L => s"${k.split("_").last}.$f=$v"
+          case (f, v: Double) if v != 0.0 => s"${k.split("_").last}.$f=${math.round(v)}"
+        }
       }
       .sorted.mkString(", ")
 
@@ -222,7 +224,9 @@ object Tools {
       val (sec, n) = timed(fn(spark, sfDir).queryExecution.toRdd.count())
       // synchronous drain: every StageCompleted of this rep is delivered
       // before the read, none leaks into the next rep's buffer
-      drainBus(spark, s"rep $rep stage table may be partial")
+      if (!GraftListenerBridge.waitListenerBusEmpty(spark.sparkContext))
+        System.err.println(s"[tools] warning: listener bus did not drain in 10 s — " +
+          s"rep $rep stage table may be partial")
       val snap = stages.synchronized { stages.toVector }
       val jsnap = jobs.synchronized { jobs.toVector }
       println(f"== $qname rep $rep: $sec%.2f s, output rows $n")
@@ -414,27 +418,28 @@ object Tools {
     val sfDir = a.lift(0).getOrElse("/tmp/sf10")
     val outDir = a.lift(1).getOrElse("/tmp/ladder_out")
     new java.io.File(outDir).mkdirs()
-    val mc = new MetricsCollector(spark)
     def rung(name: String)(consume: DataFrame => Long): Unit = {
-      val before = mc.snapshot.keySet
-      val (sec, rows) = timed(consume(SparkEntry.queries(name)(spark, sfDir)))
-      drainBus(spark, s"$name guard counters may be partial")
-      println(f"LADDER $name rows=$rows sec=$sec%.1f guard=[${guardNotes(mc, before)}]")
+      val ((sec, rows), observed) = MetricsCollector.during(spark, s"ladder $name") {
+        timed(consume(SparkEntry.queries(name)(spark, sfDir)))
+      }
+      println(f"LADDER $name rows=$rows sec=$sec%.1f guard=[${guardNotes(observed)}]")
       teardown(spark)
     }
     def noop(name: String)(df: DataFrame): Long = {
       val obs = s"ladder_rows_$name"
-      mc.observeRows(df, obs).write.format("noop").mode("overwrite").save()
-      mc.await(obs).map(_("rows")).collect { case l: Long => l }.getOrElse(-1L)
+      val (_, observed) = MetricsCollector.during(spark, s"ladder $name") {
+        df.observe(obs, count(lit(1)).as("rows")).write.format("noop").mode("overwrite").save()
+      }
+      observed.get(obs).flatMap(_.get("rows")).collect { case l: Long => l }.getOrElse(-1L)
     }
     Seq("q16_dedup_exact", "q17_minhash_lsh_pairs", "q61_minhash64_pairs",
       "q25_embedding_neardup", "q38_embedding_band_lsh")
       .foreach(q => rung(q)(noop(q)))
-    try rung("q45_dedup_components") { labels =>
+    rung("q45_dedup_components") { labels =>
       val path = s"$outDir/q45_dedup_components"
       labels.coalesce(1).write.mode("overwrite").parquet(path)
       spark.read.parquet(path).count()
-    } finally mc.close()
+    }
   }
 
   /** SemDeDup at corpus scale: exhaustive vs two-level pruned assignment
@@ -445,32 +450,28 @@ object Tools {
     val sfDir = a.lift(0).getOrElse("/tmp/sf10")
     val threshold = a.lift(1).fold(0.35)(_.toDouble)
     val numGroups = a.lift(2).fold(0)(_.toInt)
-    val mc = new MetricsCollector(spark)
-    try {
-      val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-      val n = emb.count()
-      val centroids = Dedup
-        .semCentroidsFor(emb, "vec_id", "embedding", n, numCentroids = 0, seed = 42L)
-        .localCheckpoint(true)
-      val k = centroids.count()
-      def exhaustive = Dedup.semAssign(emb, "vec_id", "embedding", centroids)
-        .select("id", "centroid_id", "cosc")
-      def pruned = Dedup.semAssignPruned(emb, "vec_id", "embedding", centroids,
-        numGroups = numGroups).select("id", "centroid_id", "cosc")
-      for ((label, asg) <- Seq("exhaustive" -> (() => exhaustive), "pruned" -> (() => pruned))) {
-        val (sec, _) = timed(asg().write.mode("overwrite").format("noop").save())
-        println(f"SEM_LADDER assign $label n=$n K=$k sec=$sec%.1f")
-      }
-      val diff = exhaustive.exceptAll(pruned).count()
-      println(s"SEM_LADDER assign identity exhaustive-vs-pruned exceptAll=$diff " +
-        (if (diff == 0L) "IDENTICAL" else "DIVERGED"))
-      val before = mc.snapshot.keySet
-      val (sec, survivors) =
-        timed(Dedup.semDedupAuto(emb, "vec_id", "embedding", threshold).count())
-      drainBus(spark, "guard counters may be partial")
-      println(f"SEM_LADDER n=$n threshold=$threshold survivors=$survivors " +
-        f"sec=$sec%.1f guard=[${guardNotes(mc, before)}]")
-    } finally mc.close()
+    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
+    val n = emb.count()
+    val centroids = Dedup
+      .semCentroidsFor(emb, "vec_id", "embedding", n, numCentroids = 0, seed = 42L)
+      .localCheckpoint(true)
+    val k = centroids.count()
+    def exhaustive = Dedup.semAssign(emb, "vec_id", "embedding", centroids)
+      .select("id", "centroid_id", "cosc")
+    def pruned = Dedup.semAssignPruned(emb, "vec_id", "embedding", centroids,
+      numGroups = numGroups).select("id", "centroid_id", "cosc")
+    for ((label, asg) <- Seq("exhaustive" -> (() => exhaustive), "pruned" -> (() => pruned))) {
+      val (sec, _) = timed(asg().write.mode("overwrite").format("noop").save())
+      println(f"SEM_LADDER assign $label n=$n K=$k sec=$sec%.1f")
+    }
+    val diff = exhaustive.exceptAll(pruned).count()
+    println(s"SEM_LADDER assign identity exhaustive-vs-pruned exceptAll=$diff " +
+      (if (diff == 0L) "IDENTICAL" else "DIVERGED"))
+    val ((sec, survivors), observed) = MetricsCollector.during(spark, "ladder sem") {
+      timed(Dedup.semDedupAuto(emb, "vec_id", "embedding", threshold).count())
+    }
+    println(f"SEM_LADDER n=$n threshold=$threshold survivors=$survivors " +
+      f"sec=$sec%.1f guard=[${guardNotes(observed)}]")
   }
 
   /** SemDeDup wall per stage — kmeans, assignment, intra-cell pairs,

@@ -17,49 +17,34 @@ object Verify {
     // activates (star-collapse / sub-split / drop). Oracle SQL computes the
     // plain join, so a query whose guard metrics are nonzero must FAIL the
     // gate loudly instead of letting DuckDB compare diverged semantics
-    // (VERDICT r6 #4). Observed-metric delivery is async — drain the
-    // listener bus synchronously and diff against the names already seen
-    // before each query.
-    val mc = new graft.run.MetricsCollector(spark)
-    // caller drains the listener bus (synchronous, exact) before calling
-    def guardViolations(before: Set[String]): Seq[String] = {
-      mc.snapshot.toSeq
-        .filter { case (name, _) => name.startsWith("lsh_bucket_guard_") && !before(name) }
+    // (VERDICT r6 #4). Each query runs in its own metrics scope: the scope
+    // drains the listener bus on exit, also when the query throws, so no
+    // late metric of one query is attributed to the next.
+    def guardViolations(observed: Map[String, Map[String, Any]]): Seq[String] =
+      observed.toSeq
+        .filter { case (name, _) => name.startsWith("lsh_bucket_guard_") }
         .flatMap { case (name, fields) =>
           fields.collect {
             case (f, v: Long) if v != 0L => s"$name.$f=$v"
             case (f, v: Double) if v != 0.0 => s"$name.$f=$v"
           }
         }
-    }
     SparkEntry.queries.filter { case (n, _) => only.forall(_(n)) }.foreach { case (name, fn) =>
-      // drain BEFORE capturing the seen-set (ADVICE r11): when the previous
-      // query threw, its post-write drain never ran, and its late-delivered
-      // guard metrics would otherwise land after this capture and be
-      // misattributed to this query
-      org.apache.spark.GraftListenerBridge.waitListenerBusEmpty(spark.sparkContext)
-      val seen = mc.snapshot.keySet
       try {
-        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
+        val (_, observed) = graft.run.MetricsCollector.during(spark, s"verify $name") {
+          fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+            .parquet(s"$outDir/$name")
+        }
         // Only oracle-compared queries can "diverge from the oracle" —
         // rows-only queries (no oracleSql entry, e.g. q61's xxhash64
         // pipeline) keep their output: guard activation is their designed
         // bounded-work behavior, not a gate violation.
-        // Synchronous listener-bus drain (ADVICE r10): metric attribution
-        // is exact — no fixed 200 ms sleep per query, no late-delivered
-        // metric from the PREVIOUS query leaking into this query's
-        // seen-set diff. A backlogged bus (10 s deadline) degrades to the
-        // old eventually-consistent read with a warning.
-        if (!org.apache.spark.GraftListenerBridge.waitListenerBusEmpty(spark.sparkContext))
-          System.err.println(s"[verify] $name warning: listener bus did not " +
-            "drain in 10 s — guard-metric attribution may lag one query")
         // Containment's candidate-budget guard is SQL-mirrored (the oracle
         // computes the same posting cap), so activation never diverges from
         // the oracle — report it, don't withhold (VERDICT r9 #2: "drop
         // metric visible in Verify's guard report").
-        val info = mc.snapshot.toSeq
-          .filter { case (n2, _) => n2.startsWith("containment_guard_") && !seen(n2) }
+        val info = observed.toSeq
+          .filter { case (n2, _) => n2.startsWith("containment_guard_") }
           .flatMap { case (n2, fields) =>
             fields.collect { case (f, v: Long) if f == "dropped_postings" && v != 0L =>
               s"$n2.$f=$v" }
@@ -72,14 +57,14 @@ object Verify {
         // star-collapse, so activation never diverges — report as a note,
         // don't withhold (the containment-guard precedent above).
         val mirrored =
-          if (SparkEntry.guardMirroredOracles(name)) guardViolations(seen)
+          if (SparkEntry.guardMirroredOracles(name)) guardViolations(observed)
           else Seq.empty
         if (mirrored.nonEmpty)
           System.err.println(s"[verify] $name note: LSH bucket guard active " +
             s"(${mirrored.mkString(", ")}) — oracle mirrors the star-collapse")
         val bad =
           if (SparkEntry.oracleSql.contains(name) &&
-            !SparkEntry.guardMirroredOracles(name)) guardViolations(seen)
+            !SparkEntry.guardMirroredOracles(name)) guardViolations(observed)
           else Seq.empty
         if (bad.nonEmpty) {
           System.err.println(
@@ -91,7 +76,6 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    mc.close()
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.

@@ -732,16 +732,26 @@ object Dedup {
     // doc count: one job instead of the two this operator used to pay
     // (a dedicated shingled.count() materialization, then the guard
     // count). maxAnchorDf is only needed when the ANCHOR plan is built,
-    // which happens after that job either way. Fallback on listener
-    // timeout: a plain count over the (now materialized) checkpoint.
+    // which happens after that job either way. The metrics scope spans the
+    // checkpoint's build and that job. Fallback on a missing count: a
+    // plain count over the (now materialized) checkpoint.
     val docsObs = s"containment_docs_${guardObsId.incrementAndGet()}"
-    val mcDocs = new graft.run.MetricsCollector(docs.sparkSession)
-    // two consumers (anchor ranking + the guard's heavy-gram split) —
-    // checkpoint, or the count shuffle over every exploded gram runs twice
-    val dfreq = shingled
-      .observe(docsObs, count(lit(1)).as("n"))
-      .select(col("__cid"), explode(col("__csh")).as("__g"))
-      .groupBy("__g").agg(count(lit(1)).as("__df")).lazySerCkpt
+    val postCap = math.max(maxCandidatesPerDoc / math.max(anchorsPerDoc, 1), 1)
+    val ((dfreq, overCap, overCapN), observed) =
+      graft.run.MetricsCollector.during(docs.sparkSession, "containment") {
+        // two consumers (anchor ranking + the guard's heavy-gram split) —
+        // checkpoint, or the count shuffle over every exploded gram runs twice
+        val dfreq = shingled
+          .observe(docsObs, count(lit(1)).as("n"))
+          .select(col("__cid"), explode(col("__csh")).as("__g"))
+          .groupBy("__g").agg(count(lit(1)).as("__df")).lazySerCkpt
+        val overCap = dfreq.filter(col("__df") > postCap)
+        (dfreq, overCap, overCap.count())
+      }
+    val nDocs = observed.get(docsObs).flatMap(_.get("n")) match {
+      case Some(l: Long) => l
+      case _ => shingled.count()
+    }
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("__cid")).orderBy(col("__df").asc, col("__g").asc)
     // The anchor window's input is compute-dense per byte (every doc's
@@ -758,19 +768,6 @@ object Dedup {
     // overhead outweighed the balance benefit (same trap as Spread.forCpu's
     // first cut; A/B dev/r16b/contain_npart_ab.log).
     val nPart = docs.sparkSession.sparkContext.defaultParallelism
-    // the guard count job (below) is the first action of this operator and
-    // materializes shingled + dfreq; the observed doc count arrives with it
-    val postCap = math.max(maxCandidatesPerDoc / math.max(anchorsPerDoc, 1), 1)
-    val overCap = dfreq.filter(col("__df") > postCap)
-    val (overCapN, nDocs) =
-      try {
-        val oc = overCap.count()
-        val n = mcDocs.await(docsObs) match {
-          case Some(m) => m("n") match { case l: Long => l; case _ => shingled.count() }
-          case None => shingled.count()
-        }
-        (oc, n)
-      } finally mcDocs.close()
     val maxAnchorDf = math.max(math.ceil(maxAnchorDfFrac * nDocs).toLong, 16L)
     val anchors = ex.join(dfreq, Seq("__g"))
       .filter(col("__df") <= maxAnchorDf)
@@ -1356,12 +1353,9 @@ object Dedup {
     // pins local ≡ contracted ≡ direct components on randomized graphs.
     val contractible = preContract &&
       sym.schema("a").dataType == org.apache.spark.sql.types.LongType
-    val mc = new graft.run.MetricsCollector(pairs.sparkSession)
-    // ONE finally owns the listener from here on (ADVICE r16): any throw
-    // mid-materialization — contraction checkpoint, local closure, loop
-    // round — must unregister it, or failed closure calls accumulate
-    // listeners in long-lived sessions. The early-return local route exits
-    // through the same finally.
+    val spark = pairs.sparkSession
+    // the finally frees the edge checkpoint on every exit, the early-return
+    // local route included
     var edgesCkpt: Option[DataFrame] = None
     try {
     val edges =
@@ -1375,21 +1369,23 @@ object Dedup {
         // dev/r16b/sem_stage_profile_r16d.log. Counting on the fused job
         // costs one accumulator.)
         val obs = s"cc_sym_${guardObsId.incrementAndGet()}"
-        val c2 = localUnionFindPass(localUnionFindPass(
-          sym.observe(obs, count(lit(1)).as("n")))).eagerSerCkpt
-        val symN = mc.await(obs) match {
-          // a malformed metric resolves like a listener miss: assume big —
-          // the distributed route is the scale-safe default (its cost is
-          // bounded; a single task fed a huge graph is not) (ADVICE r16)
-          case Some(m) => m("n") match { case l: Long => l; case _ => Long.MaxValue }
-          case None => Long.MaxValue
+        val (c2, observed) = graft.run.MetricsCollector.during(spark, "closure") {
+          localUnionFindPass(localUnionFindPass(
+            sym.observe(obs, count(lit(1)).as("n")))).eagerSerCkpt
+        }
+        val symN = observed.get(obs).flatMap(_.get("n")) match {
+          // a missing or malformed metric: assume big — the distributed
+          // route is the scale-safe default (its cost is bounded; a single
+          // task fed a huge graph is not) (ADVICE r16)
+          case Some(l: Long) => l
+          case _ => Long.MaxValue
         }
         if (symN <= ccLocalMax) {
           // small graph: finish the (component-preserving) contracted star
           // forest in one single-task union-find job — no propagation loop
           val labels = localClosureLabels(c2).eagerSerCkpt
           ckptRdd(c2).foreach(_.unpersist(blocking = false))
-          return labels // the finally below closes mc
+          return labels
         }
         val e = c2.unionByName(c2.select(col("b").as("a"), col("a").as("b")))
           .eagerSerCkpt
@@ -1420,17 +1416,19 @@ object Dedup {
         // through the previous labels (comp ← label(comp)) — labels only
         // shrink (comp ≤ id invariant), so the jump is a pure accelerator
         // taking chain convergence from O(diameter) to O(log diameter)
-        val next = labels
-          .join(nbrMin, Seq("id"), "left")
-          .withColumn("__m", least(col("comp"), coalesce(col("nbr"), col("comp"))))
-          .join(labels.select(col("comp").as("__jump"), col("id").as("__m")),
-            Seq("__m"), "left")
-          .withColumn("__next", coalesce(col("__jump"), col("__m")))
-          .observe(name, sum(when(col("__next") =!= col("comp"), 1L).otherwise(0L))
-            .as("changed"))
-          .select(col("id"), col("__next").as("comp"))
-          .eagerSerCkpt
-        changed = mc.await(name) match {
+        val (next, observed) = graft.run.MetricsCollector.during(spark, "closure") {
+          labels
+            .join(nbrMin, Seq("id"), "left")
+            .withColumn("__m", least(col("comp"), coalesce(col("nbr"), col("comp"))))
+            .join(labels.select(col("comp").as("__jump"), col("id").as("__m")),
+              Seq("__m"), "left")
+            .withColumn("__next", coalesce(col("__jump"), col("__m")))
+            .observe(name, sum(when(col("__next") =!= col("comp"), 1L).otherwise(0L))
+              .as("changed"))
+            .select(col("id"), col("__next").as("comp"))
+            .eagerSerCkpt
+        }
+        changed = observed.get(name) match {
           case Some(m) =>
             m("changed") match {
               case l: Long => l
@@ -1459,7 +1457,6 @@ object Dedup {
       }
       labels
     } finally {
-      mc.close()
       // the returned labels are lineage-truncated at their own checkpoint,
       // so the edge blocks are dead weight once the loop ends
       edgesCkpt.foreach(e => ckptRdd(e).foreach(_.unpersist(blocking = false)))

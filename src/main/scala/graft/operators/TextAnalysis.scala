@@ -548,24 +548,20 @@ object TextAnalysis {
     *
     * Scale shape: the scored corpus collapses to per-doc (p, w, cnt)
     * before any join, exactly as the self-trained path. The model joins
-    * are (p, w)- and (p)-keyed; with `broadcastModel` they become
-    * broadcasts — RIGHT when the reference model is bounded (a trusted
-    * slice's bigram table), WRONG for a crawl-sized model, so the flag
-    * defaults off and the caller who knows the model's size decides.
+    * are (p, w)- and (p)-keyed; AQE turns them into broadcasts when the
+    * model side measures small at runtime (a trusted slice's bigram
+    * table) and keeps a crawl-sized model shuffled.
     */
   def bigramLmScoreWith(
       docs: org.apache.spark.sql.DataFrame,
       idCol: String,
       textCol: String,
       model: BigramLm,
-      addK: Double = 1.0,
-      broadcastModel: Boolean = false): org.apache.spark.sql.DataFrame = {
+      addK: Double = 1.0): org.apache.spark.sql.DataFrame = {
     require(addK > 0, s"addK must be positive (add-k smoothing); got $addK")
     require(model.vocabSize > 0,
       s"model vocabulary must be non-empty; got ${model.vocabSize}")
     val id = col(idCol)
-    val hint = (df: org.apache.spark.sql.DataFrame) =>
-      if (broadcastModel) broadcast(df) else df
     // NOT spread — re-measured r17 along with the self-trained gates'
     // tokenizedBase (dev/r17/q101_ab.log, 5-rep: 1.26 vs 1.12 s with
     // spread); see tokenizedBase's scaladoc for the mechanism
@@ -579,8 +575,8 @@ object TextAnalysis {
     val mc = model.contexts
       .select(col("p").as("__cp"), col("cc").as("__mcc"))
     val scored = bi
-      .join(hint(mb), col("__p") === col("__mp") && col("__w") === col("__mw"), "left")
-      .join(hint(mc), col("__p") === col("__cp"), "left")
+      .join(mb, col("__p") === col("__mp") && col("__w") === col("__mw"), "left")
+      .join(mc, col("__p") === col("__cp"), "left")
       .withColumn("__lp",
         round(log(
           (coalesce(col("__mc"), lit(0L)) + lit(addK)) /

@@ -72,7 +72,8 @@ object TrainPrep {
     * each the count of docs REMAINING after that stage — the
     * `run/Metrics.scala` pattern: computed DURING the materializing action,
     * never an extra count job over a 100 TB corpus). [[RunTrainPrep]]
-    * surfaces them as the run report; the unique suffix keeps names legal
+    * reads them through one `MetricsCollector.during` scope around the run
+    * and surfaces them as the run report; the unique suffix keeps names legal
     * when one session runs the pipeline twice (q73 + q74 in one Verify).
     */
   def pipeline(
@@ -95,7 +96,6 @@ object TrainPrep {
       // full of boilerplate cannot teach the model that boilerplate is
       // normal. Ignored unless lmMaxPpl arms the gate.
       lmModel: Option[TextAnalysis.BigramLm] = None,
-      lmBroadcastModel: Boolean = false,
       // Kneser-Ney smoothing for the SELF-TRAINED gate (the KenLM/CCNet
       // smoothing family — TextAnalysis.bigramLmScoreKn at order 2,
       // .ngramLmScoreKn at 3-5). Self-trained only: the
@@ -185,8 +185,7 @@ object TrainPrep {
     val lmKept = lmMaxPpl match {
       case Some(maxPpl) =>
         val scoredDf = lmModel match {
-          case Some(m) => TextAnalysis.bigramLmScoreWith(
-            semKept, idCol, textCol, m, broadcastModel = lmBroadcastModel)
+          case Some(m) => TextAnalysis.bigramLmScoreWith(semKept, idCol, textCol, m)
           case None if lmKn && lmKnOrder >= 3 =>
             TextAnalysis.ngramLmScoreKn(semKept, idCol, textCol, lmKnOrder)
           case None if lmKn => TextAnalysis.bigramLmScoreKn(semKept, idCol, textCol)

@@ -2,17 +2,17 @@ package graft.run
 
 import scala.collection.concurrent.TrieMap
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.QueryExecution
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Observation-based per-stage metrics (SURVEY.md §2.1 S13 / §2.6 A8,
   * `etl/utils/metrics.py`): `df.observe` attaches named aggregates that are
   * computed DURING whatever action materializes the frame — no extra count
-  * job per entity, which matters when the frame is 100 TB. Results arrive
-  * through a [[QueryExecutionListener]] (delivered asynchronously after the
-  * action; [[snapshot]] is eventually consistent, [[await]] polls).
+  * job, which matters when the frame is 100 TB. Results arrive through a
+  * [[QueryExecutionListener]], delivered asynchronously after the action;
+  * readers go through [[MetricsCollector.during]], which drains the
+  * listener bus before it returns.
   */
 final class MetricsCollector(spark: SparkSession) extends AutoCloseable {
 
@@ -27,43 +27,33 @@ final class MetricsCollector(spark: SparkSession) extends AutoCloseable {
   }
   spark.listenerManager.register(listener)
 
-  /** Attach row/error-style counters to a frame; they materialize with the
-    * frame's next action.
-    */
-  def observeRows(df: DataFrame, name: String): DataFrame =
-    df.observe(name, count(lit(1)).as("rows"))
-
-  def snapshot: Map[String, Map[String, Any]] = seen.toMap
-
-  /** Nonzero numeric fields of observations whose name starts with `prefix`
-    * and was NOT in `before` — the snapshot-diff attribution idiom shared
-    * by the guard-disclosure call sites (Verify / RunTrainPrep /
-    * RunMediaAudit grew three hand-rolled copies of it; keep the
-    * semantics in one place). Doubles round to Long (the guard's
-    * fractional counter, dropped_sub_buckets, is integral by
-    * construction — Σ 1/s over s rows each).
-    */
-  def newNonZeroByPrefix(
-      prefix: String, before: Set[String]): Map[String, Map[String, Long]] =
-    snapshot.toSeq
-      .filter { case (name, _) => name.startsWith(prefix) && !before(name) }
-      .map { case (name, fields) =>
-        name -> fields.collect {
-          case (f, v: Long) if v != 0L => f -> v
-          case (f, v: Double) if v != 0.0 => f -> math.round(v)
-        }
-      }
-      .filter(_._2.nonEmpty)
-      .toMap
-
-  /** Poll until the named observation has been delivered (listener delivery
-    * is async relative to the action).
-    */
-  def await(name: String, timeoutMs: Long = 10000): Option[Map[String, Any]] = {
-    val deadline = System.currentTimeMillis() + timeoutMs
-    while (!seen.contains(name) && System.currentTimeMillis() < deadline) Thread.sleep(20)
-    seen.get(name)
-  }
+  /** Observations delivered so far, in hash order at every size. */
+  def snapshot: Map[String, Map[String, Any]] = scala.collection.immutable.HashMap.from(seen)
 
   override def close(): Unit = spark.listenerManager.unregister(listener)
+}
+
+object MetricsCollector {
+
+  /** Runs `body` with a listener registered and returns its value with the
+    * observations delivered while it ran (the [[MetricsCollector.snapshot]]
+    * shape). On exit, also when `body` throws, the listener bus is drained
+    * once — a drain that times out is warned about on stderr under `label`,
+    * since the observations may then be partial — and the listener is
+    * unregistered. Callers treat an absent observation as missing, never
+    * as zero.
+    */
+  def during[A](spark: SparkSession, label: String)(
+      body: => A): (A, Map[String, Map[String, Any]]) = {
+    val mc = new MetricsCollector(spark)
+    val out =
+      try body
+      finally {
+        if (!org.apache.spark.GraftListenerBridge.waitListenerBusEmpty(spark.sparkContext))
+          System.err.println(s"[$label] warning: listener bus did not drain in 10 s " +
+            "— observed metrics may be partial")
+        mc.close()
+      }
+    (out, mc.snapshot)
+  }
 }

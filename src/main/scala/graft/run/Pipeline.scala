@@ -31,6 +31,11 @@ import graft.model.{Destination, Entities}
   * The background jobs carry the submitting thread's job group and
   * description. A failure cancels the run's jobs, waits for the background
   * thread and its jobs to stop, then rethrows the first error.
+  *
+  * Per-entity row counts ([[report]]) are the return values of the
+  * `count()` that materialises each cached frame, so they cannot arrive
+  * late. `collector` is unused; it remains only because the benchmark
+  * harness (`perfbench`) still passes one.
   */
 final class Pipeline(
     spark: SparkSession,
@@ -41,18 +46,12 @@ final class Pipeline(
 
   private val results = mutable.LinkedHashMap[(String, Destination), DataFrame]()
   private val metrics = mutable.LinkedHashMap[String, Long]()
-  private val absent = mutable.ArrayBuffer.empty[String]
 
   /** Run entities in topo order with the provided stage implementations.
     * Entities without a stage are skipped (partial runs, like the
     * reference's `--entities` flag).
     */
   def run(stages: Map[String, Pipeline.Stage]): Map[(String, Destination), DataFrame] = {
-    // S13: per-entity row counts ride the background materialisation as
-    // observed metrics — a separate count() per entity would be a second
-    // full pass over every frame (×15 entities; prohibitive when a frame is
-    // 100 TB); the sink's write then reads the cache
-    val mc = collector.getOrElse(new MetricsCollector(spark))
     val sc = spark.sparkContext
     val tag = s"graft-pipeline-${java.util.UUID.randomUUID()}"
     val worker = Executors.newSingleThreadExecutor { (r: Runnable) =>
@@ -61,14 +60,18 @@ final class Pipeline(
       t
     }
     val firstError = new AtomicReference[Throwable]()
-    // (entity, destination, materialised-frame future), in topological order
-    val pending = mutable.Queue.empty[(String, Destination, CompletableFuture[Unit])]
+    // (entity, destination, future of the materialising count), in
+    // topological order
+    val pending = mutable.Queue.empty[(String, Destination, CompletableFuture[Long])]
 
     def sinkReady(block: Boolean): Unit =
       while (pending.nonEmpty && (block || pending.head._3.isDone)) {
         val (entity, dest, done) = pending.dequeue()
-        try done.join()
-        catch { case e: CompletionException if e.getCause != null => throw e.getCause }
+        // S13: the count that materialises the cache IS the entity's row
+        // count — no second pass over the frame; the sink reads the cache
+        metrics(s"$entity/${dest.toString.toLowerCase}") =
+          try done.join()
+          catch { case e: CompletionException if e.getCause != null => throw e.getCause }
         if (!dryRun) sink(entity, dest, results((entity, dest)))
       }
 
@@ -87,27 +90,23 @@ final class Pipeline(
         }
         val out = stage(src, (bare ++ qualified).toMap)
         for ((dest, df) <- out) {
-          val name = s"${cfg.name}/${dest.toString.toLowerCase}"
           // cached: later entities broadcast-join against this result, and
           // the sink re-reads it — one computation, many consumers (K3
           // contract: ids are computed once, never re-derived with drifting
           // state). Caching happens on the worker, after every earlier frame
           // is materialised; plans built here see the cache once it exists.
-          val observed = mc.observeRows(df, name)
-          results((cfg.name, dest)) = observed
+          results((cfg.name, dest)) = df
           pending += ((cfg.name, dest,
-            SQLExecution.withThreadLocalCaptured[Unit](
+            SQLExecution.withThreadLocalCaptured[Long](
               spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], worker) {
-              if (firstError.get == null) {
-                try observed.cache().count(): Unit
-                catch { case e: Throwable => firstError.compareAndSet(null, e); throw e }
-              }
+              if (firstError.get != null) throw firstError.get
+              try df.cache().count()
+              catch { case e: Throwable => firstError.compareAndSet(null, e); throw e }
             }))
         }
         sinkReady(block = false)
       }
       sinkReady(block = true)
-      collect(mc)
       results.toMap
     } catch {
       case e: Throwable =>
@@ -120,23 +119,7 @@ final class Pipeline(
     } finally {
       worker.shutdown()
       sc.removeJobTag(tag)
-      if (collector.isEmpty) mc.close()
     }
-  }
-
-  /** Reads every entity's observed row count after the last sink call; an
-    * observation that never arrives is recorded in [[missing]] and warned
-    * about, never silently dropped.
-    */
-  private def collect(mc: MetricsCollector): Unit = {
-    val deadline = System.currentTimeMillis() + 10000
-    for ((entity, dest) <- results.keys; name = s"$entity/${dest.toString.toLowerCase}")
-      mc.await(name, math.max(0L, deadline - System.currentTimeMillis())) match {
-        case Some(m) => metrics(name) = m("rows").asInstanceOf[Long]
-        case None =>
-          absent += name
-          System.err.println(s"[pipeline] WARNING row count for $name never arrived")
-      }
   }
 
   /** Blocks until none of the run's jobs is still running (the status store
@@ -156,9 +139,6 @@ final class Pipeline(
 
   /** Per-entity row counts (`etl/utils/metrics.py` parity). */
   def report: Map[String, Long] = metrics.toMap
-
-  /** Entities (`name/destination`) whose observed row count never arrived. */
-  def missing: Seq[String] = absent.toSeq
 }
 
 object Pipeline {

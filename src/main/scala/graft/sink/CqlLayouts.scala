@@ -16,8 +16,8 @@ import org.apache.spark.sql.functions.col
   * DIRECTORY partition, which is right for the demo and for bounded-key
   * tables; a high-cardinality uuid partition key (messages_by_room at real
   * scale) would instead hash-distribute (`repartition` on the key +
-  * `sortWithinPartitions`, i.e. the bucketed layout of [[Layout]]) — the
-  * Cassandra connector gets the same effect from token-range writes.
+  * `sortWithinPartitions`, a bucketed layout) — the Cassandra connector
+  * gets the same effect from token-range writes.
   *
   * Write cost: each partition directory costs a directory create, a file
   * create and a commit rename whatever its byte size, so a table's write

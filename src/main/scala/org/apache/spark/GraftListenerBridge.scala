@@ -1,7 +1,7 @@
 package org.apache.spark
 
 /** `SparkContext.listenerBus` is `private[spark]`; listener readers
-  * (`graft.Tools stages`, Verify's guard check) need a synchronous drain so
+  * (`graft.Tools stages`, `MetricsCollector.during`) need a synchronous drain so
   * per-rep reads neither miss a straggler `SparkListenerStageCompleted` nor
   * leak it into the next rep's buffer — a fixed sleep is a race, not a
   * barrier.

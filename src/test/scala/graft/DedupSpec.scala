@@ -553,47 +553,41 @@ class DedupSpec extends SparkSpecBase {
     //          sub-split emits C(4,2)×10 = 60 pairs instead of r5's DROP
     //   dropme 20 rows, distinct fps, ONE sub → still oversized after the
     //          sub-split → dropped, metered
-    val mc = new graft.run.MetricsCollector(spark)
-    try {
-      val hot = (0L until 40L).map(i => (i, 1000L + i, 0, "hot", i % 10))
-      val dropme = (100L until 120L).map(i => (i, 1000L + i, 0, "dropme", 7L))
-      val ok = (200L until 205L).map(i => (i, 1000L + i, 0, "ok", 0L))
-      val dup = (300L until 312L).map(i => (i, 555L, 0, "dup", 0L))
-      val mixed = (400L until 410L).map { i =>
-        val fp = if (i <= 403L) 7000L else if (i <= 407L) 7001L else 7002L
-        (i, fp, 0, "mixed", 3L)
-      }
-      val banded = (hot ++ dropme ++ ok ++ dup ++ mixed)
-        .toDF("id", "fp", "band", "bucket", "sub")
-      val pairs = Dedup.guardedBandPairs(banded, maxBucketSize = 8)
+    val hot = (0L until 40L).map(i => (i, 1000L + i, 0, "hot", i % 10))
+    val dropme = (100L until 120L).map(i => (i, 1000L + i, 0, "dropme", 7L))
+    val ok = (200L until 205L).map(i => (i, 1000L + i, 0, "ok", 0L))
+    val dup = (300L until 312L).map(i => (i, 555L, 0, "dup", 0L))
+    val mixed = (400L until 410L).map { i =>
+      val fp = if (i <= 403L) 7000L else if (i <= 407L) 7001L else 7002L
+      (i, fp, 0, "mixed", 3L)
+    }
+    val banded = (hot ++ dropme ++ ok ++ dup ++ mixed)
+      .toDF("id", "fp", "band", "bucket", "sub")
+    val (pairs, observed) = graft.run.MetricsCollector.during(spark, "spec") {
+      Dedup.guardedBandPairs(banded, maxBucketSize = 8)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    }
 
-      val expOk = for (a <- 200L until 205L; b <- (a + 1) until 205L) yield (a, b)
-      val expHot = for (r <- 0L until 10L; i <- 0 until 4; j <- (i + 1) until 4)
-        yield (r + 10L * i, r + 10L * j)
-      val expDup = (301L until 312L).map((300L, _))
-      val expMixedStars = Seq((400L, 401L), (400L, 402L), (400L, 403L),
-        (404L, 405L), (404L, 406L), (404L, 407L), (408L, 409L))
-      val expMixedReps = Seq((400L, 404L), (400L, 408L), (404L, 408L))
-      assert(pairs ===
-        (expOk ++ expHot ++ expDup ++ expMixedStars ++ expMixedReps).toSet)
+    val expOk = for (a <- 200L until 205L; b <- (a + 1) until 205L) yield (a, b)
+    val expHot = for (r <- 0L until 10L; i <- 0 until 4; j <- (i + 1) until 4)
+      yield (r + 10L * i, r + 10L * j)
+    val expDup = (301L until 312L).map((300L, _))
+    val expMixedStars = Seq((400L, 401L), (400L, 402L), (400L, 403L),
+      (404L, 405L), (404L, 406L), (404L, 407L), (408L, 409L))
+    val expMixedReps = Seq((400L, 404L), (400L, 408L), (404L, 408L))
+    assert(pairs ===
+      (expOk ++ expHot ++ expDup ++ expMixedStars ++ expMixedReps).toSet)
 
-      // every guard escalation is metered (async listener delivery — poll)
-      def metric(suffix: String): Map[String, Any] = {
-        val deadline = System.currentTimeMillis() + 10000
-        while (!mc.snapshot.keys.exists(_.endsWith(suffix)) &&
-          System.currentTimeMillis() < deadline) Thread.sleep(20)
-        val k = mc.snapshot.keys.find(_.endsWith(suffix)).get
-        mc.snapshot(k)
-      }
-      assert(metric("_star")("star_pairs") === 18L)
-      assert(metric("_rep")("rep_pairs") === 3L)
-      val sub = metric("_sub")
-      assert(sub("subsplit_rep_rows") === 60L) // 40 hot + 20 dropme reps
-      assert(sub("dropped_rep_rows") === 20L)
-      // Σ 1/__s accumulates in double across partitions — ulp tolerance
-      assert(math.abs(sub("dropped_sub_buckets").asInstanceOf[Double] - 1.0) < 1e-9)
-    } finally mc.close()
+    // every guard escalation is metered
+    def metric(suffix: String): Map[String, Any] =
+      observed(observed.keys.find(_.endsWith(suffix)).get)
+    assert(metric("_star")("star_pairs") === 18L)
+    assert(metric("_rep")("rep_pairs") === 3L)
+    val sub = metric("_sub")
+    assert(sub("subsplit_rep_rows") === 60L) // 40 hot + 20 dropme reps
+    assert(sub("dropped_rep_rows") === 20L)
+    // Σ 1/__s accumulates in double across partitions — ulp tolerance
+    assert(math.abs(sub("dropped_sub_buckets").asInstanceOf[Double] - 1.0) < 1e-9)
   }
 
   test("guardedBandPairs empty-guard pruning: pruned (no oversized bucket) and legacy " +
@@ -631,19 +625,15 @@ class DedupSpec extends SparkSpecBase {
     val banded = spark.range(n)
       .select(col("id"), (col("id") + 1000000L).as("fp"),
         lit(0).as("band"), lit("hot").as("bucket"), pmod(col("id"), lit(16L)).as("sub"))
-    val mc = new graft.run.MetricsCollector(spark)
-    try {
-      val got = Dedup.guardedBandPairs(banded, Dedup.DefaultMaxBucketSize).count()
-      // 5000 = 16*312 + 8: eight sub-buckets of 313, eight of 312
-      val expected = 8L * (313L * 312L / 2L) + 8L * (312L * 311L / 2L)
-      assert(got === expected)
-      val deadline = System.currentTimeMillis() + 10000
-      while (!mc.snapshot.keys.exists(_.endsWith("_sub")) &&
-        System.currentTimeMillis() < deadline) Thread.sleep(20)
-      val sub = mc.snapshot(mc.snapshot.keys.find(_.endsWith("_sub")).get)
-      assert(sub("subsplit_rep_rows") === n)
-      assert(sub("dropped_rep_rows") === 0L)
-    } finally mc.close()
+    val (got, observed) = graft.run.MetricsCollector.during(spark, "spec") {
+      Dedup.guardedBandPairs(banded, Dedup.DefaultMaxBucketSize).count()
+    }
+    // 5000 = 16*312 + 8: eight sub-buckets of 313, eight of 312
+    val expected = 8L * (313L * 312L / 2L) + 8L * (312L * 311L / 2L)
+    assert(got === expected)
+    val sub = observed(observed.keys.find(_.endsWith("_sub")).get)
+    assert(sub("subsplit_rep_rows") === n)
+    assert(sub("dropped_rep_rows") === 0L)
   }
 
   test("hammingBits is exact past 63 bits (conv would saturate) and agrees with the fold") {

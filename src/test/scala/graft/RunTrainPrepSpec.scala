@@ -186,11 +186,19 @@ class RunTrainPrepSpec extends SparkSpecBase {
     bad("--pack-split") // without --pack-capacity it would be a silent no-op
     bad("--lm-max-ppl", "0")
     bad("--lm-max-ppl", "-2.5")
+    // thresholds are fractions: a percent typed by mistake confirms nothing
+    bad("--jaccard", "60")
+    bad("--jaccard", "0")
+    bad("--contain", "80")
+    bad("--contain", "-0.5")
+    bad("--min-quality", "30")
+    bad("--min-quality", "-0.1")
     // positive values still parse
     val ok = RunTrainPrep.parse(Seq("--in", "a", "--out", "b",
       "--pack-capacity", "1024", "--max-candidates", "128",
-      "--lm-max-ppl", "40"))
+      "--lm-max-ppl", "40", "--jaccard", "1", "--contain", "0.5", "--min-quality", "0"))
     assert(ok.packCapacity === Some(1024L) && ok.maxCandidates === 128)
+    assert(ok.jaccard === 1.0 && ok.contain === 0.5 && ok.minQuality === 0.0)
     assert(ok.lmMaxPpl === Some(40.0))
   }
 
@@ -277,18 +285,16 @@ class RunTrainPrepSpec extends SparkSpecBase {
     val report = RunTrainPrep.execute(spark, RunTrainPrep.parse(Seq(
       "--in", s"$tmp/in", "--out", s"$tmp/out",
       "--min-quality", "0.0", "--lm-max-ppl", cut.toString,
-      "--lm-ref", s"$tmp/ref", "--lm-ref-broadcast")))
+      "--lm-ref", s"$tmp/ref")))
     assert(report.stages("after_lm") === 2L)
     val kept = spark.read.parquet(s"$tmp/out/clean_corpus")
       .select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
     assert(kept === Seq(1L, 2L))
 
-    // dependent flags fail at parse: a reference without an armed gate
-    // (and a broadcast hint without a reference) are silent no-ops
+    // dependent flag fails at parse: a reference without an armed gate is
+    // a silent no-op
     intercept[IllegalArgumentException](RunTrainPrep.parse(Seq(
       "--in", "a", "--out", "b", "--lm-ref", "p")))
-    intercept[IllegalArgumentException](RunTrainPrep.parse(Seq(
-      "--in", "a", "--out", "b", "--lm-max-ppl", "30", "--lm-ref-broadcast")))
   }
 
   test("--lm-kn: the gate scores with Kneser-Ney smoothing — CLI keep set " +

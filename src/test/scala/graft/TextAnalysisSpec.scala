@@ -300,7 +300,7 @@ class TextAnalysisSpec extends SparkSpecBase {
       (3L, "a q"),   // in-model context `a` (cc=3), unseen continuation q
       (4L, "")).toDF("doc_id", "text")
     val out = TextAnalysis
-      .bigramLmScoreWith(docs, "doc_id", "text", model, broadcastModel = true)
+      .bigramLmScoreWith(docs, "doc_id", "text", model)
       .orderBy("doc_id").collect()
     // doc 1 scores exactly as in-model: c(a,b)=2 ctx(a)=3, c(b,a)=1 ctx(b)=1, V=2
     val d1slp = lp6(2, 3, 2) * 2 + lp6(1, 1, 2)
@@ -326,17 +326,6 @@ class TextAnalysisSpec extends SparkSpecBase {
     val direct = TextAnalysis.bigramLmScore(corpus, "doc_id", "text")
       .orderBy("doc_id").collect().toSeq
     assert(selfScored === direct)
-  }
-
-  test("bigramLmScoreWith broadcast hint reaches the plan when requested") {
-    val ref = Seq((1L, "a b c d e")).toDF("doc_id", "text")
-    val docs = Seq((1L, "a b x")).toDF("doc_id", "text")
-    val model = TextAnalysis.trainBigramLm(ref, "text")
-    val plan = TextAnalysis
-      .bigramLmScoreWith(docs, "doc_id", "text", model, broadcastModel = true)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("BroadcastHashJoin") || plan.contains("BroadcastNestedLoopJoin"),
-      s"expected broadcast model joins in:\n$plan")
   }
 
   /** KN per-position log-prob: the operator's exact IEEE operation order
