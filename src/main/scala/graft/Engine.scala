@@ -16,8 +16,9 @@ object Engine {
   /** The session flavors, each a superset of the previous one's confs:
     * `Gen` (fixture generators) ⊂ `Verify` (the oracle correctness
     * dump: no AQE entries) ⊂ `Bench` (+ AQE sizing) ⊂ `Full` (+ the
-    * chmod-free local filesystem, the Catalyst extensions and the SQL
-    * function registry — what [[session]] builds).
+    * chmod-free local filesystem, driver-side partition discovery, the
+    * Catalyst extensions and the SQL function registry — what [[session]]
+    * builds).
     */
   sealed abstract class Kind
   object Kind {
@@ -86,10 +87,16 @@ object Engine {
       case Kind.Gen => gen
       case Kind.Verify => verify
       case Kind.Bench => bench
-      // file:// without a chmod child process per created file and
-      // directory when libhadoop is absent (same bits, same checksums)
-      case Kind.Full => bench :+
-        ("spark.hadoop.fs.file.impl" -> classOf[graft.sink.NioLocalFileSystem].getName)
+      case Kind.Full => bench ++ Seq(
+        // file:// without a chmod child process per created file and
+        // directory when libhadoop is absent (same bits, same checksums)
+        "spark.hadoop.fs.file.impl" -> classOf[graft.sink.NioLocalFileSystem].getName,
+        // Key-directory discovery on the driver: above 32 paths Spark lists
+        // a partitioned table with a job of one task per directory, which on
+        // a local file system costs far more than the one syscall per
+        // directory it replaces (a 250-key CQL table: a 250-task job per
+        // read). Listing is metadata only, so this moves no scan or result.
+        "spark.sql.sources.parallelPartitionDiscovery.threshold" -> Int.MaxValue.toString)
     }
   }
 

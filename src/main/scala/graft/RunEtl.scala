@@ -155,7 +155,10 @@ object RunEtl {
     // NOTE: partitionBy read-back re-infers partition-key column types from
     // directory names (see CqlLayouts.writeTo scaladoc) — fine for these
     // numeric/uuid keys and Validate's count-based checks, but a
-    // schema-sensitive consumer should read with an explicit schema.
+    // schema-sensitive consumer should read with an explicit schema. The
+    // key directories are discovered on the driver (Engine.confs), so a
+    // read-back starts no listing job; its scan still opens a file per key,
+    // so its cost follows the file count (ROADMAP item 2).
     val base = Pipeline.parquetSink(cfg.outDir)
     val sink: (String, Destination, DataFrame) => Unit =
       (entity, dest, df) =>

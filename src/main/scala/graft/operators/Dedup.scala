@@ -724,17 +724,16 @@ object Dedup {
       .select(col(idCol).as("__cid"), wordShingles(col(textCol), shingleLen).as("__csh"))
       .lazySerCkpt
     val ex = shingled.select(col("__cid"), explode(col("__csh")).as("__g"))
-    // Corpus count for the relative rarity cap rides the dfreq branch as
-    // an observed metric ABOVE the checkpoint scan (below a LAZY
-    // checkpoint the listener fires at build time with zeroed
-    // accumulators — the r16 TrainPrep lesson), so the heavy-gram count
-    // job below ALSO materializes the shingle checkpoint and delivers the
-    // doc count: one job instead of the two this operator used to pay
-    // (a dedicated shingled.count() materialization, then the guard
-    // count). maxAnchorDf is only needed when the ANCHOR plan is built,
-    // which happens after that job either way. The metrics scope spans the
-    // checkpoint's build and that job. Fallback on a missing count: a
-    // plain count over the (now materialized) checkpoint.
+    // Corpus count for the relative rarity cap: an observed metric on the
+    // shingle checkpoint's scan, BELOW the lazy dfreq checkpoint. The
+    // heavy-gram count job below builds that checkpoint, but the count does
+    // not ride that job's own event: it arrives only through the event
+    // posted when the lazy dfreq checkpoint is built, and the listener reads
+    // the accumulator when the bus processes that event, so the value seen
+    // depends on bus timing. The metrics scope spans the checkpoint's build
+    // and the count job. maxAnchorDf is only needed when the ANCHOR plan is
+    // built, after that job either way. Fallback on a missing count:
+    // shingled.count() over the (now materialized) checkpoint, one more job.
     val docsObs = s"containment_docs_${guardObsId.incrementAndGet()}"
     val postCap = math.max(maxCandidatesPerDoc / math.max(anchorsPerDoc, 1), 1)
     val ((dfreq, overCap, overCapN), observed) =

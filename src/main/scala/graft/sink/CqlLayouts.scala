@@ -122,7 +122,11 @@ object CqlLayouts {
     * a consumer is type-sensitive), and an empty-string key value round-trips
     * as `__HIVE_DEFAULT_PARTITION__` → NULL. The reference's keys are
     * numeric ids and non-empty uuids, so neither bites the migration's
-    * tables; flagging it for new layouts whose keys may not be.
+    * tables; flagging it for new layouts whose keys may not be. Opening the
+    * table lists one directory per key: [[graft.Engine.confs]] keeps that
+    * discovery on the driver (no Spark job per read however many keys),
+    * but a scan still opens one file per key, so read-back cost follows
+    * the file count (ROADMAP item 2).
     */
   def writeTo(df: DataFrame, path: String, layout: TableLayout): Unit = {
     // hash-distribute on the partition key first (Cassandra's token

@@ -26,10 +26,6 @@ object Rules {
 
   // ---- user (`data_transformer.py:210-323`) -------------------------------
 
-  /** F2 — extract-time role filter (`orchestrator.py:547-566`). */
-  def userExtractFilter(df: DataFrame): DataFrame =
-    df.filter(col("role").isin("USER_ROLE", "AGENTE_ROLE"))
-
   /** X2–X6 + J2/J3 for the relational destination. Dims: (mongo_id, id);
     * roles dim: (name, id) probed with the `_ROLE`-suffix-stripped name
     * (`etl/utils/id_mapper.py:98-136`).

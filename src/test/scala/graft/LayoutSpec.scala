@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.functions._
 
 /** CQL physical layout: every partition directory is clustering-sorted,
-  * and a byte-small frame's keys still spread over several write tasks.
+  * a byte-small frame's keys still spread over several write tasks, and
+  * reading a many-key table back lists its directories on the driver.
   */
 class LayoutSpec extends SparkSpecBase {
   import spark.implicits._
@@ -61,5 +62,36 @@ class LayoutSpec extends SparkSpecBase {
     val ordered = Checks.clusteringOrder("layout-keys", back,
       CqlLayouts.all("messages_by_room").clustering)
     assert(ordered.passed, ordered.detail)
+  }
+
+  test("reading a table of more than 32 key directories starts only the footer job") {
+    import graft.sink.CqlLayouts
+    import org.apache.spark.GraftListenerBridge.waitListenerBusEmpty
+    val path = java.nio.file.Files.createTempDirectory("graft-cql-list").resolve("users").toString
+    val keys = 40 // above Spark's default parallelPartitionDiscovery.threshold (32)
+    CqlLayouts.writeTo((1 to keys).map(u => (f"user$u%02d", s"name-$u")).toDF("user_id", "name"),
+      path, CqlLayouts.all("users"))
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    def readJobs(): Int = {
+      waitListenerBusEmpty(spark.sparkContext)
+      jobs.set(0)
+      assert(spark.read.parquet(path).inputFiles.length === keys)
+      waitListenerBusEmpty(spark.sparkContext)
+      jobs.get
+    }
+    val threshold = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      assert(readJobs() === 1, "the session's read must list its key directories on the driver")
+      // teeth: at Spark's default threshold the same read adds a listing job
+      val prev = spark.conf.getOption(threshold)
+      spark.conf.set(threshold, "32")
+      try assert(readJobs() === 2)
+      finally prev.fold(spark.conf.unset(threshold))(spark.conf.set(threshold, _))
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 }
