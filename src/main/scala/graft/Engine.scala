@@ -94,8 +94,9 @@ object Engine {
         // Key-directory discovery on the driver: above 32 paths Spark lists
         // a partitioned table with a job of one task per directory, which on
         // a local file system costs far more than the one syscall per
-        // directory it replaces (a 250-key CQL table: a 250-task job per
-        // read). Listing is metadata only, so this moves no scan or result.
+        // directory it replaces (a CQL table of 100 room directories: a
+        // 100-task job per read). Listing is metadata only, so this moves no
+        // scan or result.
         "spark.sql.sources.parallelPartitionDiscovery.threshold" -> Int.MaxValue.toString)
     }
   }

@@ -147,18 +147,18 @@ object RunEtl {
     // dry-run treatment (materialized for metrics + downstream dims, not
     // loaded), matching `run_etl.py`'s extract+transform-without-load split.
     // Cassandra-destination entities are laid out per their CQL table's
-    // catalog entry (partition-key directories, clustering-ordered files —
-    // the storage property the reference gets from Scylla); the directory
-    // keeps the entity name so Validate/read-back paths are unchanged. Every
-    // Cassandra entity names a catalogued table whose keys its stage output
-    // carries, so a drift fails the write instead of landing unordered rows.
-    // NOTE: partitionBy read-back re-infers partition-key column types from
-    // directory names (see CqlLayouts.writeTo scaladoc) — fine for these
-    // numeric/uuid keys and Validate's count-based checks, but a
-    // schema-sensitive consumer should read with an explicit schema. The
-    // key directories are discovered on the driver (Engine.confs), so a
-    // read-back starts no listing job; its scan still opens a file per key,
-    // so its cost follows the file count (ROADMAP item 2).
+    // catalog entry (key-sorted files, or partition-key directories with
+    // clustering-ordered files — the storage property the reference gets
+    // from Scylla); the directory keeps the entity name so Validate/read-back
+    // paths are unchanged. Every Cassandra entity names a catalogued table
+    // whose keys its stage output carries, so a drift fails the write
+    // instead of landing unordered rows.
+    // NOTE: the directory tables (message, room_member) read back with
+    // room_id re-inferred from directory names (see CqlLayouts.writeTo
+    // scaladoc) — fine for these uuid keys and Validate's checks, but a
+    // schema-sensitive consumer should read with an explicit schema; their
+    // scan opens a file per key. The key-sorted tables (roles, user, room)
+    // keep their written schema.
     val base = Pipeline.parquetSink(cfg.outDir)
     val sink: (String, Destination, DataFrame) => Unit =
       (entity, dest, df) =>

@@ -201,14 +201,19 @@ object Validate {
         r.count(), d.filter(col("special_role_id").isNotNull).count())
     }
 
-    // 13. physical clustering order of the Cassandra entity tables RunEtl
-    // lays out in place (our Scylla-storage-property equivalent)
+    // 13. physical layout of the Cassandra entity tables RunEtl lays out in
+    // place (our Scylla-storage-property equivalent): clustering order inside
+    // each key directory, or one key-sorted file per key
     section = 13
-    for (e <- Entities.ordered; t <- e.cassandraTable;
-      layout <- graft.sink.CqlLayouts.all.get(t) if layout.clustering.nonEmpty)
-      check(s"clustering-$t", s"cassandra/${e.name}") { case Seq(df) =>
-        Checks.clusteringOrder(s"clustering-$t", df, layout.clustering)
-      }
+    for (e <- Entities.ordered; t <- e.cassandraTable; layout <- graft.sink.CqlLayouts.all.get(t))
+      if (layout.clustering.nonEmpty)
+        check(s"clustering-$t", s"cassandra/${e.name}") { case Seq(df) =>
+          Checks.clusteringOrder(s"clustering-$t", df, layout.clustering)
+        }
+      else
+        check(s"key-sorted-$t", s"cassandra/${e.name}") { case Seq(df) =>
+          Checks.keySortedFiles(s"key-sorted-$t", df, layout.partitionKeys)
+        }
 
     (Checks.verdict(checks.toSeq)._1, checks.toSeq)
   }

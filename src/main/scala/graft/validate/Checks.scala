@@ -194,6 +194,20 @@ object Checks {
     CheckResult(name, bad == 0, s"$bad clustering-order violations")
   }
 
+  /** Layout check — a key-sorted table (a [[graft.sink.CqlLayouts]] entry
+    * without clustering columns, one row per key): every key is in exactly
+    * one file, and every file's rows ascend by key, so a key lookup reads
+    * one file and prunes on its row-group min/max. `df` must be a direct
+    * file scan, as for [[clusteringOrder]].
+    */
+  def keySortedFiles(name: String, df: DataFrame, keys: Seq[String]): CheckResult = {
+    val split = df.groupBy(keys.map(col): _*)
+      .agg(countDistinct(col("_metadata.file_path")).as("files"))
+      .filter(col("files") > 1).count()
+    val order = clusteringOrder(name, df, keys.map(_ -> true))
+    CheckResult(name, split == 0 && order.passed, s"$split keys in several files, ${order.detail}")
+  }
+
   /** Check 14 — weighted verdict (`validate_migration.py:988-1043`): the
     * suite passes when every critical check passes and the overall pass
     * rate clears the bar.

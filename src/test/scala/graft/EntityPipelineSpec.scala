@@ -359,14 +359,19 @@ class EntityPipelineSpec extends SparkSpecBase {
     assert(report("message/cassandra") === 4L)
     assert(report("room/cassandra") === 2L)
     assert(report("room_member/cassandra") === 2L)
-    // every cassandra entity with a CQL catalog entry is partition-keyed
-    for ((ent, key) <- Seq("room" -> "room_id", "room_member" -> "room_id")) {
+    // room_details has no clustering columns: key-sorted files, no key
+    // directories; participants_by_room clusters, so it keeps room_id ones
+    def entries(ent: String): Seq[String] = {
       import scala.jdk.CollectionConverters._
-      val dirs = java.nio.file.Files.list(
-        java.nio.file.Paths.get(outDir, "cassandra", ent)).iterator().asScala.toSeq
-      assert(dirs.exists(_.getFileName.toString.startsWith(s"$key=")),
-        s"$ent not partitioned by $key: ${dirs.map(_.getFileName)}")
+      java.nio.file.Files.list(java.nio.file.Paths.get(outDir, "cassandra", ent))
+        .iterator().asScala.map(_.getFileName.toString).toSeq
     }
+    assert(!entries("room").exists(_.startsWith("room_id=")), s"room: ${entries("room")}")
+    assert(entries("room").exists(_.endsWith(".parquet")), s"room: ${entries("room")}")
+    val rooms = spark.read.parquet(s"$outDir/cassandra/room")
+    assert(Checks.keySortedFiles("cli-room-sorted", rooms, Seq("room_id")).passed)
+    assert(entries("room_member").exists(_.startsWith("room_id=")),
+      s"room_member not partitioned by room_id: ${entries("room_member")}")
 
     // messages_by_room layout (create_scylla_database.cql:21-46): directory
     // partition on room_id, message_id DESC inside each partition
@@ -383,7 +388,7 @@ class EntityPipelineSpec extends SparkSpecBase {
       Seq(("message_id", false))).passed)
 
     // the dual-destination user dependency: cassandra side laid out per the
-    // `users` table (partition user_id), postgres side dry-run only
+    // `users` table (key-sorted on user_id), postgres side dry-run only
     assert(java.nio.file.Files.list(java.nio.file.Paths.get(outDir, "cassandra", "user"))
       .iterator().hasNext)
     assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(outDir, "postgres")))
