@@ -143,9 +143,10 @@ object RunEtl {
 
     // target filtering happens at the SINK: dual-destination transforms still
     // compute both frames so sequential ids stay consistent across partial
-    // loads, but only the requested destination is written — the other gets
-    // dry-run treatment (materialized for metrics + downstream dims, not
-    // loaded), matching `run_etl.py`'s extract+transform-without-load split.
+    // loads, but only the requested destination is written — the other is
+    // skipped (Pipeline calls the sink only after its cache().count() has
+    // materialized and counted the frame for metrics and downstream dims),
+    // matching `run_etl.py`'s extract+transform-without-load split.
     // Cassandra-destination entities are laid out per their CQL table's
     // catalog entry (key-sorted files, or partition-key directories with
     // clustering-ordered files — the storage property the reference gets
@@ -162,7 +163,7 @@ object RunEtl {
     val base = Pipeline.parquetSink(cfg.outDir)
     val sink: (String, Destination, DataFrame) => Unit =
       (entity, dest, df) =>
-        if (!destMatches(cfg.target, dest)) df.count(): Unit
+        if (!destMatches(cfg.target, dest)) ()
         else if (dest == Destination.Cassandra) {
           val layout = CqlLayouts.all(Entities.byName(entity).cassandraTable.get)
           CqlLayouts.writeTo(df, s"${cfg.outDir}/cassandra/$entity", layout)

@@ -36,11 +36,30 @@ private[graft] object Ckpt {
       df.localCheckpoint(false, StorageLevel.MEMORY_AND_DISK_SER)
 
     /** Eager serialized checkpoint: materializes now (its own job); use
-      * when the caller immediately needs an observed metric or frees
-      * predecessors.
+      * when the caller frees predecessors right after.
       */
     def eagerSerCkpt: DataFrame =
       df.localCheckpoint(true, StorageLevel.MEMORY_AND_DISK_SER)
+
+    /** Eager serialized checkpoint whose building job also returns a row
+      * count: every row, or only those whose boolean column `flag` is true.
+      * The job has [[eagerSerCkpt]]'s shape (the eager form runs the same
+      * one job and drops its count); `Dataset.count()` would add an
+      * aggregate stage, which AQE runs as a second job. The count is an
+      * action's return value, so a route that reads it does not depend on
+      * listener-bus timing.
+      */
+    def countedSerCkpt(flag: Option[String] = None): (DataFrame, Long) = {
+      val c = lazySerCkpt
+      val rows = c.queryExecution.toRdd
+      val n = flag match {
+        case None => rows.count()
+        case Some(f) =>
+          val i = c.schema.fieldIndex(f)
+          rows.filter(_.getBoolean(i)).count()
+      }
+      (c, n)
+    }
   }
 
   /** The RDD a `localCheckpoint` persisted — so an iterative operator can

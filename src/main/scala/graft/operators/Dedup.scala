@@ -78,13 +78,6 @@ object Dedup {
       graft.functions.XxHash64Array(GraftColumnBridge.expression(shingles)))
   }
 
-  /** Character n-gram shingles (distinct). */
-  def charShingles(text: Column, n: Int): Column =
-    array_distinct(
-      transform(
-        sequence(lit(1), greatest(length(text) - (n - 1), lit(1))),
-        i => text.substr(i, lit(n))))
-
   /** MinHash signature: element k = min over shingles of md5(k || shingle).
     * Lexicographic min over fixed-width hex == numeric min of the hash, so
     * each seed is an independent permutation. Portable across engines
@@ -653,7 +646,8 @@ object Dedup {
     * document as boilerplate, and the operator silently returns zero rows
     * (measured — that is how this parameter became a fraction). Relative
     * rarity keeps the semantics invariant under corpus growth; the
-    * corpus count it needs is one footer-only count(*) job.
+    * corpus count it needs is the return value of the job that builds the
+    * shingle checkpoint.
     *
     * Deliberate recall boundary: a doc with fewer than `minAnchorHits`
     * distinct shingles can never be reported as the contained side (its
@@ -720,37 +714,18 @@ object Dedup {
     // Spread's scaladoc): warm shingling of the byte-small corpus is
     // sub-second single-task and the repartition's extra stages cost more
     // than they recover (dev/r16b/spread_ab2.log: q67 +0.6 s with spread)
-    val shingled = docs
+    // the job that builds the shingle checkpoint returns the corpus count
+    // the relative rarity cap needs
+    val (shingled, nDocs) = docs
       .select(col(idCol).as("__cid"), wordShingles(col(textCol), shingleLen).as("__csh"))
-      .lazySerCkpt
+      .countedSerCkpt()
     val ex = shingled.select(col("__cid"), explode(col("__csh")).as("__g"))
-    // Corpus count for the relative rarity cap: an observed metric on the
-    // shingle checkpoint's scan, BELOW the lazy dfreq checkpoint. The
-    // heavy-gram count job below builds that checkpoint, but the count does
-    // not ride that job's own event: it arrives only through the event
-    // posted when the lazy dfreq checkpoint is built, and the listener reads
-    // the accumulator when the bus processes that event, so the value seen
-    // depends on bus timing. The metrics scope spans the checkpoint's build
-    // and the count job. maxAnchorDf is only needed when the ANCHOR plan is
-    // built, after that job either way. Fallback on a missing count:
-    // shingled.count() over the (now materialized) checkpoint, one more job.
-    val docsObs = s"containment_docs_${guardObsId.incrementAndGet()}"
     val postCap = math.max(maxCandidatesPerDoc / math.max(anchorsPerDoc, 1), 1)
-    val ((dfreq, overCap, overCapN), observed) =
-      graft.run.MetricsCollector.during(docs.sparkSession, "containment") {
-        // two consumers (anchor ranking + the guard's heavy-gram split) —
-        // checkpoint, or the count shuffle over every exploded gram runs twice
-        val dfreq = shingled
-          .observe(docsObs, count(lit(1)).as("n"))
-          .select(col("__cid"), explode(col("__csh")).as("__g"))
-          .groupBy("__g").agg(count(lit(1)).as("__df")).lazySerCkpt
-        val overCap = dfreq.filter(col("__df") > postCap)
-        (dfreq, overCap, overCap.count())
-      }
-    val nDocs = observed.get(docsObs).flatMap(_.get("n")) match {
-      case Some(l: Long) => l
-      case _ => shingled.count()
-    }
+    // two consumers (anchor ranking + the guard's heavy-gram split) —
+    // checkpoint, or the count shuffle over every exploded gram runs twice
+    val dfreq = ex.groupBy("__g").agg(count(lit(1)).as("__df")).lazySerCkpt
+    val overCap = dfreq.filter(col("__df") > postCap)
+    val overCapN = overCap.count()
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("__cid")).orderBy(col("__df").asc, col("__g").asc)
     // The anchor window's input is compute-dense per byte (every doc's
@@ -1088,26 +1063,6 @@ object Dedup {
     }
   }
 
-  /** Hamming distance between two equal-length '0'/'1' bit strings. Bit
-    * arithmetic on the hot path: each string parses to a long (bits ≤ 32
-    * everywhere this is used — [[simHashBits]] caps at 32), then
-    * xor + bit_count counts differing positions in one codegen'd
-    * expression. `conv` saturates past unsigned-64, so strings longer than
-    * 63 bits take the per-character fold instead (the pre-r6 formulation) —
-    * the public API accepts ANY length without a silent wrong answer, and
-    * the length predicate folds away at planning time for literal-width
-    * callers. For the 64-bit simhash path the values are ALREADY longs —
-    * [[hamming64]] xors them directly, no strings.
-    */
-  def hammingBits(a: Column, b: Column): Column = {
-    val fast = bit_count(conv(a, 2, 10).cast("long").bitwiseXOR(conv(b, 2, 10).cast("long")))
-    val anyLength = aggregate(
-      zip_with(split(a, ""), split(b, ""), (x, y) => when(x =!= y, 1).otherwise(0)),
-      lit(0),
-      (acc, x) => acc + x)
-    when(length(a) <= 63 && length(b) <= 63, fast).otherwise(anyLength)
-  }
-
   /** Hamming distance between two 64-bit simhash longs ([[simHash64]]). */
   def hamming64(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
 
@@ -1216,22 +1171,24 @@ object Dedup {
     * contraction; safe on duplicate and self edges (union-find absorbs
     * both).
     */
-  /** Maximum SYMMETRIZED edge count for [[connectedComponents]] to close
-    * the graph in ONE single-task union-find pass (no propagation loop at
-    * all). 2^22 edges is one ≤ ~64 MB shuffle to one task plus a LongMap
-    * of ≤ 2^22 entries (~100 MB transient worst case) — comfortably inside
-    * one executor task and far cheaper than ANY distributed loop at that
-    * size (each loop round is a join + groupBy + checkpoint job; the r16
-    * probe measured every sf0.1 closure graph at 428-2,160 sym edges,
-    * where the loop's fixed per-job cost IS the query's closure cost).
-    * Above it the per-partition pre-contraction + min-label loop takes
-    * over (measured 4.0× at 40 M sym edges,
-    * `dev/r16/sem_stage_profile.log`). The count is measured per call
-    * (observed metric on the edge checkpoint), so the route adapts to the
-    * data, not to the deployment; [[connectedComponents]]' explicit
-    * `localClosureMaxEdges` argument overrides it (specs force a route).
+  /** Maximum CONTRACTED star-forest edge count (|c2|, the output of the
+    * two pre-contraction passes) for [[connectedComponents]] to close the
+    * graph in ONE single-task union-find pass (no propagation loop at all).
+    * It bounds exactly what that task reads: 2^22 edges is one ≤ ~64 MB
+    * shuffle to one task plus a LongMap of ≤ 2^22 entries (~100 MB
+    * transient worst case) — comfortably inside one executor task and far
+    * cheaper than ANY distributed loop at that size (each loop round is a
+    * join + groupBy + checkpoint job; the r16 probe measured every sf0.1
+    * closure graph at 428-2,160 symmetrized edges, and |c2| is at most
+    * that, where the loop's fixed per-job cost IS the query's closure
+    * cost). Above it the min-label loop over c2 takes over (measured 4.0×
+    * at 40 M sym edges, `dev/r16/sem_stage_profile.log`). |c2| is the
+    * return value of the job that checkpoints c2, measured per call, so the
+    * route adapts to the data, not to the deployment or to listener-bus
+    * timing; [[connectedComponents]]' explicit `localClosureMaxEdges`
+    * argument overrides it (specs force a route).
     */
-  private[graft] val LocalClosureMaxSymEdges: Long = 1L << 22
+  private[graft] val LocalClosureMaxStarEdges: Long = 1L << 22
 
   /** Exact closure of a SMALL symmetrized edge set in one task: union-find
     * over every edge, then (id, root) for every node seen. Union always
@@ -1318,26 +1275,28 @@ object Dedup {
     // threshold: the explicit arg when given (specs force a route), else
     // the constant
     val ccLocalMax =
-      if (localClosureMaxEdges >= 0L) localClosureMaxEdges else LocalClosureMaxSymEdges
+      if (localClosureMaxEdges >= 0L) localClosureMaxEdges else LocalClosureMaxStarEdges
     val sym = pairs.select(col("id1").as("a"), col("id2").as("b"))
       .unionByName(pairs.select(col("id2").as("a"), col("id1").as("b")))
-    // SCALE-ADAPTIVE ROUTE (r16 opt round): the symmetrized edge count
-    // rides the checkpoint action as an observed metric (zero extra jobs)
-    // and picks the closure engine by DATA size, not deployment:
+    // SCALE-ADAPTIVE ROUTE (r16 opt round): two per-partition union-find
+    // passes (PRE-CONTRACTION, VERDICT r15 next #1) collapse the edge set
+    // to a near-star-forest c2, and |c2| — the return value of the job that
+    // checkpoints it — picks the closure engine by DATA size, not
+    // deployment:
     //
-    //   symN ≤ ccLocalMax — [[localClosureLabels]]: ONE single-task
-    //   union-find job, no propagation loop. Every sf0.1 bench closure
-    //   graph is 428-2,160 sym edges (dev/r16b/cc_edges.log), where the
-    //   loop's fixed per-job cost — not data volume — was the entire
-    //   closure cost of ~14 queries (+0.3-1.4 s each after the ungated
-    //   r16 contraction landed, and 2-4 loop jobs even before it).
+    //   |c2| ≤ ccLocalMax — [[localClosureLabels]]: ONE single-task
+    //   union-find job over c2, no propagation loop. Every sf0.1 bench
+    //   closure graph is 428-2,160 sym edges (dev/r16b/cc_edges.log), so
+    //   |c2| ≤ |sym| is smaller still; there the loop's fixed per-job cost —
+    //   not data volume — was the entire closure cost of ~14 queries
+    //   (+0.3-1.4 s each after the ungated r16 contraction landed, and 2-4
+    //   loop jobs even before it).
     //
-    //   symN > ccLocalMax — PRE-CONTRACTION (VERDICT r15 next #1) + the
-    //   min-label loop: two per-partition union-find passes collapse the
-    //   edge set to a near-star-forest BEFORE the global loop, so each
-    //   propagation round joins ~|V| star edges instead of the full 2·|E|
-    //   symmetrized graph (the 100× sem pair graph is 20 M edges; closure
-    //   was 30 s of the 49 s semDedupAuto wall, 7.5 s contracted). Pass 1
+    //   |c2| > ccLocalMax — the min-label loop over c2: contracting
+    //   BEFORE the global loop means each propagation round joins ~|V|
+    //   star edges instead of the full 2·|E| symmetrized graph (the 100×
+    //   sem pair graph is 20 M edges; closure was 30 s of the 49 s
+    //   semDedupAuto wall, 7.5 s contracted). Pass 1
     //   partitions by source so a node's whole neighborhood contracts
     //   locally; pass 2 merges each node's per-partition roots.
     //   Correctness never depends on contraction QUALITY: union-find
@@ -1352,7 +1311,6 @@ object Dedup {
     // pins local ≡ contracted ≡ direct components on randomized graphs.
     val contractible = preContract &&
       sym.schema("a").dataType == org.apache.spark.sql.types.LongType
-    val spark = pairs.sparkSession
     // the finally frees the edge checkpoint on every exit, the early-return
     // local route included
     var edgesCkpt: Option[DataFrame] = None
@@ -1360,26 +1318,14 @@ object Dedup {
     val edges =
       if (contractible) {
         // ONE fused job, the inherited contraction shape exactly: the two
-        // per-partition union-find passes over the symmetrized plan, with
-        // the edge count riding the SAME job as an observe on the pass
-        // input. (First cut materialized a symmetrized-edge checkpoint to
-        // count it before routing — at 100× that single checkpoint wrote
-        // 40 M serialized rows for 28.4 s, 4× the whole inherited closure;
-        // dev/r16b/sem_stage_profile_r16d.log. Counting on the fused job
-        // costs one accumulator.)
-        val obs = s"cc_sym_${guardObsId.incrementAndGet()}"
-        val (c2, observed) = graft.run.MetricsCollector.during(spark, "closure") {
-          localUnionFindPass(localUnionFindPass(
-            sym.observe(obs, count(lit(1)).as("n")))).eagerSerCkpt
-        }
-        val symN = observed.get(obs).flatMap(_.get("n")) match {
-          // a missing or malformed metric: assume big — the distributed
-          // route is the scale-safe default (its cost is bounded; a single
-          // task fed a huge graph is not) (ADVICE r16)
-          case Some(l: Long) => l
-          case _ => Long.MaxValue
-        }
-        if (symN <= ccLocalMax) {
+        // per-partition union-find passes over the symmetrized plan, whose
+        // checkpoint job returns |c2|, the star-forest edge count the local
+        // closure's single task would read. (First cut materialized a
+        // symmetrized-edge checkpoint to count it before routing — at 100×
+        // that single checkpoint wrote 40 M serialized rows for 28.4 s, 4×
+        // the whole inherited closure; dev/r16b/sem_stage_profile_r16d.log.)
+        val (c2, c2N) = localUnionFindPass(localUnionFindPass(sym)).countedSerCkpt()
+        if (c2N <= ccLocalMax) {
           // small graph: finish the (component-preserving) contracted star
           // forest in one single-task union-find job — no propagation loop
           val labels = localClosureLabels(c2).eagerSerCkpt
@@ -1400,9 +1346,10 @@ object Dedup {
       .agg(min(col("b")).as("__nbr0"))
       .select(col("id"), least(col("id"), col("__nbr0")).as("comp"))
       .eagerSerCkpt
-    // convergence detection rides the checkpoint action as an observed
-    // metric — a separate changed-count join would double the actions per
-    // round (an iterative operator's cost is dominated by per-round jobs)
+    // convergence detection is the return value of the job that
+    // checkpoints each round's labels — a separate changed-count join would
+    // double the actions per round (an iterative operator's cost is
+    // dominated by per-round jobs)
     var changed = 1L
     var iter = 0
       while (changed > 0 && iter < maxIter) {
@@ -1410,43 +1357,25 @@ object Dedup {
           .join(labels.select(col("id").as("b"), col("comp")), Seq("b"))
           .groupBy(col("a").as("id"))
           .agg(min(col("comp")).as("nbr"))
-        val name = s"cc_changed_$iter"
         // two contractions per round: neighbor-min, then a pointer jump
         // through the previous labels (comp ← label(comp)) — labels only
         // shrink (comp ≤ id invariant), so the jump is a pure accelerator
         // taking chain convergence from O(diameter) to O(log diameter)
-        val (next, observed) = graft.run.MetricsCollector.during(spark, "closure") {
-          labels
-            .join(nbrMin, Seq("id"), "left")
-            .withColumn("__m", least(col("comp"), coalesce(col("nbr"), col("comp"))))
-            .join(labels.select(col("comp").as("__jump"), col("id").as("__m")),
-              Seq("__m"), "left")
-            .withColumn("__next", coalesce(col("__jump"), col("__m")))
-            .observe(name, sum(when(col("__next") =!= col("comp"), 1L).otherwise(0L))
-              .as("changed"))
-            .select(col("id"), col("__next").as("comp"))
-            .eagerSerCkpt
-        }
-        changed = observed.get(name) match {
-          case Some(m) =>
-            m("changed") match {
-              case l: Long => l
-              case _ => 0L // null sum ⇔ zero label rows ⇔ nothing left to change
-            }
-          case None =>
-            // listener-delivery timeout is NOT convergence: fall back to a
-            // real changed-count over the two checkpointed thin label sets
-            // (one extra cheap job, only on this rare path)
-            next.join(labels.withColumnRenamed("comp", "__prev"), Seq("id"))
-              .filter(col("comp") =!= col("__prev"))
-              .count()
-        }
-        // `next` is materialized and `changed` resolved (the listener-miss
-        // fallback above was the last reader of the old labels): free the
-        // superseded snapshot now — only `edges` and the current labels
-        // stay resident, regardless of round count
-        if (labels ne next) ckptRdd(labels).foreach(_.unpersist(blocking = false))
-        labels = next
+        val (round, roundChanged) = labels
+          .join(nbrMin, Seq("id"), "left")
+          .withColumn("__m", least(col("comp"), coalesce(col("nbr"), col("comp"))))
+          .join(labels.select(col("comp").as("__jump"), col("id").as("__m")),
+            Seq("__m"), "left")
+          .withColumn("__next", coalesce(col("__jump"), col("__m")))
+          .select(col("id"), col("__next").as("comp"),
+            (col("__next") =!= col("comp")).as("__changed"))
+          .countedSerCkpt(Some("__changed"))
+        // the round is materialized: free the superseded snapshot now —
+        // only `edges` and the current labels stay resident, regardless of
+        // round count
+        ckptRdd(labels).foreach(_.unpersist(blocking = false))
+        labels = round.drop("__changed")
+        changed = roundChanged
         iter += 1
       }
       if (changed > 0) {

@@ -18,13 +18,12 @@ import org.apache.spark.sql.types._
   * through a clearly-marked deterministic STUB ([[StubCodec]]) behind the
   * same interface a real decoder (javacv / ffmpeg bindings) would implement; the
   * Spark-side plumbing — schema contract, batch shape, partition-local
-  * reuse of a (normally expensive) codec handle, row-count-preserving and
-  * exploding variants — is real and tested.
+  * reuse of a (normally expensive) codec handle, row-count preservation —
+  * is real and tested.
   *
   * Scale notes: media blobs must NEVER be shuffled — all per-asset work is
   * map-side; `repartition` happens on metadata before the blobs are
-  * attached, and frame explosion multiplies rows AFTER the narrow decode so
-  * Spark can spill row-by-row.
+  * attached.
   */
 object Multimodal {
 
@@ -51,11 +50,13 @@ object Multimodal {
     */
   trait Codec extends Serializable {
     def features(modality: String, content: Array[Byte], dim: Int): Array[Float]
-    def frames(content: Array[Byte], everyMs: Long): Iterator[(Long, Array[Byte])]
   }
 
-  /** Codec that can additionally decode + re-encode still images. */
+  /** Codec that can additionally decode + re-encode still images and split
+    * a clip into timed frames.
+    */
   trait ImageCodec extends Codec {
+    def frames(content: Array[Byte], everyMs: Long): Iterator[(Long, Array[Byte])]
     /** (width, height, maxval, pixels) — None when the payload isn't this format. */
     def decodeImage(content: Array[Byte]): Option[(Int, Int, Int, Array[Byte])]
     def resize(content: Array[Byte], w: Int, h: Int): Option[Array[Byte]]
@@ -676,9 +677,8 @@ object Multimodal {
     * libraries — video containers (mp4/mkv frame demux) and compressed
     * audio (mp3/aac/opus); still images and PCM audio decode for REAL via
     * [[PgmCodec]]/[[PngCodec]]/[[WavCodec]] above. Features are a seeded
-    * byte-histogram projection, frames are fixed-size slices. Replace with
-    * a javacv/ffmpeg-backed Codec in a full environment — the operator
-    * code below does not change.
+    * byte-histogram projection. Replace with a javacv/ffmpeg-backed Codec
+    * in a full environment — the operator code below does not change.
     */
   object StubCodec extends Codec {
     def features(modality: String, content: Array[Byte], dim: Int): Array[Float] = {
@@ -692,9 +692,6 @@ object Multimodal {
       }
       out
     }
-    def frames(content: Array[Byte], everyMs: Long): Iterator[(Long, Array[Byte])] =
-      if (content == null) Iterator.empty
-      else content.grouped(64).zipWithIndex.map { case (chunk, i) => (i * everyMs, chunk) }
   }
 
   /** Row-preserving feature extraction: one feature vector per asset.
@@ -717,29 +714,6 @@ object Multimodal {
         Row(r.getLong(0), modality,
           if (content == null) 0L else content.length.toLong,
           c.features(modality, content, dim))
-      }
-    }(enc)
-  }
-
-  /** Exploding frame-sampler: video/audio rows fan out to one row per
-    * sampled frame AFTER the narrow decode (no blob shuffle).
-    */
-  def sampleFrames(
-      media: DataFrame,
-      everyMs: Long = 1000L,
-      codec: Codec = StubCodec): DataFrame = {
-    val schema = StructType(Seq(
-      StructField("media_id", LongType, nullable = false),
-      StructField("frame_ms", LongType, nullable = false),
-      StructField("frame", BinaryType, nullable = true)))
-    val enc = org.apache.spark.sql.Encoders.row(schema)
-    media.select("media_id", "content").mapPartitions { rows =>
-      val c = codec
-      rows.flatMap { r =>
-        val id = r.getLong(0)
-        c.frames(r.getAs[Array[Byte]](1), everyMs).map { case (ms, bytes) =>
-          Row(id, ms, bytes)
-        }
       }
     }(enc)
   }
@@ -1319,15 +1293,4 @@ object Multimodal {
           .select("id1", "id2", "hamming")
     }
   }
-
-  /** Metadata-only projection — the common fast path: prune the blob column
-    * at the scan so a stats query never reads media bytes (column pruning
-    * reaches the parquet reader; verify via ReadSchema in `.explain`).
-    */
-  def mediaStats(media: DataFrame): DataFrame =
-    media.select(col("media_id"), col("modality"),
-        col("meta.mime").as("mime"), col("meta.width").as("width"),
-        col("meta.height").as("height"), col("meta.duration_ms").as("duration_ms"))
-      .groupBy("modality", "mime")
-      .agg(count(lit(1)).as("n"), avg(col("duration_ms")).as("avg_duration_ms"))
 }

@@ -24,18 +24,6 @@ object TextAnalysis {
   def tokenCount(text: Column): Column =
     when(text.isNull || trim(text) === "", 0).otherwise(size(split(trim(text), "\\s+")))
 
-  /** BPE-ish subword count estimate: word-boundary pieces plus an extra
-    * piece per 6 chars of long words (approximates subword splitting
-    * without a vocabulary).
-    */
-  def subwordCountEstimate(text: Column): Column = {
-    val words = split(trim(text), "\\s+")
-    aggregate(
-      words,
-      lit(0),
-      (acc, w) => acc + greatest(ceil(length(w).cast("double") / 6.0).cast("int"), lit(1)))
-  }
-
   /** Quality signals: each component is a ratio of exact integer counts, so
     * the doubles are engine-portable (single division, no reductions).
     */
@@ -86,25 +74,6 @@ object TextAnalysis {
     import org.apache.spark.sql.GraftColumnBridge
     GraftColumnBridge.column(graft.functions.LangIdExpr(
       GraftColumnBridge.expression(split(lower(trim(text)), "\\s+")), LangMarkers))
-  }
-
-  /** The interpreted column formulation [[languageId]] is bit-identical to —
-    * kept for the equivalence spec and as the SQL-portable documentation of
-    * the semantics (this is what the DuckDB oracle runs).
-    */
-  def languageIdColumns(text: Column): Column = {
-    val words = split(lower(trim(text)), "\\s+")
-    val scores = LangMarkers.map { case (lang, markers) =>
-      lang -> size(org.apache.spark.sql.functions.filter(
-        words, w => w.isin(markers.map(x => x: Any): _*)))
-    }
-    // strictly-greater comparison in fixed order = deterministic argmax
-    val best = scores.tail.foldLeft((lit(scores.head._1), scores.head._2)) {
-      case ((bestLang, bestScore), (lang, score)) =>
-        (when(score > bestScore, lit(lang)).otherwise(bestLang),
-          greatest(score, bestScore))
-    }
-    when(best._2 > 0, best._1).otherwise(lit("und"))
   }
 
   /** Stable content fingerprint: md5 of case-folded, whitespace-collapsed
@@ -301,20 +270,6 @@ object TextAnalysis {
         explode(split(lower(trim(col(textCol))), "\\s+")).as("__w"))
       .filter(col("__w") =!= "")
       .groupBy(col("__tid"), col("__w")).agg(count(lit(1)).as("tf"))
-
-  /** Karp-Rabin rolling hash over words (polynomial accumulate) — cheap
-    * order-sensitive fingerprint for shift detection; xxhash64-based
-    * (scale path, not oracle-portable). The accumulator lives in Z_2^31 and
-    * tokens are masked to 32 bits so no step exceeds ~2^51: Spark 4 runs
-    * ANSI mode by default, where a wrapping `acc * p + x` would throw
-    * ARITHMETIC_OVERFLOW instead of wrapping.
-    */
-  def rollingHash(text: Column): Column =
-    aggregate(
-      split(trim(text), "\\s+"),
-      lit(0L),
-      (acc, w) =>
-        pmod(acc * 1000003L + xxhash64(w).bitwiseAND(lit(0xffffffffL)), lit(1L << 31)))
 
   /** Corpus-trained bigram language-model quality score — the CCNet-family
     * perplexity filter (Wenzek et al. 2020 filter heuristic; here the LM is

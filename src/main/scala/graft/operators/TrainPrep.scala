@@ -71,10 +71,11 @@ object TrainPrep {
     * (`train_prep_{n}_{input|curated|after_contain|clean}`, field `docs` —
     * each the count of docs REMAINING after that stage — the
     * `run/Metrics.scala` pattern: computed DURING the materializing action,
-    * never an extra count job over a 100 TB corpus). [[RunTrainPrep]]
-    * reads them through one `MetricsCollector.during` scope around the run
-    * and surfaces them as the run report; the unique suffix keeps names legal
-    * when one session runs the pipeline twice (q73 + q74 in one Verify).
+    * never an extra count job over a 100 TB corpus). They only report:
+    * [[RunTrainPrep]] reads them through the caller's metrics scope around
+    * the run and surfaces them as the run report; the unique suffix keeps
+    * names legal when one session runs the pipeline twice (q73 + q74 in
+    * one Verify).
     */
   def pipeline(
       docs: DataFrame,

@@ -13,6 +13,13 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * [[QueryExecutionListener]], delivered asynchronously after the action;
   * readers go through [[MetricsCollector.during]], which drains the
   * listener bus before it returns.
+  *
+  * Observations only report; nothing steers on them. The readers are the
+  * run reports of `Verify`, `RunTrainPrep`, `RunMediaAudit` and the
+  * `Tools ladder` command. Operator routes and limits read the return
+  * values of their own checkpoint jobs instead (`Ckpt.countedSerCkpt`), so
+  * a late or missing observation can change a report, never an output or
+  * a route.
   */
 final class MetricsCollector(spark: SparkSession) extends AutoCloseable {
 

@@ -306,10 +306,13 @@ class DedupSpec extends SparkSpecBase {
   }
 
   test("simhash: near-dups differ in few bits, unrelated docs in many") {
-    val df = Seq((docA, docB), (docA, docC)).toDF("a", "b")
-      .select(Dedup.hammingBits(
-        Dedup.simHashBits(col("a"), 32), Dedup.simHashBits(col("b"), 32)).as("d"))
-    val d = df.collect().map(_.getInt(0))
+    val bits = Seq((docA, docB), (docA, docC)).toDF("a", "b")
+      .select(Dedup.simHashBits(col("a"), 32), Dedup.simHashBits(col("b"), 32))
+      .collect().map(r => (r.getString(0), r.getString(1)))
+    val d = bits.map { case (a, b) =>
+      assert(a.length === 32 && b.length === 32)
+      a.zip(b).count { case (x, y) => x != y }
+    }
     assert(d(0) < d(1))
     assert(d(0) <= 8)
   }
@@ -407,6 +410,74 @@ class DedupSpec extends SparkSpecBase {
     }
   }
 
+  test("closure and containment routes do not depend on listener-bus timing") {
+    // A listener on the shared queue that blocks until the operator has
+    // returned holds back every QueryExecutionListener delivery (observed
+    // metrics included). Routes and limits read the return values of their
+    // own checkpoint jobs, so the output, the closure route and the job
+    // count must match a run without that listener. Jobs are counted per
+    // job group through the status tracker, whose queue is not blocked.
+    val sc = spark.sparkContext
+    val tracker = sc.statusTracker
+    def finished(group: String): Boolean =
+      tracker.getJobIdsForGroup(group).exists(id =>
+        tracker.getJobInfo(id).exists(_.status == org.apache.spark.JobExecutionStatus.SUCCEEDED))
+    def withJobCount[A](body: => A): (A, Int) = {
+      val group = s"route-invariance-${java.util.UUID.randomUUID()}"
+      sc.setJobGroup(group, group)
+      val out = try body finally sc.clearJobGroup()
+      // the status store trails the scheduler: once it has seen a sentinel
+      // job submitted after the body, it has seen every job of the body
+      sc.setJobGroup(s"$group-sentinel", "sentinel")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.currentTimeMillis() + 60000
+      while (!finished(s"$group-sentinel") && System.currentTimeMillis() < deadline)
+        Thread.sleep(10)
+      assert(finished(s"$group-sentinel"), "status store never saw the sentinel job")
+      (out, tracker.getJobIdsForGroup(group).length)
+    }
+    def withBlockedBus[A](body: => A): A = {
+      val release = new java.util.concurrent.CountDownLatch(1)
+      val blocker = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          release.await(5, java.util.concurrent.TimeUnit.MINUTES)
+      }
+      sc.addSparkListener(blocker) // the shared queue
+      try body
+      finally {
+        release.countDown()
+        sc.removeSparkListener(blocker)
+      }
+    }
+
+    val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (10L, 11L), (11L, 12L),
+      (20L, 20L)).toDF("id1", "id2").repartition(3)
+    def closure(maxEdges: Long = -1L) = withJobCount(
+      Dedup.connectedComponents(pairs, localClosureMaxEdges = maxEdges).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap)
+    val small = "aurora borealis shimmered over the frozen tundra last night"
+    val docs = Seq(1L -> small,
+      2L -> s"$small ${(1 to 80).map(i => s"filler$i token$i").mkString(" ")}",
+      3L -> "completely different text about catalyst optimizer internals and shuffle exchange"
+    ).toDF("doc_id", "text")
+    def contain() = withJobCount(Dedup.containmentPairs(docs, "doc_id", "text").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet)
+
+    // the job count tells the two closure routes apart
+    val (_, localJobs) = closure(Long.MaxValue)
+    val (_, loopJobs) = closure(0L)
+    assert(localJobs !== loopJobs)
+    val (cc, ccJobs) = closure()
+    val (pc, pcJobs) = contain()
+    assert(ccJobs === localJobs, "a 7-edge graph takes the local closure")
+    val (ccBlocked, ccBlockedJobs) = withBlockedBus(closure())
+    val (pcBlocked, pcBlockedJobs) = withBlockedBus(contain())
+    assert(ccBlocked === cc)
+    assert(ccBlockedJobs === ccJobs, "the blocked run took another closure route")
+    assert(pcBlocked === pc && pc.exists { case (a, b, _) => a == 1L && b == 2L })
+    assert(pcBlockedJobs === pcJobs, "the blocked run ran another containment job")
+  }
+
   test("embeddingNearDupPairs on an empty corpus returns an empty pair set") {
     val emb = Seq.empty[(Long, Array[Float])].toDF("id", "vec")
     assert(Dedup.embeddingNearDupPairs(emb, "id", "vec").count() === 0L)
@@ -426,12 +497,6 @@ class DedupSpec extends SparkSpecBase {
     val plan = result.queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin") && plan.contains("LeftSemi"),
       s"benchmark grams must broadcast into a semi-join:\n$plan")
-  }
-
-  test("charShingles produce distinct n-length grams") {
-    val out = Seq("abcd").toDF("t")
-      .select(Dedup.charShingles(col("t"), 2)).head().getSeq[String](0)
-    assert(out === Seq("ab", "bc", "cd"))
   }
 
   test("autoSignBits: bucket count grows with the corpus, bounded bucket size") {
@@ -634,22 +699,6 @@ class DedupSpec extends SparkSpecBase {
     val sub = observed(observed.keys.find(_.endsWith("_sub")).get)
     assert(sub("subsplit_rep_rows") === n)
     assert(sub("dropped_rep_rows") === 0L)
-  }
-
-  test("hammingBits is exact past 63 bits (conv would saturate) and agrees with the fold") {
-    // 80-bit strings: the long fast path cannot represent them (Spark conv
-    // saturates at unsigned-64 max), so the per-character fold must take
-    // over — silently wrong answers here were the r6 ADVICE low item
-    val a80 = "10" * 40
-    val b80 = "01" * 40                  // differs at every position
-    val c80 = "10" * 39 + "11"           // differs from a80 at one position
-    val a63 = "101" * 21
-    val b63 = "011" * 21
-    val rows = Seq((a80, b80, 80), (a80, c80, 1), (a80, a80, 0), (a63, b63, 42))
-      .toDF("a", "b", "expected")
-    val got = rows.select(Dedup.hammingBits(col("a"), col("b")).cast("int").as("d"),
-      col("expected")).collect()
-    got.foreach(r => assert(r.getInt(0) === r.getInt(1), s"row $r"))
   }
 
   test("embeddingLshBandPairs: any-band collision finds near-dups, gates the rest") {

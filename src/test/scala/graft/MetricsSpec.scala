@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 
 import graft.model.Destination
@@ -56,5 +58,25 @@ class MetricsSpec extends SparkSpecBase {
     val pipe = new Pipeline(spark, _ => (1 to 13).toDF("n"), Pipeline.parquetSink(tmp))
     pipe.run(Map("province" -> ((src, _) => Map(Destination.Postgres -> src))))
     assert(pipe.report === Map("province/postgres" -> 13L))
+  }
+
+  test("no operator reads listener observations or drains the listener bus") {
+    // operator routes and limits read their own jobs' return values; a
+    // listener read inside an operator would make a route depend on
+    // listener-bus timing again
+    val dir = java.nio.file.Paths.get("src/main/scala/graft/operators")
+    assert(java.nio.file.Files.isDirectory(dir), s"${dir.toAbsolutePath} not found")
+    val files = {
+      val walk = java.nio.file.Files.walk(dir)
+      try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally walk.close()
+    }
+    assert(files.nonEmpty)
+    val offending = for {
+      f <- files
+      (line, n) <- java.nio.file.Files.readAllLines(f).asScala.zipWithIndex
+      if line.contains("MetricsCollector") || line.contains("waitListenerBusEmpty")
+    } yield s"$f:${n + 1}: ${line.trim}"
+    assert(offending.isEmpty, offending.mkString("\n"))
   }
 }

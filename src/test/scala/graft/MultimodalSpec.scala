@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.Multimodal
 
-/** Multimodal plumbing: schema contract, row-preserving feature extraction,
-  * exploding frame sampling, and blob-pruning stats — with the stub codec.
+/** Multimodal plumbing: schema contract, row-preserving feature extraction
+  * with the stub codec, and the image/audio/video codecs and operators.
   */
 class MultimodalSpec extends SparkSpecBase {
 
@@ -29,16 +29,6 @@ class MultimodalSpec extends SparkSpecBase {
     assert(f1.length === 4)
     val again = Multimodal.extractFeatures(media(), dim = 4).orderBy("media_id").collect()
     assert(again(0).getSeq[Float](again(0).fieldIndex("feature")) === f1)
-  }
-
-  test("sampleFrames: explodes after decode, null blobs produce no frames") {
-    val out = Multimodal.sampleFrames(media(), everyMs = 500L).collect()
-    // 100B/64 -> 2 frames, 200B/64 -> 4 frames, null -> 0
-    assert(out.count(_.getLong(0) == 1L) === 2)
-    assert(out.count(_.getLong(0) == 2L) === 4)
-    assert(out.count(_.getLong(0) == 3L) === 0)
-    val frameMs = out.filter(_.getLong(0) == 2L).map(_.getLong(1)).sorted
-    assert(frameMs.toSeq === Seq(0L, 500L, 1000L, 1500L))
   }
 
   test("extracted features feed the embedding dedup tier unchanged") {
@@ -137,7 +127,7 @@ class MultimodalSpec extends SparkSpecBase {
     }
   }
 
-  test("operators chain: resize output feeds imageStats and sampleFrames (schemaless rows)") {
+  test("operators chain: resize output feeds imageStats (schemaless rows)") {
     // chained object-typed maps elide the serializer (EliminateSerialization)
     // and hand downstream lambdas schemaless rows — this pins the
     // positional-access contract end-to-end
@@ -147,18 +137,6 @@ class MultimodalSpec extends SparkSpecBase {
     val resized = Multimodal.resizeImages(df, 4, 2)
     val stats = Multimodal.imageStats(resized).collect()
     assert((stats(0).getInt(1), stats(0).getInt(2), stats(0).getLong(3)) === ((4, 2, 800L)))
-    val frames = Multimodal.sampleFrames(resized, everyMs = 10, codec = Multimodal.PgmCodec)
-      .collect()
-    assert(frames.length === 1 && frames(0).getLong(1) === 0L)
-  }
-
-  test("mediaStats never touches the blob column (pruned scan)") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-media").toString
-    media().write.mode("overwrite").parquet(tmp)
-    val stats = Multimodal.mediaStats(spark.read.parquet(tmp))
-    val plan = stats.queryExecution.executedPlan.toString
-    assert(!plan.contains("content"), "blob column must be pruned from the scan")
-    assert(stats.collect().length === 3)
   }
 
   test("WavCodec round-trips PCM16 through javax.sound.sampled, mono and stereo") {

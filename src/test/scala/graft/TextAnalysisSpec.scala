@@ -12,6 +12,32 @@ class TextAnalysisSpec extends SparkSpecBase {
     Seq(Option(text)).toDF("text").select(c).head().get(0).asInstanceOf[T]
   }
 
+  /** The interpreted column formulation the native [[TextAnalysis.languageId]]
+    * must equal — the SQL-portable statement of the semantics the DuckDB
+    * oracle runs: marker-word hits per language, strictly-greater argmax in
+    * fixed order, `und` when nothing matches.
+    */
+  private def languageIdColumns(text: org.apache.spark.sql.Column) = {
+    val words = split(lower(trim(text)), "\\s+")
+    val scores = TextAnalysis.LangMarkers.map { case (lang, markers) =>
+      lang -> size(org.apache.spark.sql.functions.filter(
+        words, w => w.isin(markers.map(x => x: Any): _*)))
+    }
+    val best = scores.tail.foldLeft((lit(scores.head._1), scores.head._2)) {
+      case ((bestLang, bestScore), (lang, score)) =>
+        (when(score > bestScore, lit(lang)).otherwise(bestLang),
+          greatest(score, bestScore))
+    }
+    when(best._2 > 0, best._1).otherwise(lit("und"))
+  }
+
+  /** The column formulation of `textStats`' subword_sum: per whitespace
+    * word, one piece plus one per further 6 characters.
+    */
+  private def subwordSum(text: org.apache.spark.sql.Column) =
+    aggregate(split(trim(text), "\\s+"), lit(0),
+      (acc, w) => acc + greatest(ceil(length(w).cast("double") / 6.0).cast("int"), lit(1)))
+
   test("tokenCount handles null/empty/whitespace") {
     assert(one[Int]("one two three", TextAnalysis.tokenCount(col("text"))) === 3)
     assert(one[Int]("", TextAnalysis.tokenCount(col("text"))) === 0)
@@ -60,7 +86,7 @@ class TextAnalysisSpec extends SparkSpecBase {
     val df = texts.toDF("text")
     val both = df.select(
       TextAnalysis.languageId(col("text")).as("native"),
-      TextAnalysis.languageIdColumns(col("text")).as("interp")).collect()
+      languageIdColumns(col("text")).as("interp")).collect()
     both.zip(texts).foreach { case (r, t) =>
       assert(r.getString(0) === r.getString(1), s"divergence on '$t'")
     }
@@ -87,7 +113,7 @@ class TextAnalysisSpec extends SparkSpecBase {
       TextAnalysis.textStats(col("text")).as("st"),
       TextAnalysis.tokenCount(col("text")).as("c_tokens"),
       size(split(lower(trim(col("text"))), "\\s+")).as("c_split"),
-      TextAnalysis.subwordCountEstimate(col("text")).as("c_subwords"),
+      subwordSum(col("text")).as("c_subwords"),
       length(regexp_replace(col("text"), "[^A-Za-z]", "")).as("c_alpha"),
       length(regexp_replace(col("text"), "[^.,;:!?]", "")).as("c_punct"),
       length(regexp_replace(col("text"), "\\s+", "")).as("c_nonspace"),
@@ -172,14 +198,6 @@ class TextAnalysisSpec extends SparkSpecBase {
     val byMd5 = rows.groupBy(_.get(0)).view.mapValues(_.map(_.get(1)).toSet)
     byMd5.foreach { case (_, fp64s) => assert(fp64s.size === 1) }
     assert(rows.map(_.get(1)).toSet.size === byMd5.size)
-  }
-
-  test("subword estimate >= word count, rolling hash order-sensitive") {
-    val sub = one[Int]("internationalization is long", TextAnalysis.subwordCountEstimate(col("text")))
-    assert(sub >= 3)
-    val h1 = one[Long]("a b c", TextAnalysis.rollingHash(col("text")))
-    val h2 = one[Long]("c b a", TextAnalysis.rollingHash(col("text")))
-    assert(h1 !== h2)
   }
 
   test("repetition signals: boilerplate scores high, varied text low") {
