@@ -16,9 +16,9 @@ object Engine {
   /** The session flavors, each a superset of the previous one's confs:
     * `Gen` (fixture generators) ⊂ `Verify` (the oracle correctness
     * dump: no AQE entries) ⊂ `Bench` (+ AQE sizing) ⊂ `Full` (+ the
-    * chmod-free local filesystem, driver-side partition discovery, the
-    * Catalyst extensions and the SQL function registry — what [[session]]
-    * builds).
+    * chmod-free local filesystem and its file-scan packing, driver-side
+    * partition discovery, the Catalyst extensions and the SQL function
+    * registry — what [[session]] builds).
     */
   sealed abstract class Kind
   object Kind {
@@ -91,6 +91,20 @@ object Engine {
         // file:// without a chmod child process per created file and
         // directory when libhadoop is absent (same bits, same checksums)
         "spark.hadoop.fs.file.impl" -> classOf[graft.sink.NioLocalFileSystem].getName,
+        // Scan packing for that file system: Spark weighs each file as its
+        // size plus this open cost when it packs files into scan tasks. The
+        // 4 MB default packed ~3 small files per task, so a migrate_chat
+        // read-back (225 files, 6.6 KB median) ran 76 tasks. The cost should
+        // be the bytes a core scans while one file opens. Measured on one
+        // core, a written message table of 100 files (10.7 MB) against the
+        // same rows in one file (4 vCPU): 4.2 ms of open + footer + reader
+        // init per file at 33 MB/s of digest scan (138 KB), 2.9 ms at
+        // 59 MB/s of plain row scan (169 KB); 128 KB is the power of two
+        // below both. It is also the smallest split Spark cuts a file into,
+        // so a file of one row group above it runs tasks that read only
+        // its footer; a much smaller value splits small JSON sources into
+        // tasks that cost more than they save.
+        "spark.sql.files.openCostInBytes" -> "128k",
         // Key-directory discovery on the driver: above 32 paths Spark lists
         // a partitioned table with a job of one task per directory, which on
         // a local file system costs far more than the one syscall per

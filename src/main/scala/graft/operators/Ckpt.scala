@@ -1,6 +1,9 @@
 package graft.operators
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.storage.StorageLevel
 
 /** Serialized local checkpoints for operator-path intermediates.
@@ -47,19 +50,31 @@ private[graft] object Ckpt {
       * one job and drops its count); `Dataset.count()` would add an
       * aggregate stage, which AQE runs as a second job. The count is an
       * action's return value, so a route that reads it does not depend on
-      * listener-bus timing.
+      * listener-bus timing. The job runs [[inExecution]] of the checkpoint.
       */
     def countedSerCkpt(flag: Option[String] = None): (DataFrame, Long) = {
       val c = lazySerCkpt
-      val rows = c.queryExecution.toRdd
-      val n = flag match {
-        case None => rows.count()
-        case Some(f) =>
-          val i = c.schema.fieldIndex(f)
-          rows.filter(_.getBoolean(i)).count()
+      val n = inExecution(c, "count") { rows =>
+        flag match {
+          case None => rows.count()
+          case Some(f) =>
+            val i = c.schema.fieldIndex(f)
+            rows.filter(_.getBoolean(i)).count()
+        }
       }
       (c, n)
     }
+  }
+
+  /** Runs an RDD-level `action` over the rows of `df`'s physical plan inside
+    * one SQL execution of `df`, as a `Dataset` action runs, so the jobs it
+    * starts belong to that query (a listener sees `spark.sql.execution.id`)
+    * instead of standing alone. `name` is the action name query-execution
+    * listeners receive.
+    */
+  private[graft] def inExecution[T](df: DataFrame, name: String)(action: RDD[InternalRow] => T): T = {
+    val qe = df.queryExecution
+    SQLExecution.withNewExecutionId(qe, Some(name))(action(qe.toRdd))
   }
 
   /** The RDD a `localCheckpoint` persisted — so an iterative operator can

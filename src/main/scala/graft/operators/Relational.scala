@@ -107,11 +107,12 @@ object Relational {
     * parent (`scripts/validate_migration.py:594-641`). The parent key is
     * re-aliased so child and parent may share lineage (self-referential FKs
     * like docs.onFolder → docs.id would otherwise trip the ambiguous-
-    * self-join check).
+    * self-join check). The anti-join only tests that a parent key exists,
+    * so duplicate parent keys need no `distinct()` first.
     */
   def orphans(child: DataFrame, parent: DataFrame, childFk: String, parentPk: String)
       : DataFrame = {
-    val parentKeys = parent.select(col(parentPk).as("__orphan_pk")).distinct()
+    val parentKeys = parent.select(col(parentPk).as("__orphan_pk"))
     child.join(parentKeys, child(childFk) === col("__orphan_pk"), "left_anti")
   }
 

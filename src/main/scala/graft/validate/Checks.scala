@@ -1,10 +1,18 @@
 package graft.validate
 
+import scala.collection.mutable
+
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.{And, BoundReference, EqualNullSafe,
+  Expression, GreaterThan, JoinedRow, LessThan, Or, Predicate, SubqueryExpression,
+  UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, Project, SubqueryAlias}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.GraftFunctions
-import graft.operators.Relational
+import graft.operators.{Ckpt, Relational}
 
 /** The reference's 14-check validation suite
   * (`scripts/validate_migration.py`, SURVEY.md §3.3) as reusable DataFrame
@@ -24,12 +32,17 @@ object Checks {
   }
 
   /** Check 3 — distinct-set containment (`:174-232`): every child key set is
-    * contained in the parent's.
+    * contained in the parent's. Counts the distinct child keys that no
+    * parent key matches, null matching null as in `EXCEPT`: one null-safe
+    * (`<=>`) left-anti join, then a distinct count of what it keeps. No
+    * distinct runs before the join, which only tests existence.
     */
   def setContainment(name: String, child: DataFrame, parent: DataFrame, key: String)
       : CheckResult = {
-    val missing = child.select(key).distinct()
-      .except(parent.select(key).distinct()).count()
+    val missing = child.select(key)
+      .join(parent.select(col(key).as("__parent_key")), col(key) <=> col("__parent_key"),
+        "left_anti")
+      .distinct().count()
     CheckResult(name, missing == 0, s"$missing orphaned distinct keys")
   }
 
@@ -51,8 +64,9 @@ object Checks {
     * the legacy bucket prefix.
     */
   def urlRewriteSweep(name: String, df: DataFrame, urlCols: Seq[String]): CheckResult = {
-    val bad = urlCols.map(c =>
-      df.filter(col(c).startsWith("gs://sibci")).count()).sum
+    // one aggregate over every column; a column's count is its filter's count
+    val bad = urlCols.map(c => count(when(col(c).startsWith("gs://sibci"), 1)))
+      .reduceOption(_ + _).fold(0L)(n => df.agg(n).head().getLong(0))
     CheckResult(name, bad == 0, s"$bad un-rewritten legacy urls")
   }
 
@@ -84,12 +98,12 @@ object Checks {
   }
 
   /** Check 12 — business-rule sample: phone `+` prefix rate in the
-    * wide-column users (`:769-782`).
+    * wide-column users (`:769-782`). One aggregate counts the rows and the
+    * rows where `predicate` is true.
     */
   def ratioAtLeast(name: String, df: DataFrame, predicate: Column, minRatio: Double)
       : CheckResult = {
-    val total = df.count()
-    val hits = df.filter(predicate).count()
+    val (total, hits) = countAndHits(df, predicate)
     val ratio = if (total == 0) 1.0 else hits.toDouble / total
     CheckResult(name, ratio >= minRatio, f"$hits/$total = ${ratio * 100}%.1f%%")
   }
@@ -137,17 +151,24 @@ object Checks {
 
   /** Check 13 — transformation spot check on a bounded sample
     * (`validate_migration.py:874-986`): every sampled row satisfies the
-    * transformed-shape predicate.
+    * transformed-shape predicate. One aggregate over the sample counts both
+    * numbers, so they describe the same sampled rows.
     */
   def sampleSpotCheck(
       name: String,
       df: DataFrame,
       predicate: Column,
       sampleSize: Int = 100): CheckResult = {
-    val sample = df.limit(sampleSize)
-    val total = sample.count()
-    val ok = sample.filter(predicate).count()
+    val (total, ok) = countAndHits(df.limit(sampleSize), predicate)
     CheckResult(name, ok == total, s"$ok/$total sampled rows conform")
+  }
+
+  /** (rows, rows where `predicate` is true) of `df` in one aggregate; a null
+    * predicate counts as false, as in `filter`.
+    */
+  private def countAndHits(df: DataFrame, predicate: Column): (Long, Long) = {
+    val r = df.agg(count(lit(1)), count(when(predicate, 1))).head()
+    (r.getLong(0), r.getLong(1))
   }
 
   /** Layout check — within-partition clustering order
@@ -155,56 +176,112 @@ object Checks {
     * reading a [[graft.sink.CqlLayouts]]-written table back file-by-file,
     * every file's rows must already be in the declared clustering order —
     * the property Cassandra's storage engine guarantees per partition.
+    * `clustering` is (column, ascending), lexicographic. A violation is a
+    * row that sorts strictly before the row present just before it in the
+    * same file: the earlier columns compare equal null-safe (`<=>`) and
+    * the compared column is out of order; a null there is no violation.
+    * A filtered `df` compares the rows that are present.
     *
-    * Mechanics: the file-source `_metadata` column provides the exact
-    * (file_path, row_index) position of every row — stable even when a
-    * large file is split across several scan partitions, where a
-    * `monotonically_increasing_id` ordering would interleave splits (scan
-    * partitions are packed by size, not file offset). `df` must therefore
-    * be a direct file scan (e.g. `spark.read.parquet(dir)`). A
-    * lag-comparison partitioned by file counts order violations;
-    * `clustering` is (column, ascending), lexicographic.
+    * Mechanics: one job, no shuffle. The file-source `_metadata` column
+    * gives each row its file, the start of the scan split that read it and
+    * its `row_index` in the file. A scan split delivers one file's rows in
+    * `row_index` order, so each task compares every row with its
+    * predecessor and sends the driver only, per split, its first and last
+    * keys and its violation count. The driver sorts each file's splits by
+    * their first `row_index` and compares the last row of one with the
+    * first of the next — a large file split across scan partitions, or
+    * several small files packed into one, read as whole files. `df` must
+    * therefore be a direct file scan (e.g. `spark.read.parquet(dir)`,
+    * optionally filtered); anything else fails a `require`.
     */
   def clusteringOrder(
       name: String,
       df: DataFrame,
       clustering: Seq[(String, Boolean)]): CheckResult = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col("__file")).orderBy(col("__pos"))
-    val keys = clustering.map(_._1)
-    val withPrev = df
-      .select(col("_metadata.file_path").as("__file"),
-        col("_metadata.row_index").as("__pos"),
-        struct(keys.map(col): _*).as("__k"))
-      .withColumn("__prev", lag(col("__k"), 1).over(w))
-      .filter(col("__prev").isNotNull)
-    // lexicographic "prev comes no later than current" under the per-column
-    // directions: prev must not sort strictly after cur
-    val violated = clustering.indices.map { i =>
-      val earlier = clustering.take(i).map { case (c, _) =>
-        col(s"__prev.$c") <=> col(s"__k.$c") }
-        .reduceOption(_ && _).getOrElse(lit(true))
-      val (c, ascending) = clustering(i)
-      val outOfOrder =
-        if (ascending) col(s"__prev.$c") > col(s"__k.$c")
-        else col(s"__prev.$c") < col(s"__k.$c")
-      earlier && outOfOrder
-    }.reduce(_ || _)
-    val bad = withPrev.filter(violated).count()
+    requireFileScan(name, df)
+    val scan = df.select(Seq(col("_metadata.file_path"), col("_metadata.file_block_start"),
+      col("_metadata.row_index")) ++ clustering.map { case (c, _) => col(c) }: _*)
+    val width = clustering.size
+    val types = scan.schema.fields.drop(3).map(_.dataType)
+    // over JoinedRow(prev keys, current keys): prev must not sort strictly
+    // after current under the per-column directions
+    def prev(i: Int) = BoundReference(i, types(i), nullable = true)
+    def cur(i: Int) = BoundReference(width + i, types(i), nullable = true)
+    val violated: Expression = clustering.indices.map { i =>
+      val outOfOrder: Expression =
+        if (clustering(i)._2) GreaterThan(prev(i), cur(i)) else LessThan(prev(i), cur(i))
+      (0 until i).map(j => EqualNullSafe(prev(j), cur(j)): Expression)
+        .foldRight(outOfOrder)(And(_, _))
+    }.reduce(Or(_, _))
+    val keyRefs = types.indices.map(i => BoundReference(3 + i, types(i), nullable = true))
+    val splits = Ckpt.inExecution(scan, "collect")(_.mapPartitions { rows =>
+      val keysOf = UnsafeProjection.create(keyRefs)
+      val violates = Predicate.create(violated)
+      val pair = new JoinedRow
+      val out = mutable.ArrayBuffer.empty[Split]
+      var file: UTF8String = null
+      var block, start, bad = 0L
+      var first, last: UnsafeRow = null
+      def flush(): Unit = if (last != null) out += Split(file.toString, start, first, last, bad)
+      rows.foreach { r =>
+        val k = keysOf(r).copy()
+        if (last == null || r.getLong(1) != block || r.getUTF8String(0) != file) {
+          flush()
+          file = r.getUTF8String(0).clone(); block = r.getLong(1); start = r.getLong(2)
+          first = k; bad = 0L
+        } else if (violates.eval(pair(last, k))) bad += 1
+        last = k
+      }
+      flush()
+      out.iterator
+    }.collect())
+    val violates = Predicate.create(violated)
+    val seams = splits.groupBy(_.file).values.map { s =>
+      s.sortBy(_.start).sliding(2).count {
+        case Array(a, b) => violates.eval(new JoinedRow(a.last, b.first))
+        case _ => false
+      }
+    }.sum
+    val bad = splits.map(_.violations).sum + seams
     CheckResult(name, bad == 0, s"$bad clustering-order violations")
+  }
+
+  /** One scan split's rows of one file, as [[clusteringOrder]]'s tasks
+    * report them: the `row_index` of its first row, its first and last
+    * keys, and the order violations between its own rows.
+    */
+  private final case class Split(
+      file: String, start: Long, first: UnsafeRow, last: UnsafeRow, violations: Long)
+
+  /** Fails unless `df` reads one file source through filters and
+    * projections only — the frames whose `_metadata` positions and scan
+    * order [[clusteringOrder]] and [[keySortedFiles]] rely on.
+    */
+  private def requireFileScan(name: String, df: DataFrame): Unit = {
+    val plan = df.queryExecution.analyzed
+    val others = plan.collect {
+      case _: Filter | _: Project | _: SubqueryAlias => Nil
+      case l: LogicalRelation if l.relation.isInstanceOf[HadoopFsRelation] => Nil
+      case p => Seq(p.nodeName)
+    }.flatten ++
+      plan.find(_.expressions.exists(SubqueryExpression.hasSubquery)).map(_ => "a subquery")
+    require(others.isEmpty, s"$name: the layout checks read `_metadata` file positions in " +
+      "scan order, so the frame must be a direct file scan (spark.read.parquet(dir), " +
+      s"optionally filtered), but its plan has ${others.distinct.mkString(", ")}")
   }
 
   /** Layout check — a key-sorted table (a [[graft.sink.CqlLayouts]] entry
     * without clustering columns, one row per key): every key is in exactly
     * one file, and every file's rows ascend by key, so a key lookup reads
-    * one file and prunes on its row-group min/max. `df` must be a direct
-    * file scan, as for [[clusteringOrder]].
+    * one file and prunes on its row-group min/max. The key→file count is a
+    * `groupBy`; the order half is [[clusteringOrder]]'s pass. `df` must be
+    * a direct file scan, as for [[clusteringOrder]].
     */
   def keySortedFiles(name: String, df: DataFrame, keys: Seq[String]): CheckResult = {
+    val order = clusteringOrder(name, df, keys.map(_ -> true))
     val split = df.groupBy(keys.map(col): _*)
       .agg(countDistinct(col("_metadata.file_path")).as("files"))
       .filter(col("files") > 1).count()
-    val order = clusteringOrder(name, df, keys.map(_ -> true))
     CheckResult(name, split == 0 && order.passed, s"$split keys in several files, ${order.detail}")
   }
 

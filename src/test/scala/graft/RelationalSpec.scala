@@ -49,6 +49,52 @@ class RelationalSpec extends SparkSpecBase {
     assert(out.map(_.getInt(0)).toSeq === Seq(3))
   }
 
+  test("orphans ≡ the anti-join against distinct parent keys; FK checks with duplicate parent keys") {
+    import graft.validate.Checks
+    val child = Seq((1, Some("p1")), (2, Some("p2")), (3, Some("p9")), (4, None), (5, Some("p9")))
+      .toDF("id", "fk")
+    val parent = Seq(("p1", 1), ("p1", 2), ("p2", 3), ("p2", 3), (null, 4)).toDF("pk", "x")
+    // the formulation before the parent's distinct() was dropped
+    val oracle = child.join(parent.select(col("pk").as("__pk")).distinct(),
+      col("fk") === col("__pk"), "left_anti")
+    val out = Relational.orphans(child, parent, "fk", "pk")
+    assert(out.columns.toSeq === oracle.columns.toSeq)
+    assert(out.orderBy("id").collect().toSeq === oracle.orderBy("id").collect().toSeq)
+    assert(out.orderBy("id").collect().map(_.getInt(0)).toSeq === Seq(3, 4, 5))
+    val fk = Checks.fkIntegrity("fk", child, parent, "fk", "pk")
+    assert(fk.detail === "2 orphaned FK rows" && !fk.passed)
+    // self-referential: a child frame and its parent of the same lineage
+    val docs = Seq((1, 0), (2, 1), (3, 1), (4, 9)).toDF("id", "onFolder")
+    val self = Checks.fkIntegrity("self", docs.filter(col("onFolder") =!= 0),
+      docs.union(docs), "onFolder", "id")
+    assert(self.detail === "1 orphaned FK rows")
+  }
+
+  test("setContainment ≡ distinct EXCEPT: nulls and duplicates on either side") {
+    import graft.validate.Checks
+    def keys(ks: Option[String]*) = ks.toDF("k")
+    val a = Some("a"); val b = Some("b"); val c = Some("c")
+    val cases = Seq(
+      (keys(a, a, b, None, None, c, c), keys(a, a, b)), // null and c orphaned, each once
+      (keys(a, None, None), keys(None, a, None)), // null matches null
+      (keys(None), keys(a)),
+      (keys(a, b), keys(b, b, a, None)),
+      (keys(), keys(a)),
+      (keys(a, a), keys()))
+    val counts = cases.map { case (child, parent) =>
+      // the formulation before the null-safe anti-join
+      val except = child.select("k").distinct().except(parent.select("k").distinct()).count()
+      val r = Checks.setContainment("contain", child, parent, "k")
+      assert(r.detail === s"$except orphaned distinct keys")
+      assert(r.passed === (except == 0))
+      except
+    }
+    assert(counts === Seq(2L, 0L, 1L, 0L, 0L, 1L))
+    // the same frame on both sides, as a lookup checked against its source
+    val same = keys(a, None, b)
+    assert(Checks.setContainment("same", same, same, "k").detail === "0 orphaned distinct keys")
+  }
+
   test("overwriteByJoin: updated columns replace, unmatched keep originals") {
     val target = Seq((1, "old1", 10.0), (2, "old2", 20.0)).toDF("id", "seg", "bal")
     val updates = Seq((1, "new1")).toDF("id", "seg")

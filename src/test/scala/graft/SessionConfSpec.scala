@@ -33,6 +33,7 @@ class SessionConfSpec extends SparkSpecBase {
       "spark.sql.session.timeZone" -> "UTC",
       "spark.sql.legacy.parquet.nanosAsLong" -> "true",
       "spark.hadoop.fs.file.impl" -> "graft.sink.NioLocalFileSystem",
+      "spark.sql.files.openCostInBytes" -> "128k",
       "spark.sql.sources.parallelPartitionDiscovery.threshold" -> "2147483647",
       "spark.ui.enabled" -> "false"))
   }
